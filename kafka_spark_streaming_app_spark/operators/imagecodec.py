@@ -405,12 +405,14 @@ class _JpegBitWriter:
         return bytes(self._out)
 
 
-def _clean_scan(data: bytes, pos: int):
+def _clean_scan(data: bytes, pos: int, restart_interval: int):
     """Un-stuff the entropy-coded segment starting at ``pos`` in ONE
     C-speed ``bytes.find`` pass (instead of per-byte Python in a bit
     feeder — the decoder's hottest path): 0xFF00 stuffing collapses to
     0xFF, RSTn markers are stripped with their cleaned-stream offsets
-    recorded, and any other marker terminates the scan.
+    recorded, and any other marker terminates the scan. An RSTn in a
+    frame whose DRI ``restart_interval`` is 0 raises ``ValueError``:
+    the scan loops would otherwise decode straight across it.
 
     Returns ``(buf, rsts, end)``: ``buf`` the cleaned entropy bytes,
     ``rsts`` a list of ``(clean_offset, marker_byte)`` in stream
@@ -433,6 +435,11 @@ def _clean_scan(data: bytes, pos: int):
             out += data[pos : f + 1]
             pos = f + 2
         elif 0xD0 <= nxt <= 0xD7:  # restart marker: strip + record
+            if not restart_interval:
+                raise ValueError(
+                    f"restart marker 0xFF{nxt:02X} at offset {f} in a scan "
+                    "with no DRI restart interval"
+                )
             out += data[pos:f]
             rsts.append((len(out), nxt))
             pos = f + 2
@@ -460,15 +467,6 @@ def _sync_restart_clean(p: int, rsts, rst_i: int, expect: int) -> int:
             f"{p >> 3}, got {got}"
         )
     return p
-
-
-def _extend(bits: int, size: int) -> int:
-    """10918-1 EXTEND: map `size` amplitude bits to a signed value."""
-    if size == 0:
-        return 0
-    if bits < (1 << (size - 1)):
-        return bits - (1 << size) + 1
-    return bits
 
 
 def _csize(v: int) -> int:
@@ -569,8 +567,19 @@ def encode_jpeg_baseline(
     return bytes(out)
 
 
+# Both LUT caches are keyed by DHT bytes taken from the input, and each
+# entry is a 65,536-slot list, so each is cleared once it holds
+# _HUFF_CACHE_MAX tables: a corpus with per-file optimized tables
+# then rebuilds LUTs instead of growing the worker without bound.
+_HUFF_CACHE_MAX = 64
 _HUFF_LUT_CACHE: dict = {}
 _HUFF_SEG_CACHE: dict = {}
+
+
+def _cache_put(cache: dict, key, value) -> None:
+    if len(cache) >= _HUFF_CACHE_MAX:
+        cache.clear()
+    cache[key] = value
 
 
 def _huffman_decode_table_seg(seg: bytes) -> list:
@@ -581,7 +590,7 @@ def _huffman_decode_table_seg(seg: bytes) -> list:
     lut = _HUFF_SEG_CACHE.get(seg)
     if lut is None:
         lut = _huffman_decode_table(list(seg[:16]), list(seg[16:]))
-        _HUFF_SEG_CACHE[seg] = lut
+        _cache_put(_HUFF_SEG_CACHE, seg, lut)
     return lut
 
 
@@ -608,7 +617,7 @@ def _huffman_decode_table(bits, vals) -> list:
             code += 1
             k += 1
         code <<= 1
-    _HUFF_LUT_CACHE[key] = lut
+    _cache_put(_HUFF_LUT_CACHE, key, lut)
     return lut
 
 
@@ -800,7 +809,7 @@ def decode_jpeg_baseline(data: bytes, want_pixels: bool = True) -> dict:
     vmax = max(c["v"] for c in comps)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    buf, rsts, _scan_end = _clean_scan(data, scan_start)
+    buf, rsts, _scan_end = _clean_scan(data, scan_start, restart_interval)
     cap = len(buf)
     buf += b"\xff\xff\xff\xff"  # 1-bit padding past any marker/EOF
     frombytes = int.from_bytes
@@ -1484,7 +1493,9 @@ def decode_jpeg_progressive(
                 # image is already complete and exact — stop consuming
                 # entropy data here; AC bytes are never parsed.
                 break
-            buf, rsts, scan_end = _clean_scan(data, pos + 2 + seglen)
+            buf, rsts, scan_end = _clean_scan(
+                data, pos + 2 + seglen, restart_interval
+            )
             cap = len(buf)
             buf += b"\xff\xff\xff\xff"  # 1-bit padding past markers/EOF
             frombytes = int.from_bytes

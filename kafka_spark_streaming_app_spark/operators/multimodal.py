@@ -1,21 +1,38 @@
 """Multimodal columns: images/audio/video as opaque binary + typed
-metadata, processed with Arrow-batched ``mapInPandas``.
+metadata, processed by per-row Python functions in Arrow-batched
+``mapInPandas`` stages.
 
 The pattern for a 100 TB multimodal corpus:
 
 - the payload is an opaque ``binary`` column; Spark never interprets
-  it — only Pandas-UDF stages do, in Arrow batches (one Python round
-  trip per ~10k rows, not per row);
+  it — only Python stages do, in Arrow batches (one Python round trip
+  per ~10k rows, not per row);
 - metadata travels in a typed struct column so planning-relevant
   predicates (media_type, width, duration) stay JVM-side and prune
   before any Python/decode cost;
-- decode / resize / frame-sample are per-partition ``mapInPandas``
-  stages: streaming batch iterators, so a partition never has to fit
-  decoded media in memory at once;
 - partitioning: payload rows are large — repartition by byte budget
   (``spark.sql.files.maxPartitionBytes``), never by row count.
 
-Codec coverage: every modality now has REAL pure-stdlib codecs for
+Every render, parse and decode stage here is a pure per-row function
+plus one :func:`map_rows` call: the function takes one input row's
+columns and yields zero or more output rows, and ``map_rows`` owns the
+batch loop, so one-to-one and row-expanding stages share one path and
+each stage is exactly one ``MapInPandas`` node. Decode stages stream
+batch iterators, so a partition never has to hold decoded media in
+memory at once.
+
+Fixture renders (``synthesize_*``) run over doc_id proxy rows spread
+first with ``skew.spread_if_narrow``: a small single-file table
+arrives as ONE input split, and the chained render->decode stages
+fuse into that one task, so without the exchange the whole per-row
+codec CPU runs serially. The exchange moves ~8 bytes/row (the id
+only — the payload is created after it), hash partitioning on doc_id
+is deterministic, and the explicit partition count is exempt from AQE
+coalescing, which sizes partitions by bytes and cannot see per-row
+encode/decode cost. A scan already as wide as the cluster is left
+alone.
+
+Codec coverage: every modality has REAL pure-stdlib codecs for
 multiple containers:
 
 - image: PNG, the full JPEG family (baseline/progressive, gray/
@@ -51,13 +68,73 @@ real and tested.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .skew import spread_if_narrow
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable], schema: T.StructType
+) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df``, columns in ``df``'s
+    order, in one Arrow-batched ``mapInPandas`` stage. ``fn`` yields
+    zero or more output rows, each a dict keyed by ``schema``'s field
+    names or a tuple in its field order; each Arrow batch becomes one
+    pandas DataFrame with exactly ``schema``'s columns."""
+    columns = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in zip(*(col for _, col in pdf.items()))
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _doc_ids(documents: DataFrame) -> DataFrame:
+    """doc_id proxy rows for a fixture render, spread first (see the
+    module docstring)."""
+    return spread_if_narrow(documents.select("doc_id"), "doc_id")
+
+
+def _codec_media(
+    documents: DataFrame, codec: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """Fixture render stage: doc ``d`` becomes the media row
+    (d, codec, encode(d))."""
+
+    def render(doc_id):
+        d = int(doc_id)
+        yield d, codec, encode(d)
+
+    return map_rows(_doc_ids(documents), render, IMAGE_MEDIA_SCHEMA)
+
+
+def _int_stats(a) -> tuple[int, int, int, int]:
+    """(count, int64 sum, min, max) of an integer array."""
+    return int(a.size), int(a.sum(dtype=np.int64)), int(a.min()), int(a.max())
+
+
+def _band_row(media_id, bits, width: int = 16) -> tuple:
+    """(media_id, b0, b1, b2, b3): set bit k of ``bits`` lands in band
+    k // width at bit k % width."""
+    bands = [0, 0, 0, 0]
+    for k in np.flatnonzero(bits):
+        bands[k // width] |= 1 << (int(k) % width)
+    return (media_id, *bands)
+
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -96,25 +173,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_payload", T.BinaryType(), True),
     ]
 )
-
-
-def _spread_doc_ids(documents: DataFrame) -> DataFrame:
-    """doc_id proxy rows about to feed a compute-dense Python render
-    stage: spread them across the cluster FIRST. A small single-file
-    table arrives as ONE input split, and a chained
-    render->decode mapInPandas pipeline fuses into that one task, so
-    without this exchange the whole per-row codec CPU runs serially.
-    The exchange moves ~8 bytes/row (the id only — the payload is
-    created AFTER it), hash partitioning on the high-cardinality
-    doc_id is deterministic, and the explicit partition count is
-    exempt from AQE coalescing, which sizes partitions by BYTES and
-    cannot see per-row encode/decode cost. Sized to the cluster's
-    defaultParallelism, never a constant — the same idiom
-    synthesize_flac_media and synthesize_gif_animation_media
-    established."""
-    return documents.select("doc_id").repartition(
-        documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    )
 
 
 def synthesize_media(documents: DataFrame) -> DataFrame:
@@ -161,8 +219,6 @@ def decode_payload(payload: bytes, media_type: str, fake: bool = False):
     payload bytes (md5-seeded), preserving shape contracts:
     image → (H, W) uint8; audio → (N,) int16; video → (F, H, W) uint8.
     """
-    import numpy as np
-
     if not fake:
         from .avcodec import _RIFF_MAGIC, _Y4M_MAGIC, decode_wav, decode_y4m
         from .imagecodec import (
@@ -231,39 +287,17 @@ def synthesize_image_media(documents: DataFrame) -> DataFrame:
     stage — the shape a real "render/transcode" fixture stage takes."""
     from .imagecodec import encode_png, make_jpeg_header_bytes
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        if d % 2 == 0:
+            yy, xx = np.mgrid[0 : d % 16 + 8, 0 : d % 24 + 8]
+            pixels = ((d + 31 * yy + xx) % 256).astype(np.uint8)
+            yield d, "png", encode_png(pixels)
+        else:
+            header = make_jpeg_header_bytes(d % 640 + 16, d % 480 + 16, d % 3 + 1)
+            yield d, "jpeg", header
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    w, h = d % 24 + 8, d % 16 + 8
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    pixels = ((d + 31 * yy + xx) % 256).astype(np.uint8)
-                    rows.append(
-                        {
-                            "media_id": d,
-                            "codec": "png",
-                            "payload": encode_png(pixels),
-                        }
-                    )
-                else:
-                    rows.append(
-                        {
-                            "media_id": d,
-                            "codec": "jpeg",
-                            "payload": make_jpeg_header_bytes(
-                                d % 640 + 16, d % 480 + 16, d % 3 + 1
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, IMAGE_MEDIA_SCHEMA)
 
 
 def image_header_metadata(media: DataFrame) -> DataFrame:
@@ -273,23 +307,11 @@ def image_header_metadata(media: DataFrame) -> DataFrame:
     decompression)."""
     from .imagecodec import parse_image_header
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                hdr = parse_image_header(bytes(payload))
-                hdr["media_id"] = media_id
-                rows.append(hdr)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "format", "width", "height",
-                    "bit_depth", "channels",
-                ],
-            )
+    def parse(media_id, payload):
+        yield {**parse_image_header(bytes(payload)), "media_id": media_id}
 
-    return media.select("media_id", "payload").mapInPandas(
-        parse, schema=IMAGE_HEADER_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), parse, IMAGE_HEADER_SCHEMA
     )
 
 
@@ -315,27 +337,16 @@ def synthesize_jpeg_quant_media(documents: DataFrame) -> DataFrame:
     H = doc_id % 480 + 16, channels = doc_id % 3 + 1."""
     from .imagecodec import make_jpeg_header_bytes
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {
-                    "media_id": int(d),
-                    "codec": "jpeg",
-                    "payload": make_jpeg_header_bytes(
-                        int(d) % 640 + 16,
-                        int(d) % 480 + 16,
-                        int(d) % 3 + 1,
-                        quant_tables=int(d) % 3 + 1,
-                        quant_seed=int(d),
-                    ),
-                }
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        return make_jpeg_header_bytes(
+            d % 640 + 16,
+            d % 480 + 16,
+            d % 3 + 1,
+            quant_tables=d % 3 + 1,
+            quant_seed=d,
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 def jpeg_quant_metadata(media: DataFrame) -> DataFrame:
@@ -345,23 +356,11 @@ def jpeg_quant_metadata(media: DataFrame) -> DataFrame:
     O(header) per row, no entropy decode."""
     from .imagecodec import parse_jpeg_quant
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = parse_jpeg_quant(bytes(payload))
-                meta["media_id"] = int(media_id)
-                rows.append(meta)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "n_tables", "quant_sum", "quant_min", "quant_max",
-                ],
-            )
+    def parse(media_id, payload):
+        yield {**parse_jpeg_quant(bytes(payload)), "media_id": media_id}
 
-    return media.select("media_id", "payload").mapInPandas(
-        parse, schema=JPEG_QUANT_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), parse, JPEG_QUANT_SCHEMA
     )
 
 
@@ -385,32 +384,12 @@ def decode_image_stats(media: DataFrame) -> DataFrame:
     closed-form SQL oracle over the fixture's pixel formula catches any
     encoder OR decoder defect bit-exactly."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_payload(bytes(payload), "image", fake=False)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "n_pixels": int(img.size),
-                        "pixel_sum": int(img.sum(dtype="int64")),
-                        "pixel_min": int(img.min()),
-                        "pixel_max": int(img.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "pixel_sum", "pixel_min", "pixel_max",
-                ],
-            )
+    def stats(media_id, payload):
+        img = decode_payload(bytes(payload), "image", fake=False)
+        yield (media_id, img.shape[1], img.shape[0], *_int_stats(img))
 
     pngs = media.filter(F.col("codec") == "png").select("media_id", "payload")
-    return pngs.mapInPandas(stats, schema=DECODED_STATS_SCHEMA)
+    return map_rows(pngs, stats, DECODED_STATS_SCHEMA)
 
 
 AUDIO_MEDIA_SCHEMA = T.StructType(
@@ -447,27 +426,13 @@ def synthesize_audio_media(documents: DataFrame) -> DataFrame:
     so a SQL oracle can recompute every decoded sample."""
     from .avcodec import encode_wav
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        i = np.arange(d % 480 + 32, dtype=np.int64)
+        samples = ((d * 7919 + i * 131) % 65536 - 32768).astype(np.int16)
+        yield d, encode_wav(samples, 8000 * (d % 3 + 1))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 480 + 32
-                rate = 8000 * (d % 3 + 1)
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 7919 + i * 131) % 65536 - 32768).astype(
-                    np.int16
-                )
-                rows.append(
-                    {"media_id": d, "payload": encode_wav(samples, rate)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def decode_audio_stats(media: DataFrame) -> DataFrame:
@@ -479,40 +444,28 @@ def decode_audio_stats(media: DataFrame) -> DataFrame:
 
     from .avcodec import decode_wav
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                # one chunk walk: decode_wav returns samples AND header
-                samples, hdr = decode_wav(bytes(payload))
-                s64 = samples.astype("int64")
-                n = int(samples.size)  # interleaved samples
-                # duration counts FRAMES (sample sets), not interleaved
-                # samples — a stereo file is not twice as long
-                frames = n // max(hdr["channels"], 1)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "sample_rate": hdr["sample_rate"],
-                        "channels": hdr["channels"],
-                        "n_samples": n,
-                        "duration_ms": frames * 1000 // hdr["sample_rate"],
-                        "amp_sum": int(s64.sum()),
-                        "amp_min": int(samples.min()) if n else 0,
-                        "amp_max": int(samples.max()) if n else 0,
-                        "energy": int((s64 * s64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "channels", "n_samples",
-                    "duration_ms", "amp_sum", "amp_min", "amp_max", "energy",
-                ],
-            )
+    def stats(media_id, payload):
+        # one chunk walk: decode_wav returns samples AND header
+        samples, hdr = decode_wav(bytes(payload))
+        s64 = samples.astype("int64")
+        n = int(samples.size)  # interleaved samples
+        # duration counts FRAMES (sample sets), not interleaved
+        # samples — a stereo file is not twice as long
+        frames = n // max(hdr["channels"], 1)
+        yield (
+            media_id,
+            hdr["sample_rate"],
+            hdr["channels"],
+            n,
+            frames * 1000 // hdr["sample_rate"],
+            int(s64.sum()),
+            int(samples.min()) if n else 0,
+            int(samples.max()) if n else 0,
+            int((s64 * s64).sum()),
+        )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=AUDIO_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, AUDIO_STATS_SCHEMA
     )
 
 
@@ -538,22 +491,13 @@ def synthesize_video_media(documents: DataFrame) -> DataFrame:
         luma(f, y, x) = (doc_id + 7*f + 3*y + x) % 256."""
     from .avcodec import encode_y4m
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        ff, yy, xx = np.mgrid[0 : d % 6 + 2, 0 : d % 8 + 8, 0 : d % 16 + 8]
+        frames = ((d + 7 * ff + 3 * yy + xx) % 256).astype(np.uint8)
+        yield d, encode_y4m(frames)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = d % 16 + 8, d % 8 + 8, d % 6 + 2
-                ff, yy, xx = np.mgrid[0:nf, 0:h, 0:w]
-                frames = ((d + 7 * ff + 3 * yy + xx) % 256).astype(np.uint8)
-                rows.append({"media_id": d, "payload": encode_y4m(frames)})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def decode_video_frame_stats(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -561,36 +505,41 @@ def decode_video_frame_stats(media: DataFrame, every_n: int = 2) -> DataFrame:
     every ``every_n``-th frame, emit exact integer luma stats per kept
     frame — the row-expanding decode shape with a real container."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = decode_payload(bytes(payload), "video", fake=False)
-                h, w = frames.shape[1], frames.shape[2]
-                for idx in range(0, frames.shape[0], every_n):
-                    fr = frames[idx].astype("int64")
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_idx": idx,
-                            "width": w,
-                            "height": h,
-                            "luma_sum": int(fr.sum()),
-                            "luma_min": int(fr.min()),
-                            "luma_max": int(fr.max()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "luma_sum", "luma_min", "luma_max",
-                ],
-            )
+    def stats(media_id, payload):
+        frames = decode_payload(bytes(payload), "video", fake=False)
+        h, w = frames.shape[1], frames.shape[2]
+        for idx in range(0, frames.shape[0], every_n):
+            _, total, lo, hi = _int_stats(frames[idx].astype("int64"))
+            yield media_id, idx, w, h, total, lo, hi
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=VIDEO_FRAME_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, VIDEO_FRAME_STATS_SCHEMA
     )
+
+
+def _byte_features(payload, num_bins: int) -> tuple:
+    """(n_bytes, byte_mean, byte_std, histogram) of one payload — the
+    per-row body shared by :func:`extract_features` and
+    :func:`extract_features_arrow`."""
+    arr = np.frombuffer(payload or b"", dtype=np.uint8)
+    # arr * num_bins // 256 lands in [0, num_bins) for ANY num_bins
+    # (floor-dividing by 256//num_bins overflows into an extra bin
+    # when num_bins doesn't divide 256)
+    hist = (
+        np.bincount(arr.astype(np.int64) * num_bins // 256, minlength=num_bins)
+        if arr.size
+        else np.zeros(num_bins, dtype=np.int64)
+    )
+    # mean/std from EXACT integer power sums (values ≤ 255, sums stay
+    # far below 2^53): every downstream double op (divide, multiply,
+    # subtract, sqrt) is then a single IEEE rounding an oracle engine
+    # reproduces bit-for-bit
+    n = int(arr.size)
+    s = int(arr.sum(dtype=np.int64))
+    ss = int((arr.astype(np.int64) ** 2).sum())
+    mean = s / n if n else 0.0
+    var = max(0.0, ss / n - (s / n) * (s / n)) if n else 0.0
+    return n, mean, math.sqrt(var), hist.astype("int64").tolist()
 
 
 def extract_features(media: DataFrame, num_bins: int = 16) -> DataFrame:
@@ -599,109 +548,48 @@ def extract_features(media: DataFrame, num_bins: int = 16) -> DataFrame:
     decode-and-featurize stage (swap the body for a real decoder +
     model when codecs are available)."""
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def featurize(media_id, media_type, payload):
+        yield (media_id, media_type, *_byte_features(payload, num_bins))
 
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for media_id, media_type, payload in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"]
-            ):
-                arr = np.frombuffer(payload or b"", dtype=np.uint8)
-                # arr * num_bins // 256 lands in [0, num_bins) for ANY
-                # num_bins (floor-dividing by 256//num_bins overflows
-                # into an extra bin when num_bins doesn't divide 256)
-                hist = (
-                    np.bincount(
-                        arr.astype(np.int64) * num_bins // 256,
-                        minlength=num_bins,
-                    )
-                    if arr.size
-                    else np.zeros(num_bins, dtype=np.int64)
-                )
-                # mean/std from EXACT integer power sums (values ≤ 255,
-                # sums stay far below 2^53): every downstream double op
-                # (divide, multiply, subtract, sqrt) is then a single
-                # IEEE rounding an oracle engine reproduces bit-for-bit
-                n = int(arr.size)
-                s = int(arr.sum(dtype=np.int64))
-                ss = int((arr.astype(np.int64) ** 2).sum())
-                mean = s / n if n else 0.0
-                var = max(0.0, ss / n - (s / n) * (s / n)) if n else 0.0
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "media_type": media_type,
-                        "n_bytes": n,
-                        "byte_mean": mean,
-                        "byte_std": math.sqrt(var),
-                        "histogram": hist.astype("int64").tolist(),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "media_type", "payload").mapInPandas(
-        featurize, schema=FEATURE_SCHEMA
+    return map_rows(
+        media.select("media_id", "media_type", "payload"),
+        featurize,
+        FEATURE_SCHEMA,
     )
 
 
 def extract_features_arrow(media: DataFrame, num_bins: int = 16) -> DataFrame:
     """``mapInArrow`` twin of :func:`extract_features`: the lower-level
     Arrow face — RecordBatch in, RecordBatch out, no pandas
-    conversion. Same exact-integer arithmetic, so results are
-    bit-identical to the pandas path (equivalence pinned by a test and
-    by sharing the oracle). Use this face when batches are large and
-    the pandas materialization cost matters."""
+    conversion. Same per-row function, so results are bit-identical
+    to the pandas path (equivalence pinned by a test and by sharing
+    the oracle). Use this face when batches are large and the pandas
+    materialization cost matters."""
+    names = FEATURE_SCHEMA.fieldNames()
 
     def featurize(batches):
-        import math
-
-        import numpy as np
         import pyarrow as pa
 
+        schema = pa.schema(
+            [
+                ("media_id", pa.int64()),
+                ("media_type", pa.string()),
+                ("n_bytes", pa.int64()),
+                ("byte_mean", pa.float64()),
+                ("byte_std", pa.float64()),
+                ("histogram", pa.list_(pa.int64())),
+            ]
+        )
         for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            types = batch.column("media_type").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            out = {
-                "media_id": [], "media_type": [], "n_bytes": [],
-                "byte_mean": [], "byte_std": [], "histogram": [],
-            }
-            for mid, mtype, payload in zip(ids, types, payloads):
-                arr = np.frombuffer(payload or b"", dtype=np.uint8)
-                hist = (
-                    np.bincount(
-                        arr.astype(np.int64) * num_bins // 256,
-                        minlength=num_bins,
-                    )
-                    if arr.size
-                    else np.zeros(num_bins, dtype=np.int64)
+            rows = [
+                (mid, mtype, *_byte_features(payload, num_bins))
+                for mid, mtype, payload in zip(
+                    *(col.to_pylist() for col in batch.columns)
                 )
-                n = int(arr.size)
-                s = int(arr.sum(dtype=np.int64))
-                ss = int((arr.astype(np.int64) ** 2).sum())
-                mean = s / n if n else 0.0
-                var = max(0.0, ss / n - (s / n) * (s / n)) if n else 0.0
-                out["media_id"].append(mid)
-                out["media_type"].append(mtype)
-                out["n_bytes"].append(n)
-                out["byte_mean"].append(mean)
-                out["byte_std"].append(math.sqrt(var))
-                out["histogram"].append(hist.astype("int64").tolist())
+            ]
             yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("media_type", pa.string()),
-                        ("n_bytes", pa.int64()),
-                        ("byte_mean", pa.float64()),
-                        ("byte_std", pa.float64()),
-                        ("histogram", pa.list_(pa.int64())),
-                    ]
-                ),
+                {name: [r[k] for r in rows] for k, name in enumerate(names)},
+                schema=schema,
             )
 
     return media.select("media_id", "media_type", "payload").mapInArrow(
@@ -715,32 +603,18 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     Frame payloads are deterministic slices of the (fake-decoded)
     payload; a real implementation swaps the slicing for ffmpeg."""
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, n_frames in zip(
-                pdf["media_id"], pdf["payload"], pdf["n_frames"]
-            ):
-                if n_frames is None or pd.isna(n_frames):
-                    continue
-                buf = payload or b""
-                step = max(len(buf) // max(int(n_frames), 1), 1)
-                for idx in range(0, int(n_frames), every_n):
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_idx": idx,
-                            "frame_payload": buf[idx * step : (idx + 1) * step],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_payload"]
-            )
+    def expand(media_id, payload, n_frames):
+        if n_frames is None or pd.isna(n_frames):
+            return
+        buf = payload or b""
+        step = max(len(buf) // max(int(n_frames), 1), 1)
+        for idx in range(0, int(n_frames), every_n):
+            yield media_id, idx, buf[idx * step : (idx + 1) * step]
 
     vids = media.filter(F.col("media_type") == "video").select(
         "media_id", "payload", F.col("meta.n_frames").alias("n_frames")
     )
-    return vids.mapInPandas(expand, schema=FRAME_SCHEMA)
+    return map_rows(vids, expand, FRAME_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -763,33 +637,16 @@ def resize_images(
     per image, row-major uint8 bytes + final dims) is what matters.
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_payload(payload, "image", fake=True)
-                ys = (np.arange(height) * img.shape[0] // height)
-                xs = (np.arange(width) * img.shape[1] // width)
-                small = img[np.ix_(ys, xs)]
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "width": width,
-                        "height": height,
-                        "pixels": small.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "pixels"]
-            )
+    def resize(media_id, payload):
+        img = decode_payload(payload, "image", fake=True)
+        ys = np.arange(height) * img.shape[0] // height
+        xs = np.arange(width) * img.shape[1] // width
+        yield media_id, width, height, img[np.ix_(ys, xs)].tobytes()
 
     imgs = media.filter(F.col("media_type") == "image").select(
         "media_id", "payload"
     )
-    return imgs.mapInPandas(resize, schema=RESIZED_SCHEMA)
-
+    return map_rows(imgs, resize, RESIZED_SCHEMA)
 
 
 AHASH_BANDS_SCHEMA = T.StructType(
@@ -817,33 +674,15 @@ def synthesize_ahash_media(documents: DataFrame) -> DataFrame:
     downstream hash stage exercises the real decoder."""
     from .imagecodec import encode_png
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(d):
+        pair = d // 2
+        yy, xx = np.mgrid[0 : pair % 16 + 8, 0 : pair % 24 + 8]
+        pixels = ((pair + 31 * yy + xx) % 256).astype(np.int64)
+        if d % 2 == 1:
+            pixels = np.minimum(pixels + ((yy + xx) % 17 == 0), 255)
+        return encode_png(pixels.astype(np.uint8))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pair = d // 2
-                w, h = pair % 24 + 8, pair % 16 + 8
-                yy, xx = np.mgrid[0:h, 0:w]
-                pixels = ((pair + 31 * yy + xx) % 256).astype(np.int64)
-                if d % 2 == 1:
-                    pixels = np.minimum(
-                        pixels + ((yy + xx) % 17 == 0), 255
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "png",
-                        "payload": encode_png(pixels.astype(np.uint8)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "png", encode)
 
 
 def ahash_bands(media: DataFrame) -> DataFrame:
@@ -863,40 +702,16 @@ def ahash_bands(media: DataFrame) -> DataFrame:
     perceptual-invariance aHash is chosen for."""
     from .imagecodec import decode_png
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def hash_row(media_id, payload):
+        px = decode_png(bytes(payload)).astype(np.int64)
+        h, w = px.shape
+        blk = ((np.arange(h) * 8) // h)[:, None] * 8 + (np.arange(w) * 8) // w
+        sums = np.bincount(blk.ravel(), weights=px.ravel(), minlength=64)
+        cnts = np.bincount(blk.ravel(), minlength=64)
+        yield _band_row(media_id, (sums * (h * w)) > (int(px.sum()) * cnts))
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_png(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                total = int(px.sum())
-                n = h * w
-                by = (np.arange(h) * 8) // h
-                bx = (np.arange(w) * 8) // w
-                blk = by[:, None] * 8 + bx[None, :]
-                sums = np.bincount(blk.ravel(), weights=px.ravel(), minlength=64)
-                cnts = np.bincount(blk.ravel(), minlength=64)
-                bits = (sums * n) > (total * cnts)
-                bands = [0, 0, 0, 0]
-                for idx in np.nonzero(bits)[0]:
-                    bands[idx // 16] |= 1 << (int(idx) % 16)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "b0": bands[0],
-                        "b1": bands[1],
-                        "b2": bands[2],
-                        "b3": bands[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        hash_batch, schema=AHASH_BANDS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), hash_row, AHASH_BANDS_SCHEMA
     )
 
 
@@ -914,30 +729,16 @@ def synthesize_afp_media(documents: DataFrame) -> DataFrame:
     data), so the hash stage exercises the real PCM decoder."""
     from .avcodec import encode_wav
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        pair = d // 2
+        i = np.arange(pair % 480 + 64, dtype=np.int64)
+        v = (pair * 7919 + i * 131) % 65536 - 32768
+        if d % 2 == 1:
+            v = np.minimum(v + 3 * (i % 13 == 0), 32767)
+        yield d, encode_wav(v.astype(np.int16), 16000)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pair = d // 2
-                n = pair % 480 + 64
-                i = np.arange(n, dtype=np.int64)
-                v = (pair * 7919 + i * 131) % 65536 - 32768
-                if d % 2 == 1:
-                    v = np.minimum(v + 3 * (i % 13 == 0), 32767)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "payload": encode_wav(v.astype(np.int16), 16000),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def audio_fingerprint_bands(media: DataFrame) -> DataFrame:
@@ -954,39 +755,16 @@ def audio_fingerprint_bands(media: DataFrame) -> DataFrame:
     framing is the exactly-checkable core of the shape)."""
     from .avcodec import decode_wav
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fp(media_id, payload):
+        v = decode_wav(bytes(payload))[0].astype(np.int64)
+        n = v.size
+        f = (np.arange(n) * 64) // n
+        ef = np.bincount(f, weights=v * v, minlength=64).astype(np.int64)
+        nf = np.bincount(f, minlength=64)
+        yield _band_row(media_id, (ef * n) > (int(ef.sum()) * nf))
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = decode_wav(bytes(payload))[0].astype(np.int64)
-                n = v.size
-                f = (np.arange(n) * 64) // n
-                ef = np.bincount(f, weights=v * v, minlength=64).astype(
-                    np.int64
-                )
-                nf = np.bincount(f, minlength=64)
-                total = int(ef.sum())
-                bits = (ef * n) > (total * nf)
-                bands = [0, 0, 0, 0]
-                for idx in np.nonzero(bits)[0]:
-                    bands[idx // 16] |= 1 << (int(idx) % 16)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "b0": bands[0],
-                        "b1": bands[1],
-                        "b2": bands[2],
-                        "b3": bands[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        fp, schema=AHASH_BANDS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), fp, AHASH_BANDS_SCHEMA
     )
 
 
@@ -1148,32 +926,18 @@ def synthesize_vfp_media(documents: DataFrame) -> DataFrame:
     hash stage exercises the real Cmono decoder."""
     from .avcodec import encode_y4m
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        pair = d // 2
+        f = np.arange(pair % 24 + 40)[:, None, None]
+        y = np.arange(8)[None, :, None]
+        x = np.arange(8)[None, None, :]
+        luma = (pair * 31 + f * 7 + y * 3 + x) % 254
+        if d % 2 == 1:
+            luma = luma + (f % 11 == 0).astype(np.int64)
+        yield d, encode_y4m(luma.astype(np.uint8))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pair = d // 2
-                n = pair % 24 + 40
-                f = np.arange(n)[:, None, None]
-                y = np.arange(8)[None, :, None]
-                x = np.arange(8)[None, None, :]
-                luma = (pair * 31 + f * 7 + y * 3 + x) % 254
-                if d % 2 == 1:
-                    luma = luma + (f % 11 == 0).astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "payload": encode_y4m(luma.astype(np.uint8)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def video_fingerprint_bands(media: DataFrame) -> DataFrame:
@@ -1189,43 +953,22 @@ def video_fingerprint_bands(media: DataFrame) -> DataFrame:
     fifth modality (text, embeddings, image, audio, video)."""
     from .avcodec import decode_y4m
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fp(media_id, payload):
+        frames, _ = decode_y4m(bytes(payload))
+        n = frames.shape[0]
+        fsum = frames.reshape(n, -1).sum(axis=1).astype(np.int64)
+        b = (np.arange(n) * 64) // n
+        # Accumulate bucket luminance in int64: bincount with float
+        # weights sums in float64, which would round past 2^53 on
+        # real-resolution clips and break the exact integer threshold
+        # contract the oracle relies on.
+        lb = np.zeros(64, dtype=np.int64)
+        np.add.at(lb, b, fsum)
+        nb = np.bincount(b, minlength=64)
+        yield _band_row(media_id, (lb * n) > (int(lb.sum()) * nb))
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames, _ = decode_y4m(bytes(payload))
-                n = frames.shape[0]
-                fsum = frames.reshape(n, -1).sum(axis=1).astype(np.int64)
-                b = (np.arange(n) * 64) // n
-                # Accumulate bucket luminance in int64: bincount with
-                # float weights sums in float64, which would round past
-                # 2^53 on real-resolution clips and break the exact
-                # integer threshold contract the oracle relies on.
-                lb = np.zeros(64, dtype=np.int64)
-                np.add.at(lb, b, fsum)
-                nb = np.bincount(b, minlength=64)
-                total = int(lb.sum())
-                bits = (lb * n) > (total * nb)
-                bands = [0, 0, 0, 0]
-                for idx in np.nonzero(bits)[0]:
-                    bands[idx // 16] |= 1 << (int(idx) % 16)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "b0": bands[0],
-                        "b1": bands[1],
-                        "b2": bands[2],
-                        "b3": bands[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        fp, schema=AHASH_BANDS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), fp, AHASH_BANDS_SCHEMA
     )
 
 
@@ -1254,27 +997,14 @@ def synthesize_scene_video_media(documents: DataFrame) -> DataFrame:
     moves nearly every pixel."""
     from .avcodec import encode_y4m
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        seg = d % 4 + 3
+        ff, yy, xx = np.mgrid[0 : d % 10 + 12, 0 : d % 8 + 8, 0 : d % 16 + 8]
+        luma = (d * 17 + (ff // seg) * 53 + (ff % 2) * 2 + 3 * yy + xx) % 240
+        yield d, encode_y4m(luma.astype(np.uint8))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = d % 16 + 8, d % 8 + 8, d % 10 + 12
-                seg = d % 4 + 3
-                ff, yy, xx = np.mgrid[0:nf, 0:h, 0:w]
-                luma = (
-                    d * 17 + (ff // seg) * 53 + (ff % 2) * 2 + 3 * yy + xx
-                ) % 240
-                rows.append(
-                    {"media_id": d, "payload": encode_y4m(luma.astype(np.uint8))}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def scene_cut_frames(media: DataFrame, mean_diff_x100: int = 2000) -> DataFrame:
@@ -1287,39 +1017,21 @@ def scene_cut_frames(media: DataFrame, mean_diff_x100: int = 2000) -> DataFrame:
     segmentation primitive a video training-data pipeline runs before
     per-scene sampling/dedup; per clip the work is one decode plus one
     vectorized frame-pair scan, Arrow-batched via ``mapInPandas`` with
-    no shuffle at all — embarrassingly parallel at any corpus size."""
+    no shuffle at all — embarrassingly parallel at any corpus size.
+    ``media`` is (media_id, payload), as the Y4M fixtures emit it."""
     from .avcodec import decode_y4m
 
     thresh = int(mean_diff_x100)
 
-    def cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def cuts(media_id, payload):
+        frames, _ = decode_y4m(bytes(payload))
+        fr = frames.astype(np.int64)
+        npix = fr.shape[1] * fr.shape[2]
+        diffs = np.abs(fr[1:] - fr[:-1]).reshape(fr.shape[0] - 1, -1).sum(axis=1)
+        for i in np.nonzero(100 * diffs > thresh * npix)[0]:
+            yield media_id, int(i) + 1, int(diffs[i]), npix
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames, _ = decode_y4m(bytes(payload))
-                fr = frames.astype(np.int64)
-                npix = fr.shape[1] * fr.shape[2]
-                diffs = (
-                    np.abs(fr[1:] - fr[:-1])
-                    .reshape(fr.shape[0] - 1, -1)
-                    .sum(axis=1)
-                )
-                for i in np.nonzero(100 * diffs > thresh * npix)[0]:
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "cut_frame": int(i) + 1,
-                            "diff_sum": int(diffs[i]),
-                            "n_pixels": npix,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "cut_frame", "diff_sum", "n_pixels"]
-            )
-
-    return media.mapInPandas(cuts, schema=SCENE_CUT_SCHEMA)
+    return map_rows(media, cuts, SCENE_CUT_SCHEMA)
 
 
 # Low-sequency Walsh-Hadamard coefficient set for the spectral hash:
@@ -1355,52 +1067,26 @@ def wht_spectral_bands(media: DataFrame) -> DataFrame:
     degenerate corpora."""
     from .imagecodec import decode_png
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def signs(u):
+        return np.array(
+            [(-1) ** bin(i & u).count("1") for i in range(8)], dtype=np.int64
+        )
 
-        sign_tables = []
-        for u, v in WHT_COEFFS:
-            si = np.array(
-                [(-1) ** bin(i & u).count("1") for i in range(8)],
-                dtype=np.int64,
-            )
-            sj = np.array(
-                [(-1) ** bin(j & v).count("1") for j in range(8)],
-                dtype=np.int64,
-            )
-            sign_tables.append(np.outer(si, sj))
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_png(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                by = (np.arange(h) * 8) // h
-                bx = (np.arange(w) * 8) // w
-                blk = by[:, None] * 8 + bx[None, :]
-                sums = np.zeros(64, dtype=np.int64)
-                np.add.at(sums, blk.ravel(), px.ravel())
-                cnts = np.bincount(blk.ravel(), minlength=64)
-                m = (sums * _WHT_SCALE) // cnts  # exact int64 floor
-                mm = m.reshape(8, 8)
-                bands = [0, 0, 0, 0]
-                for k, st in enumerate(sign_tables):
-                    if int((mm * st).sum()) > 0:
-                        bands[k // 5] |= 1 << (k % 5)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "b0": bands[0],
-                        "b1": bands[1],
-                        "b2": bands[2],
-                        "b3": bands[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "b0", "b1", "b2", "b3"]
-            )
+    sign_tables = [np.outer(signs(u), signs(v)) for u, v in WHT_COEFFS]
 
-    return media.select("media_id", "payload").mapInPandas(
-        fp, schema=AHASH_BANDS_SCHEMA
+    def fp(media_id, payload):
+        px = decode_png(bytes(payload)).astype(np.int64)
+        h, w = px.shape
+        blk = ((np.arange(h) * 8) // h)[:, None] * 8 + (np.arange(w) * 8) // w
+        sums = np.zeros(64, dtype=np.int64)
+        np.add.at(sums, blk.ravel(), px.ravel())
+        cnts = np.bincount(blk.ravel(), minlength=64)
+        mm = ((sums * _WHT_SCALE) // cnts).reshape(8, 8)  # exact int64 floor
+        bits = [int((mm * st).sum()) > 0 for st in sign_tables]
+        yield _band_row(media_id, bits, width=5)
+
+    return map_rows(
+        media.select("media_id", "payload"), fp, AHASH_BANDS_SCHEMA
     )
 
 
@@ -1430,30 +1116,14 @@ def synthesize_vad_media(documents: DataFrame) -> DataFrame:
     PCM decoder."""
     from .avcodec import encode_wav
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def render(doc_id):
+        d = int(doc_id)
+        i = np.arange(d % 480 + 96, dtype=np.int64)
+        voiced = (d + i // VAD_FRAME_SAMPLES) % 3 == 0
+        v = np.where(voiced, (d * 37 + i * 7) % 2048 - 1024, (d + i) % 8 - 4)
+        yield d, encode_wav(v.astype(np.int16), 16000)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 480 + 96
-                i = np.arange(n, dtype=np.int64)
-                voiced = (d + i // VAD_FRAME_SAMPLES) % 3 == 0
-                loud = (d * 37 + i * 7) % 2048 - 1024
-                quiet = (d + i) % 8 - 4
-                v = np.where(voiced, loud, quiet)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "payload": encode_wav(v.astype(np.int16), 16000),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def vad_frames(media: DataFrame) -> DataFrame:
@@ -1467,35 +1137,18 @@ def vad_frames(media: DataFrame) -> DataFrame:
     boundary only."""
     from .avcodec import decode_wav
 
-    def fr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def frames(media_id, payload):
+        v = decode_wav(bytes(payload))[0].astype(np.int64)
+        f = np.arange(v.size) // VAD_FRAME_SAMPLES
+        nf = int(f[-1]) + 1 if v.size else 0
+        e = np.zeros(nf, dtype=np.int64)
+        np.add.at(e, f, v * v)
+        cnt = np.bincount(f, minlength=nf)
+        for k in range(nf):
+            yield media_id, k, int(cnt[k]), int(e[k])
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                v = decode_wav(bytes(payload))[0].astype(np.int64)
-                n = v.size
-                f = np.arange(n) // VAD_FRAME_SAMPLES
-                nf = int(f[-1]) + 1 if n else 0
-                e = np.zeros(nf, dtype=np.int64)
-                np.add.at(e, f, v * v)
-                cnt = np.bincount(f, minlength=nf)
-                for k in range(nf):
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "frame_idx": k,
-                            "n_samples": int(cnt[k]),
-                            "energy": int(e[k]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "n_samples", "energy"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        fr, schema=VAD_FRAME_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), frames, VAD_FRAME_SCHEMA
     )
 
 
@@ -1524,40 +1177,17 @@ def resize_png_pixels(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     filters. Arrow-batched mapInPandas, zero shuffle."""
     from .imagecodec import decode_png
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def resize(media_id, payload):
+        px = decode_png(bytes(payload)).astype(np.int64)
+        h, w = px.shape
+        yi = (np.arange(out_h) * h) // out_h
+        xi = (np.arange(out_w) * w) // out_w
+        out = px[yi[:, None], xi[None, :]]
+        csv = ",".join(str(int(v)) for v in out.ravel())
+        yield (media_id, w, h, csv, *_int_stats(out)[1:])
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_png(bytes(payload)).astype(np.int64)
-                h, w = px.shape
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                out = px[yi[:, None], xi[None, :]]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "src_w": w,
-                        "src_h": h,
-                        "pixels_csv": ",".join(
-                            str(int(v)) for v in out.ravel()
-                        ),
-                        "pixel_sum": int(out.sum()),
-                        "pixel_min": int(out.min()),
-                        "pixel_max": int(out.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "src_w", "src_h", "pixels_csv",
-                    "pixel_sum", "pixel_min", "pixel_max",
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        rs, schema=RESIZE_PIXELS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), resize, RESIZE_PIXELS_SCHEMA
     )
 
 
@@ -1589,33 +1219,18 @@ def synthesize_motion_media(documents: DataFrame) -> DataFrame:
     real container."""
     from .avcodec import encode_y4m
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    yy, xx = np.mgrid[0:12, 0:16]
 
-        W, H = 16, 12
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = d % 4 + 3
-                frames = []
-                for f in range(nf):
-                    sy = (d + f) % 2
-                    sx = (d * 3 + 2 * f) % 2
-                    yy, xx = np.mgrid[0:H, 0:W]
-                    frames.append(
-                        (
-                            (d + 13 * (yy + sy) + 7 * (xx + sx)) % 256
-                        ).astype(np.uint8)
-                    )
-                rows.append(
-                    {"media_id": d, "payload": encode_y4m(frames)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def render(doc_id):
+        d = int(doc_id)
+        frames = [
+            ((d + 13 * (yy + (d + f) % 2) + 7 * (xx + (d * 3 + 2 * f) % 2)) % 256)
+            .astype(np.uint8)
+            for f in range(d % 4 + 3)
+        ]
+        yield d, encode_y4m(frames)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, AUDIO_MEDIA_SCHEMA)
 
 
 def block_motion_vectors(media: DataFrame) -> DataFrame:
@@ -1631,67 +1246,43 @@ def block_motion_vectors(media: DataFrame) -> DataFrame:
     engine-exact. Arrow-batched mapInPandas, zero shuffle."""
     from .avcodec import decode_y4m
 
-    def mv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    # vectorized kernel: per frame pair, ALL blocks' SADs for all 9
+    # candidates in 9 whole-frame array ops (|cur−shifted prev| → 4x4
+    # box sums via a (by,4,bx,4) reshape of the strided block grid),
+    # then one argmin over the candidate axis with the (sad, dy, dx)
+    # tie order encoded in the candidate ordering — the per-block
+    # Python loop benched 4.3 s at sf0.1, this shape removes all
+    # interpreter work from the hot path
+    cands = [(dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
 
-        # vectorized kernel: per frame pair, ALL blocks' SADs for all 9
-        # candidates in 9 whole-frame array ops (|cur−shifted prev| →
-        # 4x4 box sums via a (by,4,bx,4) reshape of the strided block
-        # grid), then one argmin over the candidate axis with the
-        # (sad, dy, dx) tie order encoded in the candidate ordering —
-        # the per-block Python loop benched 4.3 s at sf0.1, this shape
-        # removes all interpreter work from the hot path
-        cands = [(dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                planes, _hdr = decode_y4m(bytes(payload))
-                frames = [f.astype(np.int64) for f in planes]
-                h, w = frames[0].shape
-                ys = list(range(2, h - 4 - 1, 4))
-                xs = list(range(2, w - 4 - 1, 4))
-                ny, nx = len(ys), len(xs)
-                y_lo, y_hi = ys[0], ys[-1] + 4
-                x_lo, x_hi = xs[0], xs[-1] + 4
-                for f in range(len(frames) - 1):
-                    prev, cur = frames[f], frames[f + 1]
-                    blk = cur[y_lo:y_hi, x_lo:x_hi]
-                    sads = np.empty((len(cands), ny, nx), dtype=np.int64)
-                    for ci, (dy, dx) in enumerate(cands):
-                        ref = prev[
-                            y_lo + dy : y_hi + dy, x_lo + dx : x_hi + dx
-                        ]
-                        diff = np.abs(blk - ref)
-                        sads[ci] = (
-                            diff.reshape(ny, 4, nx, 4).sum(axis=(1, 3))
-                        )
-                    # argmin over candidates; np.argmin takes the FIRST
-                    # minimum, and cands is already in (dy, dx) tie order
-                    win = np.argmin(sads, axis=0)
-                    for bi, y0 in enumerate(ys):
-                        for bj, x0 in enumerate(xs):
-                            ci = int(win[bi, bj])
-                            rows.append(
-                                {
-                                    "media_id": int(media_id),
-                                    "frame_pair": f,
-                                    "block_y": y0,
-                                    "block_x": x0,
-                                    "mv_dy": cands[ci][0],
-                                    "mv_dx": cands[ci][1],
-                                    "sad": int(sads[ci, bi, bj]),
-                                }
-                            )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_pair", "block_y", "block_x",
-                    "mv_dy", "mv_dx", "sad",
-                ],
-            )
+    def mv(media_id, payload):
+        planes, _hdr = decode_y4m(bytes(payload))
+        frames = [f.astype(np.int64) for f in planes]
+        h, w = frames[0].shape
+        ys = list(range(2, h - 4 - 1, 4))
+        xs = list(range(2, w - 4 - 1, 4))
+        ny, nx = len(ys), len(xs)
+        y_lo, y_hi = ys[0], ys[-1] + 4
+        x_lo, x_hi = xs[0], xs[-1] + 4
+        for f in range(len(frames) - 1):
+            prev, cur = frames[f], frames[f + 1]
+            blk = cur[y_lo:y_hi, x_lo:x_hi]
+            sads = np.empty((len(cands), ny, nx), dtype=np.int64)
+            for ci, (dy, dx) in enumerate(cands):
+                ref = prev[y_lo + dy : y_hi + dy, x_lo + dx : x_hi + dx]
+                diff = np.abs(blk - ref)
+                sads[ci] = diff.reshape(ny, 4, nx, 4).sum(axis=(1, 3))
+            # argmin over candidates; np.argmin takes the FIRST minimum,
+            # and cands is already in (dy, dx) tie order
+            win = np.argmin(sads, axis=0)
+            for bi, y0 in enumerate(ys):
+                for bj, x0 in enumerate(xs):
+                    ci = int(win[bi, bj])
+                    sad = int(sads[ci, bi, bj])
+                    yield (media_id, f, y0, x0, *cands[ci], sad)
 
-    return media.select("media_id", "payload").mapInPandas(
-        mv, schema=MOTION_VECTOR_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), mv, MOTION_VECTOR_SCHEMA
     )
 
 
@@ -1715,27 +1306,39 @@ JPEG_COEF_SCHEMA = T.StructType(
 )
 
 
+def _planted_block(d: int, b: int, ci: int = 0) -> list[int]:
+    """Closed-form quantized block ``b`` of component ``ci`` for doc
+    ``d``, in zigzag order, shared by every entropy-coded JPEG fixture.
+    AC positions use stride 5 mod 63 (injective for i <= 7) so
+    positions never collide; AC values skip 0."""
+    blk = [0] * 64
+    blk[0] = (d + 11 * b + 7 * ci) % 61 - 30
+    nac = (d + b + ci) % 6 + 2
+    for i in range(1, nac + 1):
+        p = (5 * i + 3 * b + 2 * ci) % 63 + 1
+        raw = (d + 13 * b + 29 * i + 5 * ci) % 20 - 10
+        blk[p] = raw + 1 if raw >= 0 else raw
+    return blk
+
+
+def _luma_qtable(d: int) -> list[int]:
+    return [(d * 7 + j) % 31 + 1 for j in range(64)]
+
+
+def _chroma_qtable(d: int, shift: int = 0) -> list[int]:
+    return [(d * 5 + shift + j) % 29 + 1 for j in range(64)]
+
+
 def _jpeg_scan_fixture(d: int):
     """Closed-form planted scan for doc ``d``: (blocks-in-zigzag,
     width, height, qtable, restart_interval). Every value is a pure
     function of (d, block, position) so a SQL oracle re-derives the
-    exact dequantized coefficient multiset. AC positions use stride 5
-    mod 63 (injective for i <= 7) so positions never collide; AC
-    values skip 0. Restart interval cycles 0/1/2 so the DRI + RSTn +
-    DC-prediction-reset paths are exercised across the corpus."""
+    exact dequantized coefficient multiset. Restart interval cycles
+    0/1/2 so the DRI + RSTn + DC-prediction-reset paths are exercised
+    across the corpus."""
     wb, hb = d % 3 + 1, d % 2 + 1
-    qtable = [(d * 7 + j) % 31 + 1 for j in range(64)]
-    blocks = []
-    for b in range(wb * hb):
-        blk = [0] * 64
-        blk[0] = (d + 11 * b) % 61 - 30
-        nac = (d + b) % 6 + 2
-        for i in range(1, nac + 1):
-            p = (5 * i + 3 * b) % 63 + 1
-            raw = (d + 13 * b + 29 * i) % 20 - 10
-            blk[p] = raw + 1 if raw >= 0 else raw
-        blocks.append(blk)
-    return blocks, wb * 8, hb * 8, qtable, d % 3
+    blocks = [_planted_block(d, b) for b in range(wb * hb)]
+    return blocks, wb * 8, hb * 8, _luma_qtable(d), d % 3
 
 
 def synthesize_jpeg_scan_media(documents: DataFrame) -> DataFrame:
@@ -1745,66 +1348,45 @@ def synthesize_jpeg_scan_media(documents: DataFrame) -> DataFrame:
     coefficients are the closed-form ``_jpeg_scan_fixture`` plants."""
     from .imagecodec import encode_jpeg_baseline
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blocks, w, h, qtable, ri = _jpeg_scan_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_baseline(
-                            blocks, w, h, qtable, restart_interval=ri
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        blocks, w, h, qtable, ri = _jpeg_scan_fixture(d)
+        return encode_jpeg_baseline(blocks, w, h, qtable, restart_interval=ri)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
+    return _codec_media(documents, "jpeg", encode)
+
+
+def _coef_stats(blocks) -> tuple:
+    """(n_blocks, n_nonzero, coef_sum, coef_min, coef_max, dc_sum,
+    posw_sum) over the NONZERO dequantized coefficients; ``posw_sum``
+    weights each by its natural (row*8+col) index, so a transposed or
+    mis-permuted zigzag cannot hash-match."""
+    nz = [(idx, v) for blk in blocks for idx, v in enumerate(blk) if v != 0]
+    return (
+        len(blocks),
+        len(nz),
+        sum(v for _, v in nz),
+        min(v for _, v in nz),
+        max(v for _, v in nz),
+        sum(blk[0] for blk in blocks),
+        sum(idx * v for idx, v in nz),
     )
 
 
 def jpeg_coef_stats(media: DataFrame) -> DataFrame:
-    """REAL JPEG entropy decode (coefficient domain): Huffman + DC
-    prediction + EOB/ZRL + restart sync + dequant + dezigzag per
-    payload inside an Arrow-batched mapInPandas stage; emits exact
-    integer stats over the NONZERO dequantized coefficients.
-    ``posw_sum`` weights each coefficient by its natural (row*8+col)
-    index, so a transposed or mis-permuted zigzag cannot hash-match."""
-    from .imagecodec import decode_jpeg_baseline
+    """REAL JPEG entropy decode (coefficient domain) through the
+    SOF-marker dispatcher, so baseline and PROGRESSIVE files share
+    one stage: Huffman + DC prediction + EOB/ZRL (or every SOS scan's
+    DC first/refinement and AC first/refinement contribution with
+    EOBRUN) + restart sync + dequant + dezigzag per payload; emits
+    exact integer stats over the NONZERO dequantized coefficients."""
+    from .imagecodec import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg_baseline(bytes(payload), want_pixels=False)
-                nz = [
-                    (idx, v)
-                    for blk in out["blocks"]
-                    for idx, v in enumerate(blk)
-                    if v != 0
-                ]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "width": out["width"],
-                        "height": out["height"],
-                        "n_blocks": len(out["blocks"]),
-                        "n_nonzero": len(nz),
-                        "coef_sum": sum(v for _, v in nz),
-                        "coef_min": min(v for _, v in nz),
-                        "coef_max": max(v for _, v in nz),
-                        "dc_sum": sum(blk[0] for blk in out["blocks"]),
-                        "posw_sum": sum(idx * v for idx, v in nz),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_COEF_SCHEMA])
+    def stats(media_id, payload):
+        out = decode_jpeg(bytes(payload), want_pixels=False)
+        yield (media_id, out["width"], out["height"], *_coef_stats(out["blocks"]))
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_COEF_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, JPEG_COEF_SCHEMA
     )
 
 
@@ -1818,35 +1400,17 @@ def synthesize_jpeg_flat_media(documents: DataFrame) -> DataFrame:
     decoder's edge-block crop is on the oracle path too."""
     from .imagecodec import encode_jpeg_baseline
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                wb, hb = d % 3 + 1, d % 2 + 1
-                w, h = wb * 8 - d % 5, hb * 8 - d % 3
-                qtable = [8 * (d % 16 + 1)] + [
-                    (d + j) % 255 + 1 for j in range(1, 64)
-                ]
-                blocks = []
-                for b in range(wb * hb):
-                    blk = [0] * 64
-                    blk[0] = (d + 11 * b) % 61 - 30
-                    blocks.append(blk)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_baseline(
-                            blocks, w, h, qtable, restart_interval=d % 4
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        wb, hb = d % 3 + 1, d % 2 + 1
+        qtable = [8 * (d % 16 + 1)] + [(d + j) % 255 + 1 for j in range(1, 64)]
+        blocks = [
+            [(d + 11 * b) % 61 - 30] + [0] * 63 for b in range(wb * hb)
+        ]
+        return encode_jpeg_baseline(
+            blocks, wb * 8 - d % 5, hb * 8 - d % 3, qtable, restart_interval=d % 4
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
@@ -1855,33 +1419,12 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     per payload; emits exact integer pixel stats."""
     from .imagecodec import decode_jpeg_baseline
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg_baseline(bytes(payload), want_pixels=True)
-                img = out["pixels"]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "width": out["width"],
-                        "height": out["height"],
-                        "n_pixels": int(img.size),
-                        "pixel_sum": int(img.sum(dtype="int64")),
-                        "pixel_min": int(img.min()),
-                        "pixel_max": int(img.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "pixel_sum", "pixel_min", "pixel_max",
-                ],
-            )
+    def stats(media_id, payload):
+        out = decode_jpeg_baseline(bytes(payload), want_pixels=True)
+        yield (media_id, out["width"], out["height"], *_int_stats(out["pixels"]))
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=DECODED_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, DECODED_STATS_SCHEMA
     )
 
 
@@ -1910,29 +1453,12 @@ def _jpeg_color_fixture(d: int):
     Dims are non-multiples of 16 so the MCU ceil is exercised."""
     mx, my = d % 2 + 1, (d // 2) % 2 + 1
     w, h = 16 * mx - d % 7, 16 * my - d % 5
-    qy = [(d * 7 + j) % 31 + 1 for j in range(64)]
-    qc = [(d * 5 + j) % 29 + 1 for j in range(64)]
-    comp_blocks = []
-    for ci, nb in ((0, 4 * mx * my), (1, mx * my), (2, mx * my)):
-        blocks = []
-        for b in range(nb):
-            blk = [0] * 64
-            blk[0] = (d + 11 * b + 7 * ci) % 61 - 30
-            nac = (d + b + ci) % 6 + 2
-            for i in range(1, nac + 1):
-                p = (5 * i + 3 * b + 2 * ci) % 63 + 1
-                raw = (d + 13 * b + 29 * i + 5 * ci) % 20 - 10
-                blk[p] = raw + 1 if raw >= 0 else raw
-            blocks.append(blk)
-        comp_blocks.append(blocks)
-    return (
-        comp_blocks,
-        [(2, 2), (1, 1), (1, 1)],
-        w,
-        h,
-        [qy, qc, qc],
-        d % 3,
-    )
+    comp_blocks = [
+        [_planted_block(d, b, ci) for b in range(nb)]
+        for ci, nb in ((0, 4 * mx * my), (1, mx * my), (2, mx * my))
+    ]
+    qts = [_luma_qtable(d), _chroma_qtable(d), _chroma_qtable(d)]
+    return comp_blocks, [(2, 2), (1, 1), (1, 1)], w, h, qts, d % 3
 
 
 def synthesize_jpeg_color_media(documents: DataFrame) -> DataFrame:
@@ -1943,70 +1469,34 @@ def synthesize_jpeg_color_media(documents: DataFrame) -> DataFrame:
     closed-form ``_jpeg_color_fixture`` plants."""
     from .imagecodec import encode_jpeg_baseline_color
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                cb, samp, w, h, qts, ri = _jpeg_color_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_baseline_color(
-                            cb, samp, w, h, qts, restart_interval=ri
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        cb, samp, w, h, qts, ri = _jpeg_color_fixture(d)
+        return encode_jpeg_baseline_color(cb, samp, w, h, qts, restart_interval=ri)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 def jpeg_color_coef_stats(media: DataFrame) -> DataFrame:
-    """REAL interleaved-color JPEG entropy decode: the full 4:2:0 MCU
-    walk (per-component Huffman/quant selection, per-component DC
-    prediction with restart reset) per payload; one stats row per
-    (media, component) over the nonzero dequantized coefficients. A
-    decoder that mixes components' predictions, tables, or block
-    ordering cannot hash-match."""
-    from .imagecodec import decode_jpeg_baseline
+    """REAL interleaved-color JPEG entropy decode through the SOF
+    dispatcher: the full 4:2:0 MCU walk (per-component Huffman/quant
+    selection, per-component DC prediction with restart reset) for
+    baseline files, the interleaved-DC / per-component-AC scan
+    accumulation with dummy blocks stripped for progressive ones; one
+    stats row per (media, component) over the nonzero dequantized
+    coefficients. A decoder that mixes components' predictions,
+    tables, or block ordering cannot hash-match."""
+    from .imagecodec import decode_jpeg
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg_baseline(bytes(payload), want_pixels=False)
-                for ci, comp in enumerate(out["components"]):
-                    nz = [
-                        (idx, v)
-                        for blk in comp["blocks"]
-                        for idx, v in enumerate(blk)
-                        if v != 0
-                    ]
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "width": out["width"],
-                            "height": out["height"],
-                            "component": ci,
-                            "n_blocks": len(comp["blocks"]),
-                            "n_nonzero": len(nz),
-                            "coef_sum": sum(v for _, v in nz),
-                            "coef_min": min(v for _, v in nz),
-                            "coef_max": max(v for _, v in nz),
-                            "dc_sum": sum(b[0] for b in comp["blocks"]),
-                            "posw_sum": sum(i * v for i, v in nz),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_COLOR_COEF_SCHEMA]
+    def stats(media_id, payload):
+        out = decode_jpeg(bytes(payload), want_pixels=False)
+        for ci, comp in enumerate(out["components"]):
+            yield (
+                media_id, out["width"], out["height"], ci,
+                *_coef_stats(comp["blocks"]),
             )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_COLOR_COEF_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, JPEG_COLOR_COEF_SCHEMA
     )
 
 
@@ -2022,66 +1512,11 @@ def synthesize_jpeg_progressive_media(documents: DataFrame) -> DataFrame:
     codecs."""
     from .imagecodec import encode_jpeg_progressive
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                blocks, w, h, qtable, ri = _jpeg_scan_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_progressive(
-                            blocks, w, h, qtable, restart_interval=ri
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        blocks, w, h, qtable, ri = _jpeg_scan_fixture(d)
+        return encode_jpeg_progressive(blocks, w, h, qtable, restart_interval=ri)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
-
-
-def jpeg_progressive_coef_stats(media: DataFrame) -> DataFrame:
-    """REAL progressive-JPEG decode (via the SOF-marker dispatcher):
-    accumulates every SOS scan's contribution — DC first/refinement,
-    per-band AC first scans with EOBRUN, AC refinement correction
-    bits — then emits the same exact integer coefficient stats as the
-    baseline path."""
-    from .imagecodec import decode_jpeg
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg(bytes(payload), want_pixels=False)
-                nz = [
-                    (idx, v)
-                    for blk in out["blocks"]
-                    for idx, v in enumerate(blk)
-                    if v != 0
-                ]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "width": out["width"],
-                        "height": out["height"],
-                        "n_blocks": len(out["blocks"]),
-                        "n_nonzero": len(nz),
-                        "coef_sum": sum(v for _, v in nz),
-                        "coef_min": min(v for _, v in nz),
-                        "coef_max": max(v for _, v in nz),
-                        "dc_sum": sum(blk[0] for blk in out["blocks"]),
-                        "posw_sum": sum(idx * v for idx, v in nz),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_COEF_SCHEMA])
-
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_COEF_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 def _jpeg_color_prog_fixture(d: int):
@@ -2094,25 +1529,15 @@ def _jpeg_color_prog_fixture(d: int):
     (w, h), so the SQL oracle re-derives them."""
     mx, my = d % 2 + 1, (d // 2) % 2 + 1
     w, h = 16 * mx - d % 12, 16 * my - d % 10
-    qy = [(d * 7 + j) % 31 + 1 for j in range(64)]
-    qc = [(d * 5 + j) % 29 + 1 for j in range(64)]
     nb_y = ((w + 7) // 8) * ((h + 7) // 8)
     cw, ch = (w + 1) // 2, (h + 1) // 2
     nb_c = ((cw + 7) // 8) * ((ch + 7) // 8)
-    comp_blocks = []
-    for ci, nb in ((0, nb_y), (1, nb_c), (2, nb_c)):
-        blocks = []
-        for b in range(nb):
-            blk = [0] * 64
-            blk[0] = (d + 11 * b + 7 * ci) % 61 - 30
-            nac = (d + b + ci) % 6 + 2
-            for i in range(1, nac + 1):
-                p = (5 * i + 3 * b + 2 * ci) % 63 + 1
-                raw = (d + 13 * b + 29 * i + 5 * ci) % 20 - 10
-                blk[p] = raw + 1 if raw >= 0 else raw
-            blocks.append(blk)
-        comp_blocks.append(blocks)
-    return comp_blocks, [(2, 2), (1, 1), (1, 1)], w, h, [qy, qc, qc], d % 3
+    comp_blocks = [
+        [_planted_block(d, b, ci) for b in range(nb)]
+        for ci, nb in ((0, nb_y), (1, nb_c), (2, nb_c))
+    ]
+    qts = [_luma_qtable(d), _chroma_qtable(d), _chroma_qtable(d)]
+    return comp_blocks, [(2, 2), (1, 1), (1, 1)], w, h, qts, d % 3
 
 
 def synthesize_jpeg_color_progressive_media(documents: DataFrame) -> DataFrame:
@@ -2122,69 +1547,13 @@ def synthesize_jpeg_color_progressive_media(documents: DataFrame) -> DataFrame:
     crops plant dummy-block geometries."""
     from .imagecodec import encode_jpeg_progressive_color
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                cb, samp, w, h, qts, ri = _jpeg_color_prog_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_progressive_color(
-                            cb, samp, w, h, qts, restart_interval=ri
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        cb, samp, w, h, qts, ri = _jpeg_color_prog_fixture(d)
+        return encode_jpeg_progressive_color(
+            cb, samp, w, h, qts, restart_interval=ri
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
-
-
-def jpeg_color_progressive_coef_stats(media: DataFrame) -> DataFrame:
-    """REAL color-progressive decode (via the SOF dispatcher): the
-    interleaved-DC / per-component-AC scan accumulation with dummy
-    blocks stripped; same per-(media, component) exact stats row as
-    the baseline color path."""
-    from .imagecodec import decode_jpeg
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg(bytes(payload), want_pixels=False)
-                for ci, comp in enumerate(out["components"]):
-                    nz = [
-                        (idx, v)
-                        for blk in comp["blocks"]
-                        for idx, v in enumerate(blk)
-                        if v != 0
-                    ]
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "width": out["width"],
-                            "height": out["height"],
-                            "component": ci,
-                            "n_blocks": len(comp["blocks"]),
-                            "n_nonzero": len(nz),
-                            "coef_sum": sum(v for _, v in nz),
-                            "coef_min": min(v for _, v in nz),
-                            "coef_max": max(v for _, v in nz),
-                            "dc_sum": sum(b[0] for b in comp["blocks"]),
-                            "posw_sum": sum(i * v for i, v in nz),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_COLOR_COEF_SCHEMA]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_COLOR_COEF_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 def _jpeg_cmyk_fixture(d: int):
@@ -2196,25 +1565,10 @@ def _jpeg_cmyk_fixture(d: int):
     component/table mixup in the 4-way interleaved walk."""
     wb, hb = d % 3 + 1, d % 2 + 1
     w, h = wb * 8 - d % 5, hb * 8 - d % 3
-    qts = []
-    for ci in range(4):
-        if ci == 0:
-            qts.append([(d * 7 + j) % 31 + 1 for j in range(64)])
-        else:
-            qts.append([(d * 5 + 7 * ci + j) % 29 + 1 for j in range(64)])
-    comp_blocks = []
-    for ci in range(4):
-        blocks = []
-        for b in range(wb * hb):
-            blk = [0] * 64
-            blk[0] = (d + 11 * b + 7 * ci) % 61 - 30
-            nac = (d + b + ci) % 6 + 2
-            for i in range(1, nac + 1):
-                p = (5 * i + 3 * b + 2 * ci) % 63 + 1
-                raw = (d + 13 * b + 29 * i + 5 * ci) % 20 - 10
-                blk[p] = raw + 1 if raw >= 0 else raw
-            blocks.append(blk)
-        comp_blocks.append(blocks)
+    qts = [_luma_qtable(d)] + [_chroma_qtable(d, 7 * ci) for ci in range(1, 4)]
+    comp_blocks = [
+        [_planted_block(d, b, ci) for b in range(wb * hb)] for ci in range(4)
+    ]
     return comp_blocks, w, h, qts, d % 3
 
 
@@ -2226,32 +1580,13 @@ def synthesize_jpeg_cmyk_media(documents: DataFrame) -> DataFrame:
     with per-component quant tables and DRI/RSTn restarts."""
     from .imagecodec import encode_jpeg_baseline_color
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                cb, w, h, qts, ri = _jpeg_cmyk_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_baseline_color(
-                            cb,
-                            [(1, 1)] * 4,
-                            w,
-                            h,
-                            qts,
-                            restart_interval=ri,
-                            adobe_transform=2,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        cb, w, h, qts, ri = _jpeg_cmyk_fixture(d)
+        return encode_jpeg_baseline_color(
+            cb, [(1, 1)] * 4, w, h, qts, restart_interval=ri, adobe_transform=2
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "jpeg", encode)
 
 
 JPEG_CHANNEL_PIXEL_SCHEMA = T.StructType(
@@ -2278,51 +1613,36 @@ def synthesize_jpeg_ycck_flat_media(documents: DataFrame) -> DataFrame:
     non-multiples of 8 so the crop stays on the oracle path."""
     from .imagecodec import encode_jpeg_baseline_color
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                wb, hb = d % 3 + 1, d % 2 + 1
-                w, h = wb * 8 - d % 5, hb * 8 - d % 3
-                qy = [8 * (d % 16 + 1)] + [
-                    (d + j) % 255 + 1 for j in range(1, 64)
-                ]
-                qk = [8 * ((d + 5) % 16 + 1)] + [
-                    (d + 3 * j) % 255 + 1 for j in range(1, 64)
-                ]
-                qc = [16] * 64
-                comp_blocks = []
-                for ci in range(4):
-                    blocks = []
-                    for b in range(wb * hb):
-                        blk = [0] * 64
-                        if ci == 0:
-                            blk[0] = (d + 11 * b) % 61 - 30
-                        elif ci == 3:
-                            blk[0] = (d + 13 * b + 7) % 61 - 30
-                        blocks.append(blk)
-                    comp_blocks.append(blocks)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "jpeg",
-                        "payload": encode_jpeg_baseline_color(
-                            comp_blocks,
-                            [(1, 1)] * 4,
-                            w,
-                            h,
-                            [qy, qc, qc, qk],
-                            restart_interval=d % 4,
-                            adobe_transform=2,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        wb, hb = d % 3 + 1, d % 2 + 1
+        qy = [8 * (d % 16 + 1)] + [(d + j) % 255 + 1 for j in range(1, 64)]
+        qk = [8 * ((d + 5) % 16 + 1)] + [
+            (d + 3 * j) % 255 + 1 for j in range(1, 64)
+        ]
+        qc = [16] * 64
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+        def block(ci, b):
+            blk = [0] * 64
+            if ci == 0:
+                blk[0] = (d + 11 * b) % 61 - 30
+            elif ci == 3:
+                blk[0] = (d + 13 * b + 7) % 61 - 30
+            return blk
+
+        comp_blocks = [
+            [block(ci, b) for b in range(wb * hb)] for ci in range(4)
+        ]
+        return encode_jpeg_baseline_color(
+            comp_blocks,
+            [(1, 1)] * 4,
+            wb * 8 - d % 5,
+            hb * 8 - d % 3,
+            [qy, qc, qc, qk],
+            restart_interval=d % 4,
+            adobe_transform=2,
+        )
+
+    return _codec_media(documents, "jpeg", encode)
 
 
 def jpeg_channel_pixel_stats(media: DataFrame) -> DataFrame:
@@ -2332,32 +1652,17 @@ def jpeg_channel_pixel_stats(media: DataFrame) -> DataFrame:
     integer stats row per (media, channel)."""
     from .imagecodec import decode_jpeg_baseline
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg_baseline(bytes(payload), want_pixels=True)
-                img = out["pixels"]
-                for ch in range(img.shape[-1]):
-                    plane = img[..., ch]
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "width": out["width"],
-                            "height": out["height"],
-                            "channel": ch,
-                            "n_pixels": int(plane.size),
-                            "pixel_sum": int(plane.sum(dtype="int64")),
-                            "pixel_min": int(plane.min()),
-                            "pixel_max": int(plane.max()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_CHANNEL_PIXEL_SCHEMA]
+    def stats(media_id, payload):
+        out = decode_jpeg_baseline(bytes(payload), want_pixels=True)
+        img = out["pixels"]
+        for ch in range(img.shape[-1]):
+            yield (
+                media_id, out["width"], out["height"], ch,
+                *_int_stats(img[..., ch]),
             )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_CHANNEL_PIXEL_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, JPEG_CHANNEL_PIXEL_SCHEMA
     )
 
 
@@ -2394,39 +1699,29 @@ def synthesize_gif_media(documents: DataFrame) -> DataFrame:
     ``operators/gifcodec.py``."""
     from .gifcodec import encode_gif
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, palette, idx = _gif_fixture(d)
-                local = d % 5 == 0
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "gif",
-                        "payload": encode_gif(
-                            idx,
-                            w,
-                            h,
-                            palette,
-                            interlace=d % 2 == 0,
-                            local_palette=local,
-                            global_palette=[(1, 2, 3), (4, 5, 6)],
-                            clear_every=(d % 4) * 16,
-                            comment=b"gif-plant" if d % 3 == 0 else None,
-                            loop=d % 7 == 0,
-                            version87=(
-                                d % 11 == 0 and d % 3 != 0 and d % 7 != 0
-                            ),
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        w, h, palette, idx = _gif_fixture(d)
+        return encode_gif(
+            idx,
+            w,
+            h,
+            palette,
+            interlace=d % 2 == 0,
+            local_palette=d % 5 == 0,
+            global_palette=[(1, 2, 3), (4, 5, 6)],
+            clear_every=(d % 4) * 16,
+            comment=b"gif-plant" if d % 3 == 0 else None,
+            loop=d % 7 == 0,
+            version87=(d % 11 == 0 and d % 3 != 0 and d % 7 != 0),
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "gif", encode)
+
+
+def _gif_rgb(frame):
+    """(n_pixels, 3) int64 RGB of one decoded GIF frame."""
+    pal = np.asarray(frame["palette"], dtype=np.int64)
+    return pal[np.asarray(frame["indices"], dtype=np.int64)]
 
 
 def gif_pixel_stats(media: DataFrame) -> DataFrame:
@@ -2434,38 +1729,16 @@ def gif_pixel_stats(media: DataFrame) -> DataFrame:
     widths, clear resets, KwKwK), de-interlacing, and color-table
     selection (local beats global) per payload; one exact integer
     stats row per (media, channel)."""
-    import numpy as np
-
     from .gifcodec import decode_gif
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                g = decode_gif(bytes(payload))
-                fr = g["frames"][0]
-                pal = np.asarray(fr["palette"], dtype=np.int64)
-                rgb = pal[np.asarray(fr["indices"], dtype=np.int64)]
-                for ch in range(3):
-                    plane = rgb[:, ch]
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "width": g["width"],
-                            "height": g["height"],
-                            "channel": ch,
-                            "n_pixels": int(plane.size),
-                            "pixel_sum": int(plane.sum()),
-                            "pixel_min": int(plane.min()),
-                            "pixel_max": int(plane.max()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_CHANNEL_PIXEL_SCHEMA]
-            )
+    def stats(media_id, payload):
+        g = decode_gif(bytes(payload))
+        rgb = _gif_rgb(g["frames"][0])
+        for ch in range(3):
+            yield (media_id, g["width"], g["height"], ch, *_int_stats(rgb[:, ch]))
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_CHANNEL_PIXEL_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, JPEG_CHANNEL_PIXEL_SCHEMA
     )
 
 
@@ -2490,82 +1763,44 @@ def synthesize_gif_animation_media(documents: DataFrame) -> DataFrame:
     per-frame interlace choice, all through the real LZW coder."""
     from .gifcodec import encode_gif_animation
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, palette, _ = _gif_fixture(d)
-                nc = len(palette)
-                frames = []
-                for f in range(d % 4 + 2):
-                    frames.append(
-                        {
-                            "indices": [
-                                (d + 17 * f + 3 * x + 5 * y) % nc
-                                for y in range(h)
-                                for x in range(w)
-                            ],
-                            "interlace": (d + f) % 2 == 0,
-                            "delay_cs": 4 * f + 1,
-                            "disposal": f % 4,
-                        }
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "gif",
-                        "payload": encode_gif_animation(
-                            frames, w, h, palette, loop=True
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        w, h, palette, _ = _gif_fixture(d)
+        nc = len(palette)
+        frames = [
+            {
+                "indices": [
+                    (d + 17 * f + 3 * x + 5 * y) % nc
+                    for y in range(h)
+                    for x in range(w)
+                ],
+                "interlace": (d + f) % 2 == 0,
+                "delay_cs": 4 * f + 1,
+                "disposal": f % 4,
+            }
+            for f in range(d % 4 + 2)
+        ]
+        return encode_gif_animation(frames, w, h, palette, loop=True)
 
-    # explicit partition count for the same AQE-coalescing reason as
-    # synthesize_flac_media: per-row LZW work, not bytes, is the load.
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "gif", encode)
 
 
 def gif_frame_stats(media: DataFrame) -> DataFrame:
     """Animated-GIF decode: every frame independently LZW-decoded and
     de-interlaced, graphic-control metadata (delay, disposal) carried
     through; one stats row per (media, frame, channel)."""
-    import numpy as np
-
     from .gifcodec import decode_gif
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                g = decode_gif(bytes(payload))
-                for fi, fr in enumerate(g["frames"]):
-                    pal = np.asarray(fr["palette"], dtype=np.int64)
-                    rgb = pal[np.asarray(fr["indices"], dtype=np.int64)]
-                    for ch in range(3):
-                        plane = rgb[:, ch]
-                        rows.append(
-                            {
-                                "media_id": int(media_id),
-                                "frame": fi,
-                                "channel": ch,
-                                "delay_cs": fr["delay_cs"],
-                                "disposal": fr["disposal"],
-                                "n_pixels": int(plane.size),
-                                "pixel_sum": int(plane.sum()),
-                                "pixel_min": int(plane.min()),
-                                "pixel_max": int(plane.max()),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_FRAME_STATS_SCHEMA]
-            )
+    def stats(media_id, payload):
+        for fi, fr in enumerate(decode_gif(bytes(payload))["frames"]):
+            rgb = _gif_rgb(fr)
+            for ch in range(3):
+                yield (
+                    media_id, fi, ch, fr["delay_cs"], fr["disposal"],
+                    *_int_stats(rgb[:, ch]),
+                )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=GIF_FRAME_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, GIF_FRAME_STATS_SCHEMA
     )
 
 
@@ -2596,25 +1831,21 @@ def synthesize_g711_media(documents: DataFrame) -> DataFrame:
     with >= 256 samples covers all 256 code points of its law."""
     from .avcodec import encode_wav_g711
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 400 + 40
-                payload = bytes((d * 7 + 31 * i) % 256 for i in range(n))
-                law = "ulaw" if d % 2 == 0 else "alaw"
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "wav",
-                        "payload": encode_wav_g711(payload, 8000, 1, law),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        payload = bytes((d * 7 + 31 * i) % 256 for i in range(d % 400 + 40))
+        return encode_wav_g711(payload, 8000, 1, "ulaw" if d % 2 == 0 else "alaw")
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
+    return _codec_media(documents, "wav", encode)
+
+
+def _signal_stats(v, posw_mod: int) -> tuple:
+    """(n, sum, min, max, abs_sum, posw_sum) of an int64 sample array;
+    ``posw_sum`` weights sample i by i % posw_mod to pin sample order."""
+    i = np.arange(v.size, dtype=np.int64)
+    return (
+        *_int_stats(v),
+        int(np.abs(v).sum()),
+        int((v * (i % posw_mod)).sum()),
     )
 
 
@@ -2623,36 +1854,17 @@ def g711_audio_stats(media: DataFrame) -> DataFrame:
     chunk and expands every byte through the matching compander; one
     exact integer stats row per media (positional weighted sum pins
     sample order, abs-sum pins sign handling)."""
-    import numpy as np
-
     from .avcodec import decode_wav
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, hdr = decode_wav(bytes(payload))
-                v = samples.astype(np.int64)
-                i = np.arange(v.size, dtype=np.int64)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "audio_format": hdr["audio_format"],
-                        "sample_rate": hdr["sample_rate"],
-                        "n_samples": int(v.size),
-                        "linear_sum": int(v.sum()),
-                        "linear_min": int(v.min()),
-                        "linear_max": int(v.max()),
-                        "abs_sum": int(np.abs(v).sum()),
-                        "posw_sum": int((v * (i % 17)).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in G711_STATS_SCHEMA]
-            )
+    def stats(media_id, payload):
+        samples, hdr = decode_wav(bytes(payload))
+        yield (
+            media_id, hdr["audio_format"], hdr["sample_rate"],
+            *_signal_stats(samples.astype(np.int64), 17),
+        )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=G711_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, G711_STATS_SCHEMA
     )
 
 
@@ -2714,44 +1926,25 @@ def synthesize_flac_media(documents: DataFrame) -> DataFrame:
     and auto-detected CONSTANT, escape partitions on d%7 docs, wasted
     bits on d%11 docs, and the stereo docs rotate through all four
     channel-decorrelation modes; CRC-8/CRC-16 and the STREAMINFO MD5
-    are live on every file."""
+    are live on every file. Each doc fans out into a full Rice encode
+    + decode, so the doc_id spread (see the module docstring) is what
+    keeps the codec stages from collapsing onto one task."""
     from .flaccodec import encode_flac
 
     modes = ("independent", "left_side", "right_side", "mid_side")
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                chans = _flac_fixture(d)
-                mode = modes[d % 4] if len(chans) == 2 else "independent"
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "flac",
-                        "payload": encode_flac(
-                            chans,
-                            channel_mode=mode,
-                            subframe_plan=lambda f, c, d=d: (
-                                None
-                                if (f + c + d) % 6 == 0
-                                else (f + c + d) % 6 - 1
-                            ),
-                            escape_first=(d % 7 == 0),
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        chans = _flac_fixture(d)
+        return encode_flac(
+            chans,
+            channel_mode=modes[d % 4] if len(chans) == 2 else "independent",
+            subframe_plan=lambda f, c: (
+                None if (f + c + d) % 6 == 0 else (f + c + d) % 6 - 1
+            ),
+            escape_first=(d % 7 == 0),
+        )
 
-    # explicit partition count: AQE sizes coalescing by shuffle BYTES,
-    # and a few MB of doc_ids would collapse onto one task — but each
-    # row fans out into a full Rice encode + decode downstream, so the
-    # Python codec stages need the row-count spread, not byte spread
-    # (same reasoning as similarity._prep_vectors).
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "flac", encode)
 
 
 def flac_sample_stats(media: DataFrame) -> DataFrame:
@@ -2761,38 +1954,18 @@ def flac_sample_stats(media: DataFrame) -> DataFrame:
     de-decorrelation, CRC-16 and STREAMINFO-MD5 verification — any
     mismatch raises rather than mis-decoding); one exact integer
     stats row per (media, channel)."""
-    import numpy as np
-
     from .flaccodec import decode_flac
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_flac(bytes(payload))
-                for ch, samples in enumerate(out["samples"]):
-                    v = np.asarray(samples, dtype=np.int64)
-                    i = np.arange(v.size, dtype=np.int64)
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "channel": ch,
-                            "sample_rate": out["sample_rate"],
-                            "n_channels": out["channels"],
-                            "n_samples": int(v.size),
-                            "sample_sum": int(v.sum()),
-                            "sample_min": int(v.min()),
-                            "sample_max": int(v.max()),
-                            "abs_sum": int(np.abs(v).sum()),
-                            "posw_sum": int((v * (i % 31)).sum()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FLAC_STATS_SCHEMA]
+    def stats(media_id, payload):
+        out = decode_flac(bytes(payload))
+        for ch, samples in enumerate(out["samples"]):
+            yield (
+                media_id, ch, out["sample_rate"], out["channels"],
+                *_signal_stats(np.asarray(samples, dtype=np.int64), 31),
             )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=FLAC_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, FLAC_STATS_SCHEMA
     )
 
 
@@ -2843,31 +2016,18 @@ def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
     StripByteCounts arrays, PackBits RLE on every third doc."""
     from .tiffcodec import encode_tiff
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, rps, px = _tiff_fixture(d)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "tiff",
-                        "payload": encode_tiff(
-                            px,
-                            w,
-                            h,
-                            big_endian=d % 2 == 0,
-                            packbits=d % 3 == 0,
-                            rows_per_strip=rps,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        w, h, rps, px = _tiff_fixture(d)
+        return encode_tiff(
+            px,
+            w,
+            h,
+            big_endian=d % 2 == 0,
+            packbits=d % 3 == 0,
+            rows_per_strip=rps,
+        )
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "tiff", encode)
 
 
 def tiff_pixel_stats(media: DataFrame) -> DataFrame:
@@ -2876,31 +2036,16 @@ def tiff_pixel_stats(media: DataFrame) -> DataFrame:
     stats row per media."""
     from .tiffcodec import decode_tiff
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_tiff(bytes(payload))
-                px = out["pixels"]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "width": out["width"],
-                        "height": out["height"],
-                        "compression": out["compression"],
-                        "n_strips": out["n_strips"],
-                        "n_pixels": len(px),
-                        "pixel_sum": sum(px),
-                        "pixel_min": min(px),
-                        "pixel_max": max(px),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_STATS_SCHEMA]
-            )
+    def stats(media_id, payload):
+        out = decode_tiff(bytes(payload))
+        yield (
+            media_id, out["width"], out["height"], out["compression"],
+            out["n_strips"],
+            *_int_stats(np.asarray(out["pixels"], dtype=np.int64)),
+        )
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=TIFF_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, TIFF_STATS_SCHEMA
     )
 
 
@@ -2929,30 +2074,12 @@ def synthesize_adpcm_media(documents: DataFrame) -> DataFrame:
     recursive CTE."""
     from .avcodec import encode_wav_ima
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 600 + 50
-                nibs = (
-                    (d * 3 + 5 * j + (j * j) % 11) % 16 for j in range(n)
-                )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "wav",
-                        "payload": encode_wav_ima(
-                            nibs, d % 2001 - 1000, d % 89, n,
-                            block_align=36,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def encode(d):
+        n = d % 600 + 50
+        nibs = ((d * 3 + 5 * j + (j * j) % 11) % 16 for j in range(n))
+        return encode_wav_ima(nibs, d % 2001 - 1000, d % 89, n, block_align=36)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "wav", encode)
 
 
 def adpcm_sample_stats(media: DataFrame) -> DataFrame:
@@ -2961,30 +2088,14 @@ def adpcm_sample_stats(media: DataFrame) -> DataFrame:
     sample cap; one exact integer stats row per media."""
     from .avcodec import decode_wav_ima
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, hdr = decode_wav_ima(bytes(payload))
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "sample_rate": hdr["sample_rate"],
-                        "n_samples": len(samples),
-                        "sample_sum": sum(samples),
-                        "sample_min": min(samples),
-                        "sample_max": max(samples),
-                        "posw_sum": sum(
-                            v * (i % 29) for i, v in enumerate(samples)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ADPCM_STATS_SCHEMA]
-            )
+    def stats(media_id, payload):
+        samples, hdr = decode_wav_ima(bytes(payload))
+        v = np.asarray(samples, dtype=np.int64)
+        n, total, lo, hi, _, posw = _signal_stats(v, 29)
+        yield media_id, hdr["sample_rate"], n, total, lo, hi, posw
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=ADPCM_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, ADPCM_STATS_SCHEMA
     )
 
 
@@ -3022,27 +2133,17 @@ def synthesize_archive_media(documents: DataFrame) -> DataFrame:
     operators/archivecodec.py."""
     from .archivecodec import write_tar, write_zip
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                members = [
-                    (f"part-{m}.bin", _archive_member(d, m))
-                    for m in range(d % 4 + 1)
-                ]
-                payload = (
-                    write_zip(members) if d % 2 == 0 else write_tar(members)
-                )
-                rows.append(
-                    {"media_id": d, "codec": "zip" if d % 2 == 0 else "tar",
-                     "payload": payload}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def render(doc_id):
+        d = int(doc_id)
+        members = [
+            (f"part-{m}.bin", _archive_member(d, m)) for m in range(d % 4 + 1)
+        ]
+        if d % 2 == 0:
+            yield d, "zip", write_zip(members)
+        else:
+            yield d, "tar", write_tar(members)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return map_rows(_doc_ids(documents), render, IMAGE_MEDIA_SCHEMA)
 
 
 def archive_member_stats(media: DataFrame) -> DataFrame:
@@ -3051,34 +2152,13 @@ def archive_member_stats(media: DataFrame) -> DataFrame:
     integer stats row per (media, member)."""
     from .archivecodec import read_tar, read_zip
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["codec"], pdf["payload"]
-            ):
-                members = (
-                    read_zip(bytes(payload))
-                    if kind == "zip"
-                    else read_tar(bytes(payload))
-                )
-                for m, (name, raw) in enumerate(members):
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "kind": kind,
-                            "member": m,
-                            "name": name,
-                            "n_bytes": len(raw),
-                            "byte_sum": sum(raw),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ARCHIVE_STATS_SCHEMA]
-            )
+    def stats(media_id, kind, payload):
+        read = read_zip if kind == "zip" else read_tar
+        for m, (name, raw) in enumerate(read(bytes(payload))):
+            yield media_id, kind, m, name, len(raw), sum(raw)
 
-    return media.select("media_id", "codec", "payload").mapInPandas(
-        stats, schema=ARCHIVE_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "codec", "payload"), stats, ARCHIVE_STATS_SCHEMA
     )
 
 
@@ -3111,55 +2191,40 @@ def synthesize_warc_media(documents: DataFrame) -> DataFrame:
     on even docs and plain concatenation on odd ones."""
     from .warccodec import http_response, write_warc
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                recs = [
-                    (
-                        "warcinfo",
-                        {"WARC-Record-ID": f"<urn:uuid:{d}-info>"},
-                        b"software: spark-graft-fixture\r\n",
-                    )
-                ]
-                for m in range(d % 3 + 1):
-                    uri = f"http://example.com/{d}/{m}"
-                    recs.append(
-                        (
-                            "request",
-                            {"WARC-Target-URI": uri,
-                             "WARC-Record-ID": f"<urn:uuid:{d}-{m}-q>"},
-                            b"GET / HTTP/1.1\r\nHost: example.com\r\n\r\n",
-                        )
-                    )
-                    recs.append(
-                        (
-                            "response",
-                            {"WARC-Target-URI": uri,
-                             "WARC-Record-ID": f"<urn:uuid:{d}-{m}-r>"},
-                            http_response(
-                                200,
-                                "OK",
-                                {"Content-Type": "text/plain"},
-                                _warc_body(d, m),
-                            ),
-                        )
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": "warc",
-                        "payload": write_warc(
-                            recs, gzip_per_record=d % 2 == 0
-                        ),
-                    }
+    def encode(d):
+        recs = [
+            (
+                "warcinfo",
+                {"WARC-Record-ID": f"<urn:uuid:{d}-info>"},
+                b"software: spark-graft-fixture\r\n",
+            )
+        ]
+        for m in range(d % 3 + 1):
+            uri = f"http://example.com/{d}/{m}"
+            recs.append(
+                (
+                    "request",
+                    {"WARC-Target-URI": uri,
+                     "WARC-Record-ID": f"<urn:uuid:{d}-{m}-q>"},
+                    b"GET / HTTP/1.1\r\nHost: example.com\r\n\r\n",
                 )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+            )
+            recs.append(
+                (
+                    "response",
+                    {"WARC-Target-URI": uri,
+                     "WARC-Record-ID": f"<urn:uuid:{d}-{m}-r>"},
+                    http_response(
+                        200,
+                        "OK",
+                        {"Content-Type": "text/plain"},
+                        _warc_body(d, m),
+                    ),
+                )
+            )
+        return write_warc(recs, gzip_per_record=d % 2 == 0)
 
-    return _spread_doc_ids(documents).mapInPandas(
-        render, schema=IMAGE_MEDIA_SCHEMA
-    )
+    return _codec_media(documents, "warc", encode)
 
 
 def warc_response_stats(media: DataFrame) -> DataFrame:
@@ -3168,36 +2233,17 @@ def warc_response_stats(media: DataFrame) -> DataFrame:
     (media, response record) — the web-corpus ingestion front door."""
     from .warccodec import parse_http_response, read_warc
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                gz = raw[:2] == b"\x1f\x8b"
-                responses = [
-                    r for r in read_warc(raw) if r["type"] == "response"
-                ]
-                for m, rec in enumerate(responses):
-                    h = parse_http_response(rec["block"])
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "record": m,
-                            "target_uri": rec["headers"][
-                                "WARC-Target-URI"
-                            ],
-                            "status": h["status"],
-                            "gzipped": gz,
-                            "n_bytes": len(h["body"]),
-                            "char_sum": sum(h["body"]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_STATS_SCHEMA]
-            )
+    def stats(media_id, payload):
+        raw = bytes(payload)
+        gz = raw[:2] == b"\x1f\x8b"
+        responses = [r for r in read_warc(raw) if r["type"] == "response"]
+        for m, rec in enumerate(responses):
+            h = parse_http_response(rec["block"])
+            uri = rec["headers"]["WARC-Target-URI"]
+            yield media_id, m, uri, h["status"], gz, len(h["body"]), sum(h["body"])
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=WARC_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, WARC_STATS_SCHEMA
     )
 
 
@@ -3225,38 +2271,20 @@ def jpeg_dc_thumbnail_stats(media: DataFrame) -> DataFrame:
     block-order positional pin."""
     from .imagecodec import decode_jpeg_progressive
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = decode_jpeg_progressive(
-                    bytes(payload), want_pixels=False, dc_only=True
-                )
-                comp = out["components"][0]
-                px = [
-                    min(255, max(0, (blk[0] // 8) + 128))
-                    for blk in comp["blocks"]
-                ]
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "thumb_w": (out["width"] + 7) // 8,
-                        "thumb_h": (out["height"] + 7) // 8,
-                        "n_pixels": len(px),
-                        "pixel_sum": sum(px),
-                        "pixel_min": min(px),
-                        "pixel_max": max(px),
-                        "posw_sum": sum(
-                            v * (b % 13) for b, v in enumerate(px)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_THUMB_SCHEMA]
-            )
+    def stats(media_id, payload):
+        out = decode_jpeg_progressive(
+            bytes(payload), want_pixels=False, dc_only=True
+        )
+        dc = np.asarray(
+            [blk[0] for blk in out["components"][0]["blocks"]], dtype=np.int64
+        )
+        px = np.clip(dc // 8 + 128, 0, 255)
+        n, total, lo, hi, _, posw = _signal_stats(px, 13)
+        thumb_w, thumb_h = (out["width"] + 7) // 8, (out["height"] + 7) // 8
+        yield media_id, thumb_w, thumb_h, n, total, lo, hi, posw
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, schema=JPEG_THUMB_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), stats, JPEG_THUMB_SCHEMA
     )
 
 
@@ -3278,7 +2306,9 @@ def synthesize_compressed_text_media(documents: DataFrame) -> DataFrame:
     """Corpus-mirror fixture: each doc's real text compressed with
     the stdlib codecs corpora actually ship in — gzip (Common Crawl),
     bz2 (Wikipedia dumps), xz/LZMA (many mirrors) — cycling by
-    doc_id."""
+    doc_id. Unlike the doc_id-proxy renders, this stage consumes the
+    TEXT column, which is why the spread must stay conditional: at
+    scale a many-split scan already spreads the corpus."""
     import bz2
     import gzip
     import lzma
@@ -3289,32 +2319,13 @@ def synthesize_compressed_text_media(documents: DataFrame) -> DataFrame:
         ("xz", lzma.compress),
     )
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                name, fn = coders[d % 3]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "codec": name,
-                        "payload": fn(str(text).encode("utf-8")),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "codec", "payload"])
+    def render(doc_id, text):
+        d = int(doc_id)
+        name, compress = coders[d % 3]
+        yield d, name, compress(str(text).encode("utf-8"))
 
-    # Unlike the doc_id-proxy renders, this stage consumes the TEXT
-    # column, so an unconditional repartition would re-shuffle the
-    # whole corpus at scale (where a many-split scan already spreads
-    # it). Spread only when the scan arrives narrower than the
-    # cluster — the local single-split case where the compress+decode
-    # chain would otherwise run one-task.
-    src = documents.select("doc_id", "text")
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par, "doc_id")
-    return src.mapInPandas(render, schema=IMAGE_MEDIA_SCHEMA)
+    src = spread_if_narrow(documents.select("doc_id", "text"), "doc_id")
+    return map_rows(src, render, IMAGE_MEDIA_SCHEMA)
 
 
 def compressed_text_stats(media: DataFrame) -> DataFrame:
@@ -3326,48 +2337,30 @@ def compressed_text_stats(media: DataFrame) -> DataFrame:
     import gzip
     import lzma
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, label, payload in zip(
-                pdf["media_id"], pdf["codec"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                if raw[:2] == b"\x1f\x8b":
-                    sniffed, text = "gzip", gzip.decompress(raw)
-                elif raw[:3] == b"BZh":
-                    sniffed, text = "bz2", bz2.decompress(raw)
-                elif raw[:6] == b"\xfd7zXZ\x00":
-                    sniffed, text = "xz", lzma.decompress(raw)
-                else:
-                    raise ValueError(
-                        f"media {media_id}: unknown compression magic "
-                        f"{raw[:6]!r}"
-                    )
-                if sniffed != label:
-                    raise ValueError(
-                        f"media {media_id}: payload magic {sniffed} != "
-                        f"label {label}"
-                    )
-                import hashlib as _hl
-
-                s = text.decode("utf-8")
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "codec": sniffed,
-                        "n_chars": len(s),
-                        # md5 of the decompressed bytes == oracle-side
-                        # md5(text): every decompressed byte is on the
-                        # hash path (compressed sizes are library-
-                        # version-dependent and stay out of the oracle)
-                        "text_md5": _hl.md5(text).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in COMPRESSED_TEXT_SCHEMA]
+    def stats(media_id, label, payload):
+        raw = bytes(payload)
+        if raw[:2] == b"\x1f\x8b":
+            sniffed, text = "gzip", gzip.decompress(raw)
+        elif raw[:3] == b"BZh":
+            sniffed, text = "bz2", bz2.decompress(raw)
+        elif raw[:6] == b"\xfd7zXZ\x00":
+            sniffed, text = "xz", lzma.decompress(raw)
+        else:
+            raise ValueError(
+                f"media {media_id}: unknown compression magic {raw[:6]!r}"
             )
+        if sniffed != label:
+            raise ValueError(
+                f"media {media_id}: payload magic {sniffed} != label {label}"
+            )
+        # md5 of the decompressed bytes == oracle-side md5(text): every
+        # decompressed byte is on the hash path (compressed sizes are
+        # library-version-dependent and stay out of the oracle)
+        n_chars = len(text.decode("utf-8"))
+        yield media_id, sniffed, n_chars, hashlib.md5(text).hexdigest()
 
-    return media.select("media_id", "codec", "payload").mapInPandas(
-        stats, schema=COMPRESSED_TEXT_SCHEMA
+    return map_rows(
+        media.select("media_id", "codec", "payload"),
+        stats,
+        COMPRESSED_TEXT_SCHEMA,
     )

@@ -7,8 +7,9 @@ over the corpus, what naive `LIKE` stacks or per-pattern regexes do)
 is O(patterns × corpus) and dead on arrival; token-join matching only
 handles whole-token patterns. Aho-Corasick builds one automaton over
 ALL patterns (size ∝ total pattern length), broadcasts it once per
-executor inside the mapInPandas closure, and scans each document in a
-single pass — O(corpus + matches), independent of pattern count.
+executor inside the per-row ``map_rows`` closure, and scans each
+document in a single pass — O(corpus + matches), independent of
+pattern count.
 
 Match semantics: ALL occurrences are reported, including overlapping
 occurrences of different patterns and patterns nested inside longer
@@ -27,11 +28,12 @@ extensions — corpus hygiene/blocklist filtering).
 from __future__ import annotations
 
 from collections import deque
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .multimodal import map_rows
 
 
 def build_aho_corasick(patterns: Sequence[str]):
@@ -108,26 +110,11 @@ def multipattern_scan(documents: DataFrame, patterns: Sequence[str]) -> DataFram
     goto, fail, out = build_aho_corasick(patterns)
     n = len(patterns)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, source, text in zip(
-                pdf["doc_id"], pdf["source"], pdf["text"]
-            ):
-                counts = scan_counts(text or "", goto, fail, out, n)
-                for pid, c in enumerate(counts):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "source": source,
-                            "pattern": patterns[pid],
-                            "n_matches": c,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "source", "pattern", "n_matches"]
-            )
+    def scan(doc_id, source, text):
+        counts = scan_counts(text or "", goto, fail, out, n)
+        for pid, c in enumerate(counts):
+            yield int(doc_id), source, patterns[pid], c
 
-    return documents.select("doc_id", "source", "text").mapInPandas(
-        scan, schema=MULTIPATTERN_SCHEMA
+    return map_rows(
+        documents.select("doc_id", "source", "text"), scan, MULTIPATTERN_SCHEMA
     )

@@ -1317,14 +1317,14 @@ def multimodal_jpeg_progressive_decode(
     this registers the IDENTICAL oracle as the baseline query and
     must produce the identical hash."""
     from ..operators.multimodal import (
-        jpeg_progressive_coef_stats,
+        jpeg_coef_stats,
         synthesize_jpeg_progressive_media,
     )
 
     media = synthesize_jpeg_progressive_media(
         load_table(spark, sf_dir, "documents")
     )
-    return jpeg_progressive_coef_stats(media)
+    return jpeg_coef_stats(media)
 
 
 # Color progressive: REAL-grid block counts are ceil-division
@@ -1407,14 +1407,14 @@ def multimodal_jpeg_color_progressive(
     per-(media, component) exact coefficient stats hash-checked
     against the closed-form plant."""
     from ..operators.multimodal import (
-        jpeg_color_progressive_coef_stats,
+        jpeg_color_coef_stats,
         synthesize_jpeg_color_progressive_media,
     )
 
     media = synthesize_jpeg_color_progressive_media(
         load_table(spark, sf_dir, "documents")
     )
-    return jpeg_color_progressive_coef_stats(media)
+    return jpeg_color_coef_stats(media)
 
 
 # 4-component (Adobe YCCK/CMYK) baseline: 1x1 sampling on all four

@@ -1,6 +1,6 @@
 """Streaming sources.
 
-Three interchangeable sources behind one shape (the reference's own
+Two interchangeable sources behind one shape (the reference's own
 pattern: its ``main()`` swaps the Kafka source for a rate source
 without touching any downstream operator — reference
 ``ecommerce_streaming.py:170-186``):
@@ -15,8 +15,6 @@ without touching any downstream operator — reference
   (ecommerce_streaming.py:176-183), re-expressed as a pure transform
   usable on ANY (timestamp, value) input — batch range() for tests,
   rate stream for soak runs.
-- **File (JSON-lines)** — replayable micro-batches for deterministic
-  streaming tests (one file per micro-batch with maxFilesPerTrigger=1).
 
 Kafka transport caveat
 ----------------------
@@ -40,7 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Option parity with the reference Kafka reader (ecommerce_streaming.py:43-51).
 KAFKA_READER_DEFAULTS = {
@@ -160,17 +157,3 @@ def read_rate_orders(spark: SparkSession, rows_per_second: int = 10) -> DataFram
         .load()
     )
     return synthesize_orders(rate).withWatermark("event_timestamp", "30 seconds")
-
-
-def read_json_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """JSON-lines file stream — deterministic micro-batch replay (one
-    file per trigger by default, in file modification-time order)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)

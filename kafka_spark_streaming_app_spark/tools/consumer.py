@@ -3,10 +3,10 @@
 partition/offset/payload per message, lists available topics when the
 read comes back empty; reference kafka_consumer_test.py:12-63).
 
-Two transports, mirroring ``tools/producer.py``:
+Two transports:
 
-- **kafka** (when kafka-python is installed): a real consumer with the
-  reference's read loop, plus the generic SASL/TLS passthrough.
+- **wire**: the engine's own Kafka wire client
+  (``consume_sample_wire``), with the reference's group semantics.
 - **file**: replays a JSON-lines wire directory (what
   ``produce_to_files`` writes and the engine's file stream reads) —
   the broker-less path, so the smoke-test SHAPE is testable here.
@@ -52,51 +52,6 @@ def consume_sample_files(wire_dir: str, max_messages: int = 10) -> dict:
         "empty": not messages,
         "available": files if not messages else [],
     }
-
-
-def consume_sample_kafka(
-    bootstrap_servers: str,
-    topic: str = "ecommerce-orders",
-    max_messages: int = 10,
-    timeout_ms: int = 5000,
-    security: dict | None = None,
-) -> dict:
-    """Reference consumer smoke test over a real broker: subscribe at
-    earliest, poll up to ``max_messages``, and on an empty read list
-    the cluster's topics (the reference's troubleshooting behavior).
-    ``security`` takes kafka-python client kwargs (see
-    ``tools.producer.producer_client_config``)."""
-    try:
-        from kafka import KafkaConsumer
-    except ImportError as exc:  # pragma: no cover - env without the client
-        raise RuntimeError(
-            "kafka-python is not installed; use consume_sample_files for "
-            "the broker-less path"
-        ) from exc
-    consumer = KafkaConsumer(
-        topic,
-        bootstrap_servers=bootstrap_servers,
-        auto_offset_reset="earliest",
-        consumer_timeout_ms=timeout_ms,
-        value_deserializer=lambda b: json.loads(b.decode()),
-        **(security or {}),
-    )
-    messages = []
-    try:
-        for msg in consumer:
-            messages.append(
-                {
-                    "partition": msg.partition,
-                    "offset": msg.offset,
-                    "value": msg.value,
-                }
-            )
-            if len(messages) >= max_messages:
-                break
-        available = sorted(consumer.topics()) if not messages else []
-    finally:
-        consumer.close()
-    return {"messages": messages, "empty": not messages, "available": available}
 
 
 def consume_sample_wire(

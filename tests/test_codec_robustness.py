@@ -208,3 +208,63 @@ def test_record_batch_v2_roundtrip(messages, compression, base):
     assert dec == [
         (base + i, k, v) for i, (k, v) in enumerate(messages)
     ]
+
+
+def _gray_jpeg(restart_interval=0):
+    from kafka_spark_streaming_app_spark.operators.imagecodec import (
+        encode_jpeg_baseline,
+    )
+
+    blocks = []
+    for b in range(6):
+        blk = [0] * 64
+        blk[0] = 7 * b - 20
+        blk[1 + b] = b + 1
+        blocks.append(blk)
+    return encode_jpeg_baseline(
+        blocks, 24, 16, list(range(1, 65)), restart_interval=restart_interval
+    )
+
+
+def test_restart_marker_without_dri_raises():
+    """An RSTn spliced into a DRI-0 scan is malformed; the decoder must
+    refuse it instead of decoding straight across the marker."""
+    from kafka_spark_streaming_app_spark.operators.imagecodec import (
+        decode_jpeg_baseline,
+    )
+
+    data = _gray_jpeg()
+    assert b"\xff\xdd" not in data
+    decode_jpeg_baseline(data, want_pixels=False)  # the clean file decodes
+    sos = data.index(b"\xff\xda")
+    scan = sos + 2 + int.from_bytes(data[sos + 2 : sos + 4], "big")
+    cut = next(
+        i for i in range(scan + 1, len(data) - 2)
+        if data[i - 1] != 0xFF and data[i] != 0xFF
+    )
+    with pytest.raises(ValueError, match="restart marker"):
+        decode_jpeg_baseline(data[:cut] + b"\xff\xd0" + data[cut:])
+
+
+def test_huffman_lut_caches_stay_bounded():
+    """Each file below carries a distinct DC table (one extra, unused
+    16-bit code), so a per-file-table corpus larger than the cap must
+    still leave both LUT caches at or below it, and decode correctly."""
+    from kafka_spark_streaming_app_spark.operators import imagecodec
+
+    data = _gray_jpeg()
+    want = imagecodec.decode_jpeg_baseline(data, want_pixels=False)["blocks"]
+    dht = data.index(b"\xff\xc4")  # the DC table comes first
+    seglen = int.from_bytes(data[dht + 2 : dht + 4], "big")
+    body = bytearray(data[dht + 4 : dht + 2 + seglen])
+    body[16] += 1  # BITS[16]: one more 16-bit code, after every used one
+    for k in range(imagecodec._HUFF_CACHE_MAX + 20):
+        seg = bytes(body) + bytes([k])
+        jpeg = (
+            data[:dht] + b"\xff\xc4" + (len(seg) + 2).to_bytes(2, "big")
+            + seg + data[dht + 2 + seglen :]
+        )
+        got = imagecodec.decode_jpeg_baseline(jpeg, want_pixels=False)
+        assert got["blocks"] == want
+        assert len(imagecodec._HUFF_SEG_CACHE) <= imagecodec._HUFF_CACHE_MAX
+        assert len(imagecodec._HUFF_LUT_CACHE) <= imagecodec._HUFF_CACHE_MAX

@@ -373,6 +373,43 @@ def test_codec_synth_stages_on_empty_corpus(spark):
         assert len(out.schema) >= 5
 
 
+def test_map_rows_on_empty_and_row_expanding_inputs(spark):
+    """map_rows, the per-row stage every codec runs through: an empty
+    input gives zero rows with the schema's columns, and a
+    row-expanding fn yielding 0, 1 or 3 rows per input (as tuples in
+    field order or as dicts keyed by field name) gives exactly those
+    rows."""
+    from kafka_spark_streaming_app_spark.operators.multimodal import (
+        map_rows,
+    )
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("k", T.IntegerType()),
+        T.StructField("tag", T.StringType()),
+    ])
+
+    def expand(id_, n, tag):
+        for k in range(n):
+            yield id_, k, tag
+
+    def as_dict(id_, n, tag):
+        yield {"tag": tag * n, "k": n, "id": id_}
+
+    empty = spark.createDataFrame([], "id bigint, n int, tag string")
+    out = map_rows(empty, expand, schema)
+    assert out.columns == ["id", "k", "tag"]
+    assert out.count() == 0
+
+    src = spark.createDataFrame(
+        [(1, 0, "a"), (2, 1, "b"), (3, 3, "c")], "id bigint, n int, tag string"
+    )
+    rows = sorted(tuple(r) for r in map_rows(src, expand, schema).collect())
+    assert rows == [(2, 0, "b"), (3, 0, "c"), (3, 1, "c"), (3, 2, "c")]
+    rows = sorted(tuple(r) for r in map_rows(src, as_dict, schema).collect())
+    assert rows == [(1, 0, ""), (2, 1, "b"), (3, 3, "ccc")]
+
+
 def test_jaro_winkler_col_on_empty_frame(spark):
     from kafka_spark_streaming_app_spark.operators.text import (
         jaro_winkler_col,
