@@ -5,8 +5,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== pytest =="
-python -m pytest tests/ -q
+echo "== pytest (the Tier-1 command in ROADMAP.md, env scoped to it) =="
+(
+    export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+    timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+)
 
 echo "== oracle sweep (virgin session, sf0.01) =="
 python scripts/driver_sim.py

@@ -13,8 +13,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # scheduling per stage (measured −25% wall on two representative
 # files). Set BEFORE the engine import: apply_runtime_confs re-derives
 # the shuffle width from this env var on every load_table call, so a
-# fixture-level conf alone would not stick. Bench/driver_sim are their
-# own processes and unaffected.
+# fixture-level conf alone would not stick. Child processes inherit
+# os.environ, so tests that launch app.py pass it the ``app_env``
+# fixture's environment, which drops the pin again.
+_OUTER_CPUS = os.environ.get("SPARK_GRAFT_CPUS")
 os.environ["SPARK_GRAFT_CPUS"] = "8"
 
 from kafka_spark_streaming_app_spark.session import get_spark  # noqa: E402
@@ -42,3 +44,15 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness() -> str:
     return SF_CORRECTNESS
+
+
+@pytest.fixture()
+def app_env() -> dict[str, str]:
+    """Environment for an app.py subprocess: this one without the local[8]
+    pin, so the app sizes its session as a plain launch would (from the
+    caller's SPARK_GRAFT_CPUS if it set one, else from the machine)."""
+    env = dict(os.environ)
+    env.pop("SPARK_GRAFT_CPUS")
+    if _OUTER_CPUS is not None:
+        env["SPARK_GRAFT_CPUS"] = _OUTER_CPUS
+    return env

@@ -12,7 +12,7 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_app_file_source_end_to_end():
+def test_app_file_source_end_to_end(app_env):
     src = tempfile.mkdtemp(prefix="app_src_")
     out = tempfile.mkdtemp(prefix="app_out_")
     rows = []
@@ -59,6 +59,7 @@ def test_app_file_source_end_to_end():
             ],
             capture_output=True,
             text=True,
+            env=app_env,
             timeout=300,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
@@ -77,7 +78,7 @@ def test_app_file_source_end_to_end():
     assert got.get("order_11") == "FRAUD_SIMULATION"
 
 
-def test_app_minikafka_source_end_to_end():
+def test_app_minikafka_source_end_to_end(app_env):
     """The reference's FULL live topology with zero installation:
     in-process wire-protocol broker, trickled producer waves, Kafka
     source -> windowed agg to parquet + alerts back to Kafka. The
@@ -103,6 +104,7 @@ def test_app_minikafka_source_end_to_end():
             ],
             capture_output=True,
             text=True,
+            env=app_env,
             timeout=int(duration) + 120,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
