@@ -61,7 +61,12 @@ def input_is_large(sf_dir: str, table: str) -> bool:
     """True when the table's on-disk size crosses the prefix-sum
     threshold (default 1 GiB, override SPARK_GRAFT_PREFIX_SUM_BYTES).
     Unstattable paths (object stores) count as large: at that scale
-    the distributed shape is the only safe one."""
+    the distributed shape is the only safe one.
+
+    The threshold compares compressed parquet bytes, not rows or the
+    histogram's distinct values, which set the single-task window's
+    cost. Tune it to the tables' rows per compressed byte: a
+    well-compressed table holds many more rows than its size suggests."""
     import glob as _glob
     import os as _os
 

@@ -319,7 +319,12 @@ def jaro_winkler_similarity(
 def jaro_winkler_col(left: Column, right: Column) -> Column:
     """Arrow-batched pandas_udf wrapper: one Python call per batch,
     per-row work bounded by the short strings it compares (the
-    blocking join upstream bounds the row count)."""
+    blocking join upstream bounds the row count).
+
+    The UDF is marked nondeterministic (see below), and Spark allows
+    nondeterministic expressions only in Project, Filter, Aggregate and
+    Window: it cannot appear in a join condition. Join on the blocking
+    key first, then select or filter on the score."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

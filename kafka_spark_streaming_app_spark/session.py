@@ -29,6 +29,18 @@ settings a 100 TB deployment wants from day one:
   driver, sessions built elsewhere (``apply_runtime_confs`` cannot set a
   core conf), and Spark's driver-side planner runners (Python data source
   planning and writes), which always start the stock daemon.
+- ``spark.sql.streaming.checkpointFileManagerClass`` =
+  ``FileSystemBasedCheckpointFileManager``, for local masters only. Every
+  trigger renames small files into place (offsets, commits, state-store
+  deltas, the file sink's log). Spark's default FileContext manager checks
+  existence through ``getFileLinkStatus``, which without libhadoop's
+  NativeIO forks a ``readlink`` per call, four per rename. The FileSystem
+  manager checks ``exists(dst)``, refuses an existing one, and calls the
+  same ``RawLocalFileSystem.rename``: both are check-then-``rename(2)``,
+  both write Hadoop's ``.crc`` sidecars, and the state store's checksum
+  wrapper sits on either, so existing checkpoints resume unchanged. The
+  ``chmod`` fork of every file create stays. Cluster masters keep Spark's
+  default, which suits object stores and HDFS.
 
 On a real cluster the same builder is used; only ``master`` and the
 memory/instance settings differ (supplied by spark-submit, not here).
@@ -41,6 +53,11 @@ import os
 from pyspark.sql import SparkSession
 
 from kafka_spark_streaming_app_spark import pyworker
+
+# The checkpoint file manager local sessions use (see the module docstring).
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 # Runtime-settable confs every entry point applies, so the engine also
 # works on sessions it did not build (e.g. the test driver's session).
@@ -120,6 +137,7 @@ def get_spark(
         root = os.path.dirname(os.path.dirname(os.path.abspath(pyworker.__file__)))
         builder = builder.config("spark.python.daemon.module", pyworker.__name__)
         builder = builder.config("spark.executorEnv.PYTHONPATH", root)
+        builder = builder.config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     if extra_confs:

@@ -1,5 +1,6 @@
 """The worker daemon's zip re-read rule: unit-tested without Spark, then
-checked in the workers of a ``get_spark`` session."""
+checked in the workers of a ``get_spark`` session; and which confs the
+builder gives local and cluster masters."""
 
 from __future__ import annotations
 
@@ -14,8 +15,10 @@ import pytest
 from pyspark.sql import SparkSession
 
 from kafka_spark_streaming_app_spark import pyworker
-from kafka_spark_streaming_app_spark.session import get_spark
+from kafka_spark_streaming_app_spark.session import CHECKPOINT_FILE_MANAGER, get_spark
 
+
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 
 # Before 3.12 every zipimporter re-reads its archive on invalidate_caches and
 # keeps the directory in ``_files``; from 3.12 on it is lazy and the daemon
@@ -123,12 +126,17 @@ def test_daemon_confs_local_only_and_overridable(spark, monkeypatch):
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", record)
     get_spark(app_name="tests")
     assert options["spark.python.daemon.module"] == pyworker.__name__
+    assert options[CKPT_MANAGER] == CHECKPOINT_FILE_MANAGER
     # the daemon starts before any py-files reach sys.path: name the package root
     root = options["spark.executorEnv.PYTHONPATH"]
     assert os.path.isfile(os.path.join(root, "kafka_spark_streaming_app_spark", "pyworker.py"))
-    get_spark(app_name="tests", extra_confs={"spark.python.daemon.module": "pyspark.daemon"})
+    stock = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    get_spark(app_name="tests", extra_confs={"spark.python.daemon.module": "pyspark.daemon", CKPT_MANAGER: stock})
     assert options["spark.python.daemon.module"] == "pyspark.daemon"
+    assert options[CKPT_MANAGER] == stock
     # a cluster ships the package as py-files, so it keeps the stock daemon
     get_spark(app_name="tests", master="spark://cluster:7077")
     assert "spark.python.daemon.module" not in options
     assert "spark.executorEnv.PYTHONPATH" not in options
+    # and Spark's default checkpoint manager, which suits object stores and HDFS
+    assert CKPT_MANAGER not in options

@@ -6,9 +6,12 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
+from kafka_spark_streaming_app_spark.operators.windowed import windowed_aggregation
 from kafka_spark_streaming_app_spark.schemas import ORDER_SCHEMA
+from kafka_spark_streaming_app_spark.session import CHECKPOINT_FILE_MANAGER
 from kafka_spark_streaming_app_spark.sources.batch import load_table
 from kafka_spark_streaming_app_spark.streaming.pipeline import parse_and_clean
 
@@ -210,3 +213,124 @@ def test_windowed_agg_on_rocksdb_state_store(spark):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     assert sum(r["order_count"] for r in rows) == 20  # 10 orders x 2 windows
     assert all(abs(r["total_revenue"] - 100.0) < 1e-9 for r in rows)
+
+
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(spark, uri: str):
+    """The manager Spark's checkpoint logs would use for ``uri`` under the
+    session's current confs."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(uri), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Local sessions write checkpoints through the FileSystem-based manager
+    (see session.py), and its atomic create still refuses to replace an
+    existing file: an offsets or commit log entry is written once."""
+    mgr = _checkpoint_manager(spark, tmp_path.as_uri())
+    assert mgr.getClass().getName() == CHECKPOINT_FILE_MANAGER
+    target = spark._jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+    first = mgr.createAtomic(target, False)
+    first.write(bytearray(b"batch 0"))
+    first.close()
+    second = mgr.createAtomic(target, False)
+    second.write(bytearray(b"batch 0, rewritten"))
+    with pytest.raises(Exception, match="already exists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"batch 0"
+
+
+def _write_events(dir_: str, name: str, rows: list[tuple], mtime: float) -> None:
+    """One JSON-lines file of ``(order_id, category, user_id, amount, ts)``
+    rows; ``mtime`` fixes the order the file source reads files in."""
+    path = os.path.join(dir_, name)
+    with open(path + ".tmp", "w") as f:
+        for oid, cat, user, amount, ts in rows:
+            f.write(json.dumps({"order_id": oid, "category": cat, "user_id": user,
+                                "total_amount": amount, "timestamp": f"2024-01-01 {ts}"}) + "\n")
+    os.utime(path + ".tmp", (mtime, mtime))
+    os.rename(path + ".tmp", path)
+
+
+def test_checkpoint_from_file_context_manager_resumes(spark):
+    """A checkpoint written under Spark's default FileContext manager resumes
+    under the FileSystem one that local sessions now use, as a deployed
+    app.py would on upgrade: the windowed aggregate's sink equals one
+    uninterrupted run, with no window lost or emitted twice."""
+    first_files = [
+        ("f1.json", [("o1", "a", "u1", 10.0, "10:00:10"), ("o2", "b", "u2", 20.0, "10:00:20")]),
+        # advances the watermark to 10:01:10, so the 10:00 windows close in the first run
+        ("f2.json", [("o3", "a", "u3", 5.0, "10:01:40")]),
+    ]
+    later_files = [
+        # o4 joins o3's open windows from the restored state; o5 is older
+        # than the late-row watermark in both runs, so both drop it
+        ("f3.json", [("o4", "a", "u1", 7.0, "10:01:50"), ("o5", "b", "u2", 1.0, "09:58:00")]),
+        ("f4.json", [("closer", "c", "u9", 1.0, "10:30:00")]),
+    ]
+    t0 = 1_700_000_000
+
+    def start_query(src, out, ckpt):
+        raw = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
+        parsed = parse_and_clean(raw, ORDER_SCHEMA, watermark="30 seconds")
+        agg = windowed_aggregation(parsed, ts_col="event_timestamp", keys=("category",),
+                                   amount_col="total_amount")
+        return (agg.writeStream.format("parquet").option("path", out)
+                .option("checkpointLocation", ckpt).outputMode("append").start())
+
+    def run(src, out, ckpt):
+        q = start_query(src, out, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def sink(out):
+        return sorted(tuple(r) for r in spark.read.parquet(out).collect())
+
+    src, out, ckpt = (tempfile.mkdtemp(prefix=f"ckmgr_{p}_") for p in ("src", "out", "ckpt"))
+    for i, (name, rows) in enumerate(first_files):
+        _write_events(src, name, rows, t0 + i)
+    session_manager = spark.conf.get(CKPT_MANAGER)
+    assert session_manager == CHECKPOINT_FILE_MANAGER
+    spark.conf.set(CKPT_MANAGER, FILE_CONTEXT_MANAGER)
+    try:
+        assert _checkpoint_manager(spark, ckpt).getClass().getName() == FILE_CONTEXT_MANAGER
+        run(src, out, ckpt)
+    finally:
+        # unsetting would fall back to Spark's default, the FileContext
+        # manager; restore the value the session was built with instead
+        spark.conf.set(CKPT_MANAGER, session_manager)
+    emitted_first = sink(out)
+    assert {(r[0].isoformat(), r[2]) for r in emitted_first} == {
+        ("2024-01-01T09:59:30", "a"), ("2024-01-01T09:59:30", "b"),
+        ("2024-01-01T10:00:00", "a"), ("2024-01-01T10:00:00", "b"),
+    }
+
+    for i, (name, rows) in enumerate(later_files, start=len(first_files)):
+        _write_events(src, name, rows, t0 + i)
+    assert _checkpoint_manager(spark, ckpt).getClass().getName() == CHECKPOINT_FILE_MANAGER
+    run(src, out, ckpt)
+    resumed = sink(out)
+
+    whole_src, whole_out, whole_ckpt = (
+        tempfile.mkdtemp(prefix=f"ckmgr_whole_{p}_") for p in ("src", "out", "ckpt")
+    )
+    for i, (name, rows) in enumerate(first_files + later_files):
+        _write_events(whole_src, name, rows, t0 + i)
+    run(whole_src, whole_out, whole_ckpt)
+
+    assert resumed == sink(whole_out)
+    keys = [(r[0], r[2]) for r in resumed]
+    assert len(keys) == len(set(keys)), f"a window was emitted twice: {resumed}"
+    counts = {(r[0].isoformat(), r[2]): r[3] for r in resumed}
+    # o3 (first run) and o4 (second run) meet in the restored state
+    assert counts[("2024-01-01T10:01:00", "a")] == 2
+    assert counts[("2024-01-01T10:01:30", "a")] == 2
