@@ -10,13 +10,20 @@ no driver collect). The headline set spans the engine's families:
 reference parity (windowed agg, alerts, streaming engine), relational
 (scan-agg, join+topk), and the LLM-pipeline extensions (LSH dedup,
 similarity, text stats).
+
+``python bench.py --only q1,q2 [--runs N]`` re-times the named queries
+in the same session (min of N, default 2) and lists each query's Spark
+jobs (id, duration, tasks, call site). It writes no BENCH_DETAIL.json,
+so the full run the next run's ratios compare against stays as it is.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -349,46 +356,33 @@ def main() -> int:
     except ValueError:
         sf = -1.0
 
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--only",
+        help="comma-separated registry queries to re-time in isolation; "
+        "prints their samples and jobs and writes no BENCH_DETAIL.json",
+    )
+    ap.add_argument(
+        "--runs", type=int, default=2, help="executions per --only query"
+    )
+    args = ap.parse_args()
+
     from kafka_spark_streaming_app_spark import registry
-    from kafka_spark_streaming_app_spark.session import get_spark
 
     registry.load_all()
-    spark = get_spark(
-        app_name="bench",
-        extra_confs={"spark.driver.memory": os.environ.get("BENCH_DRIVER_MEM", "48g")},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # JVM / codegen warmup outside the measured region
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # Streaming queries read a JSON-lines wire replay of `events`; for
-    # batch queries the input parquet already sits on disk, so
-    # materialize the wire fixture outside the timed region too — the
-    # streaming numbers then measure the streaming ENGINE, not one-off
-    # fixture generation.
-    from kafka_spark_streaming_app_spark.queries.streaming import (
-        _events_as_wire_stream,
-    )
-
-    _events_as_wire_stream(spark, sf_dir)
-    # ... and pay the streaming engine's one-time per-session init
-    # (state-store + micro-batch machinery, ~3 s) on a 1-row stream,
-    # mirroring the codegen warmup: a long-lived cluster amortizes
-    # this; the per-query numbers should not carry it.
-    import tempfile
-
-    from kafka_spark_streaming_app_spark.streaming.pipeline import (
-        write_memory_stream,
-    )
-
-    warm_dir = tempfile.mkdtemp(prefix="warm_stream_")
-    spark.range(1).selectExpr("cast(id as string) as value").write.mode(
-        "overwrite"
-    ).text(warm_dir)
-    wq = write_memory_stream(
-        spark.readStream.text(warm_dir), "warmup_stream", output_mode="append"
-    )
-    wq.processAllAvailable()
-    wq.stop()
+    only = args.only.split(",") if args.only else None
+    unknown = [n for n in only or () if n not in registry.QUERIES]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    spark = bench_session(sf_dir)
+    if only:
+        for name in only:
+            samples = time_query(spark, name, sf_dir, args.runs)
+            print(f"{name}: min={min(samples)} samples={samples}", flush=True)
+            for job_id, ms, tasks, call_site in job_report(spark, name):
+                print(f"  job {job_id:5d} {ms:7d} ms {tasks:5d} tasks  {call_site}")
+        spark.stop()
+        return 0
 
     # Fixed calibration workload (round-11, VERDICT item 8): a
     # deterministic SF-independent CPU-bound query timed isolated at
@@ -470,15 +464,12 @@ def main() -> int:
         if run_counter and run_counter % BLOCK_EVERY == 0:
             current_calib = round(_calibration_once(), 3)
         run_counter += 1
-        fn = registry.QUERIES[name]
-        start = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - start
+        return time_query(spark, name, sf_dir, 1)[0]
 
     def record(store: dict, name: str) -> None:
         """min-merge a fresh sample; the local calibration follows
         whichever sample produced the min."""
-        t = round(run_once(name), 3)
+        t = run_once(name)
         if name not in store or t < store[name]:
             store[name] = t
             local_calib[name] = current_calib
@@ -545,7 +536,7 @@ def main() -> int:
 
     # mandatory-triage list (VERDICT r11 item 1): every query whose
     # block-normalized ratio exceeds 1.5x at >1s absolute must be
-    # isolated-re-timed (scripts/time_query.py --runs 3) and the
+    # isolated-re-timed (bench.py --only NAME --runs 3) and the
     # attribution recorded in ROUND_NOTES.md — no silent outliers
     all_t = {**timings, **extra_timings}
     outliers = sorted(
@@ -593,7 +584,7 @@ def main() -> int:
         "for the same query); ~1.0 = moved with the machine",
         "outliers_requiring_isolated_retime": outliers,
         "outlier_note": ">1.5x block-normalized at >1s absolute: "
-        "MUST be isolated-re-timed (scripts/time_query.py --runs 3) "
+        "MUST be isolated-re-timed (bench.py --only NAME --runs 3) "
         "and attributed in ROUND_NOTES.md",
         "sf": sf,
     }
@@ -624,6 +615,90 @@ def main() -> int:
     print(line)
     spark.stop()
     return 0
+
+
+def bench_session(sf_dir: str):
+    """The one session every timing run uses: ``get_spark``'s confs and
+    heap (``SPARK_GRAFT_DRIVER_MEM`` overrides it), plus the one-time
+    costs a long-lived cluster amortizes, all paid here outside the
+    timed region."""
+    from kafka_spark_streaming_app_spark import registry
+    from kafka_spark_streaming_app_spark.queries.streaming import (
+        _events_as_wire_stream,
+    )
+    from kafka_spark_streaming_app_spark.session import get_spark
+    from kafka_spark_streaming_app_spark.streaming.pipeline import (
+        write_memory_stream,
+    )
+
+    registry.load_all()
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # JVM / codegen warmup outside the measured region
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # Streaming queries read a JSON-lines wire replay of `events`; for
+    # batch queries the input parquet already sits on disk, so
+    # materialize the wire fixture outside the timed region too — the
+    # streaming numbers then measure the streaming ENGINE, not one-off
+    # fixture generation.
+    _events_as_wire_stream(spark, sf_dir)
+    # ... and pay the streaming engine's one-time per-session init
+    # (state-store + micro-batch machinery, ~3 s) on a 1-row stream,
+    # mirroring the codegen warmup: a long-lived cluster amortizes
+    # this; the per-query numbers should not carry it.
+    warm_dir = tempfile.mkdtemp(prefix="warm_stream_")
+    spark.range(1).selectExpr("cast(id as string) as value").write.mode(
+        "overwrite"
+    ).text(warm_dir)
+    wq = write_memory_stream(
+        spark.readStream.text(warm_dir), "warmup_stream", output_mode="append"
+    )
+    wq.processAllAvailable()
+    wq.stop()
+    return spark
+
+
+def time_query(spark, name: str, sf_dir: str, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` end-to-end executions of registry query
+    ``name`` into the noop sink. The runs' jobs sit in the job group
+    ``name``, which :func:`job_report` reads back."""
+    from kafka_spark_streaming_app_spark import registry
+
+    fn = registry.QUERIES[name]
+    spark.sparkContext.setJobGroup(name, name)
+    try:
+        samples = []
+        for _ in range(runs):
+            start = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            samples.append(round(time.perf_counter() - start, 3))
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    return samples
+
+
+def job_report(spark, group: str) -> list[tuple[int, int, int, str]]:
+    """``(job id, duration ms, tasks, call site)`` for each job of job
+    group ``group``, read from the live status store (no UI, no event
+    log). Streaming micro-batches run in their query's own group, so a
+    streaming query lists only its batch jobs."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # the status store is fed asynchronously: let the last job's end
+    # event land before reading its completion time
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    rows = []
+    for job_id in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(job_id)
+        start, end = job.submissionTime(), job.completionTime()
+        ms = (
+            end.get().getTime() - start.get().getTime()
+            if start.isDefined() and end.isDefined()
+            else -1
+        )
+        rows.append((job_id, ms, job.numTasks(), job.name()))
+    return rows
 
 
 if __name__ == "__main__":

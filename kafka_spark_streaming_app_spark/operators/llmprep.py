@@ -10,12 +10,11 @@ whole-stage codegen at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, tokens
+from .skew import hist_running_totals
 
 # Shared Java/RE2-compatible patterns (no lookaround — both Spark's
 # java.util.regex and DuckDB's RE2 must agree):
@@ -126,79 +125,6 @@ def dataset_split(
     )
 
 
-def with_running_total(
-    df: DataFrame,
-    order_cols: Sequence[Column | str],
-    value_col: str,
-    out_col: str = "running_total",
-) -> DataFrame:
-    """Exact running total of ``value_col`` over a TOTAL order — the
-    distributed prefix sum behind token-budget selection ("take the
-    best documents until the budget is full").
-
-    A naive ``Window.orderBy(...)`` with no partitionBy drags the
-    ENTIRE table through one task. This implementation is the
-    standard two-level prefix sum instead:
-
-    1. ``repartitionByRange(order)`` — ranges are assigned to
-       partition ids in order, so partition boundaries respect the
-       global order;
-    2. per-partition running totals (window partitioned by
-       ``spark_partition_id()`` — local sort only, no single-task
-       bottleneck);
-    3. per-partition grand totals (one tiny row per partition) get a
-       running offset via a single-partition window over
-       ``num_partitions`` rows — negligible at any scale;
-    4. offsets broadcast-join back on partition id.
-
-    ``order_cols`` must be a TOTAL order (include a unique tiebreak
-    column): equal keys may straddle a range boundary, and only a
-    total order makes the prefix sum well-defined and cross-engine
-    reproducible. Values accumulate in DECIMAL(25,4) (exact,
-    order-independent); callers cast to double at the edge if needed.
-    """
-    order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    # lazy barrier: `ranged` feeds both the local cumsum and the
-    # per-partition totals — without it the range shuffle (and the
-    # nondeterministic boundary sampling) would run once per branch
-    ranged = (
-        df.repartitionByRange(*order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    dec = F.col(value_col).cast("decimal(25,4)")
-    local = ranged.withColumn("_local_cum", F.sum(dec).over(local_w))
-    totals = (
-        ranged.groupBy("_pid")
-        .agg(F.sum(dec).alias("_ptotal"))
-        .withColumn(
-            "_offset",
-            F.coalesce(
-                F.sum("_ptotal").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0).cast("decimal(25,4)"),
-            ),
-        )
-        .select("_pid", "_offset")
-    )
-    return (
-        local.join(F.broadcast(totals), "_pid")
-        .withColumn(
-            out_col,
-            (F.col("_local_cum") + F.col("_offset")).cast("decimal(25,4)"),
-        )
-        .drop("_pid", "_local_cum")
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str = "lang",
@@ -221,7 +147,7 @@ def stratified_sample(
 
     Expected kept size per stratum is Binomial(n, threshold/10⁴) —
     concentrated within ~√n of the target, not exact; exactness would
-    need a global rank (see with_running_total) and is rarely worth
+    need a global rank (see skew.hist_running_totals) and is rarely worth
     the extra shuffle.
     """
     counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("_n"))
@@ -283,24 +209,17 @@ def global_shuffle(
     Every row gets ``pos`` (its 1-based position in the shuffled
     total order — h60 of the salted id, tie-broken by id) and
     ``shard`` (``(pos-1) // shard_size``). The total order comes from
-    the two-level distributed prefix sum (:func:`with_running_total`
-    counting 1 per row) — never a global single-task window. Writing
-    ``partitionBy(shard)`` then yields equal-sized, reproducibly
-    shuffled shard files.
+    the two-level distributed prefix sum
+    (:func:`~.skew.hist_running_totals` counting 1 per row) — never a
+    global single-task window. Writing ``partitionBy(shard)`` then
+    yields equal-sized, reproducibly shuffled shard files.
     """
     keyed = df.withColumn(
         "_sk", h60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     )
-    pos = with_running_total(
-        keyed.withColumn("_one", F.lit(1)),
-        order_cols=["_sk", id_col],
-        value_col="_one",
-        out_col="_pos",
+    pos = hist_running_totals(
+        keyed, ["_sk", id_col], {"pos": F.lit(1)}, large=True
     )
-    return (
-        pos.withColumn("pos", F.col("_pos").cast("bigint"))
-        .withColumn(
-            "shard", ((F.col("pos") - 1) / F.lit(shard_size)).cast("bigint")
-        )
-        .drop("_sk", "_one", "_pos")
-    )
+    return pos.withColumn(
+        "shard", ((F.col("pos") - 1) / F.lit(shard_size)).cast("bigint")
+    ).drop("_sk")

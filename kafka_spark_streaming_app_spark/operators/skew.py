@@ -10,7 +10,9 @@ only the shuffle distribution changes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -91,40 +93,52 @@ def input_is_large(sf_dir: str, table: str) -> bool:
 
 
 def hist_running_totals(
-    hist: DataFrame,
-    order_col: str,
-    value_cols: dict[str, str],
+    df: DataFrame,
+    order_cols: Sequence[Column | str],
+    value_cols: dict[str, Column | str],
     *,
     include_current: bool = True,
     large: bool,
-    order_tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    """Running totals of ``value_cols`` (out_name -> in_name) over
-    ``order_col`` (+ ``order_tiebreak`` columns when ``order_col``
-    alone is not unique — the combination must be a TOTAL order).
+    """Running totals of ``value_cols`` (out_name -> input column) over
+    ``order_cols``, which must be a TOTAL order (end it with a unique
+    tiebreak column): equal keys may straddle a range boundary, and
+    only a total order makes the prefix sum well-defined and
+    cross-engine reproducible. ``include_current=False`` gives the
+    exclusive sum.
+
     ``large=False``: one global ordered window (single task — fine for
     small inputs). ``large=True``: the two-level distributed prefix
-    sum (range shuffle + per-partition cumsum + broadcast partition
-    offsets — no single-task stage over data-sized rows). Counts
-    accumulate in BIGINT (exact at any corpus size), so both shapes
-    produce identical integers."""
-    order = [F.col(order_col)] + [
-        F.col(c) for c in (order_tiebreak or [])
-    ]
+    sum, never a single-task stage over data-sized rows:
+
+    1. ``repartitionByRange(order)`` — ranges are assigned to
+       partition ids in order, so partition boundaries respect the
+       global order;
+    2. per-partition running totals (window partitioned by
+       ``spark_partition_id()`` — local sort only);
+    3. per-partition grand totals (one tiny row per partition) get a
+       running offset via a single-partition window over
+       ``num_partitions`` rows — negligible at any scale;
+    4. offsets broadcast-join back on partition id.
+
+    Values accumulate in BIGINT (exact at any corpus size), so both
+    shapes produce identical integers: the global window's running
+    sum, nulls skipped, and 0 where no non-null value precedes."""
+    order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     end = Window.currentRow if include_current else -1
     if not large:
         w = Window.orderBy(*order).rowsBetween(
             Window.unboundedPreceding, end
         )
-        out = hist
-        for out_name, in_name in value_cols.items():
+        out = df
+        for out_name, value in value_cols.items():
             out = out.withColumn(
                 out_name,
-                F.coalesce(F.sum(in_name).over(w), F.lit(0)).cast("bigint"),
+                F.coalesce(F.sum(value).over(w), F.lit(0)).cast("bigint"),
             )
         return out
     ranged = (
-        hist.repartitionByRange(*order)
+        df.repartitionByRange(*order)
         .withColumn("_pid", F.spark_partition_id())
         # lazy barrier: feeds the local cumsum AND the partition
         # totals; without it the (sampled) range shuffle runs per
@@ -141,8 +155,8 @@ def hist_running_totals(
     )
     totals = ranged.groupBy("_pid").agg(
         *[
-            F.sum(in_name).alias(f"_pt_{out_name}")
-            for out_name, in_name in value_cols.items()
+            F.sum(value).alias(f"_pt_{out_name}")
+            for out_name, value in value_cols.items()
         ]
     )
     offsets = totals.select(
@@ -155,10 +169,10 @@ def hist_running_totals(
         ],
     )
     out = ranged
-    for out_name, in_name in value_cols.items():
+    for out_name, value in value_cols.items():
         out = out.withColumn(
             f"_loc_{out_name}",
-            F.coalesce(F.sum(in_name).over(local_w), F.lit(0)).cast(
+            F.coalesce(F.sum(value).over(local_w), F.lit(0)).cast(
                 "bigint"
             ),
         )

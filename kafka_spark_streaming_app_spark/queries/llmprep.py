@@ -21,8 +21,8 @@ from ..operators.llmprep import (
     chunk_documents,
     dataset_split,
     pii_scrub,
-    with_running_total,
 )
+from ..operators.skew import hist_running_totals
 from ..registry import query
 from ..sources.batch import load_table
 
@@ -223,9 +223,6 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (range partition → local cumsum → offset join), NOT an
     unpartitioned global window — the oracle's single-window SQL is
     the semantics, not the plan."""
-    from ..functions.hashing import tokens
-    from ..operators.llmprep import with_running_total
-
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens("text")
     # subword regex inlined to match the oracle's lower(trim()) exactly
@@ -240,10 +237,11 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("n_subwords"),
     )
-    cum = with_running_total(
+    cum = hist_running_totals(
         scored,
-        order_cols=[F.col("quality").desc(), F.col("doc_id")],
-        value_col="n_subwords",
+        [F.col("quality").desc(), "doc_id"],
+        {"running_total": "n_subwords"},
+        large=True,
     )
     return cum.filter(F.col("running_total") <= _BUDGET).select(
         "doc_id",
@@ -332,9 +330,14 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("pack|"), F.col("doc_id").cast("string"))
         ).alias("k"),
     )
-    c = with_running_total(t, ["k", "doc_id"], "n_tok", out_col="_cum")
-    start = (F.col("_cum").cast("bigint") - F.col("n_tok")).alias("start_tok")
-    return c.select("doc_id", "n_tok", start).select(
+    c = hist_running_totals(
+        t,
+        ["k", "doc_id"],
+        {"start_tok": "n_tok"},
+        include_current=False,
+        large=True,
+    )
+    return c.select(
         "doc_id",
         F.col("n_tok").cast("bigint").alias("n_tok"),
         F.expr(f"start_tok div {_PACK_BUDGET}").alias("seq_id"),

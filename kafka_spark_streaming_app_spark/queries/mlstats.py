@@ -903,7 +903,7 @@ def ks_test_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input size (single-task window vs distributed prefix sum)
     cum = _hist_running_totals(
         hist,
-        "vc",
+        ["vc"],
         {"cca": "ca", "ccb": "cb"},
         large=_input_is_large(sf_dir, "events"),
     ).select("cca", "ccb")
@@ -1793,7 +1793,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value cents are DATA-sized: size-conditional cumulative shape
     ranked = _hist_running_totals(
         hist,
-        "vc",
+        ["vc"],
         {"below": "c"},
         include_current=False,
         large=_input_is_large(sf_dir, "events"),
@@ -2300,7 +2300,7 @@ def spearman_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain): pick the cumulative shape from the input size
     pr = _hist_running_totals(
         t.groupBy("pc").agg(F.count(F.lit(1)).alias("c")),
-        "pc",
+        ["pc"],
         {"cum_c": "c"},
         large=_input_is_large(sf_dir, "lineitem"),
     ).select(
@@ -2901,21 +2901,16 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tb",
     ).localCheckpoint(eager=False)
     # Median SELECTION via the two-level distributed prefix sum
-    # (operators/llmprep.with_running_total) instead of a
+    # (operators/skew.hist_running_totals) instead of a
     # Window.orderBy with no partition key, which dragged the whole
     # day² pair table through ONE task (r12; the k-th smallest VALUE
     # is invariant to tie order, and (ta, tb) makes the order total
     # anyway). n_pairs comes from the checkpoint-materializing count.
-    from ..operators.llmprep import with_running_total
-
     m = pairs.count()
     k1, k2 = (m + 1) // 2, (m + 2) // 2
-    ranked = with_running_total(
-        pairs.withColumn("_one", F.lit(1)),
-        order_cols=["slope", "ta", "tb"],
-        value_col="_one",
-        out_col="_pos",
-    ).withColumn("r", F.col("_pos").cast("bigint"))
+    ranked = _hist_running_totals(
+        pairs, ["slope", "ta", "tb"], {"r": F.lit(1)}, large=True
+    )
     return (
         ranked.filter(F.col("r").isin([k1, k2]))
         .agg(

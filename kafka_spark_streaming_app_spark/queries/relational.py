@@ -1105,11 +1105,7 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SQL ntile formula (first n%10 buckets hold one extra row).
         # No Exchange SinglePartition over fact-sized rows.
         ranked = hist_running_totals(
-            o.withColumn("_one", F.lit(1)),
-            "o_totalprice",
-            {"rk": "_one"},
-            order_tiebreak=["o_orderkey"],
-            large=True,
+            o, ["o_totalprice", "o_orderkey"], {"rk": F.lit(1)}, large=True
         )
         # row count from a separate column-pruned agg (one tiny job)
         # broadcast back — the pagerank n_nodes pattern

@@ -4,9 +4,9 @@ Usage: python scripts/capture_plans.py OUTDIR SUFFIX q1 q2 ...
 
 Writes OUTDIR/<query>_<SUFFIX>.txt. For streaming/stateful queries
 whose result is produced by driving a stream (memory-sink queries),
-the BATCH DataFrame they return after the run is explained — the same
-convention PLANS.md uses; fixture/commit jobs the query runs on the
-way are part of the run, not the returned plan.
+the BATCH DataFrame they return after the run is explained;
+fixture/commit jobs the query runs on the way are part of the run,
+not the returned plan.
 """
 
 import contextlib

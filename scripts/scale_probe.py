@@ -26,7 +26,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -374,14 +373,16 @@ def build_jittered_documents(src_sf: str, n: int) -> str:
     i*n_docs; n_docs is even at every SF, so the 2m/2m+1 planted-pair
     convention of the perceptual-hash fixtures survives the shift) and
     a per-copy suffix token on the text — an Nx corpus of realistic
-    near-duplicates. Needed by the queries the hardlink fixture
-    corrupts: duplicated doc_ids collapse ngram_novelty's distinct
-    (doc, shingle) pairs and hand multimodal_spectral_hash_dedup N-1
-    bit-identical hashes per image (an N^2 band join that no real
-    corpus exhibits)."""
+    near-duplicates — next to the 1x hardlink fixture's other tables.
+    Needed by the queries the hardlink fixture corrupts: duplicated
+    doc_ids collapse ngram_novelty's distinct (doc, shingle) pairs and
+    hand multimodal_spectral_hash_dedup N-1 bit-identical hashes per
+    image (an N^2 band join that no real corpus exhibits)."""
     import duckdb
 
-    out = tempfile.mkdtemp(prefix=f"jitterdoc{n}x_")
+    out = build_scaled_dir(src_sf, 1)
+    dst = os.path.join(out, "documents.parquet")
+    shutil.rmtree(dst)
     src = os.path.join(src_sf, "documents.parquet")
     con = duckdb.connect()
     n_docs = con.sql(f"SELECT count(*) FROM '{src}'").fetchone()[0]
@@ -392,10 +393,7 @@ def build_jittered_documents(src_sf: str, n: int) -> str:
         f"FROM '{src}'"
         for i in range(n)
     )
-    con.sql(
-        f"COPY ({selects}) TO "
-        f"'{os.path.join(out, 'documents.parquet')}' (FORMAT PARQUET)"
-    )
+    con.sql(f"COPY ({selects}) TO '{dst}' (FORMAT PARQUET)")
     con.close()
     return out
 
@@ -412,8 +410,15 @@ JITTER_DOC_PROBES = (
     "dedup_clusters_star",
 )
 
-# Probes that need the jittered-embeddings fixture (see the comment at
-# the call site).
+# Probes that need the jittered-embeddings fixture: exact hardlink
+# duplication would hand every vector N-1 exact twins and distort
+# dedup/ranking semantics, so copy i shifts vec_id by i*n_vec and
+# perturbs one dimension — an N x larger corpus with only near-dup
+# structure. For semantic_dedup, k = ceil(n/budget) grows N x with it,
+# holding expected cluster size constant — the probe measures the
+# linear-total-pair-cost claim of the k ∝ n sizing rule directly. For
+# similarity_mmr_rerank the pool stays queries x 12, so the probe
+# isolates the corpus-scan stage.
 JITTER_EMB_PROBES = (
     "semantic_dedup",
     "similarity_mmr_rerank",
@@ -433,99 +438,39 @@ def main() -> int:
     n = int(args[0]) if args else 8
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from kafka_spark_streaming_app_spark import registry
-    from kafka_spark_streaming_app_spark.session import get_spark
+    from bench import bench_session, time_query
 
-    registry.load_all()
-    spark = get_spark(app_name=f"scale_probe_{n}x")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    scaled = build_scaled_dir(src, n)
-    jittered = build_jittered_embeddings(src, n)
-    jitterdoc_base = None
+    spark = bench_session(src)
+    # (probes, Nx fixture builder, fixture label); each fixture is
+    # built only when one of its probes is selected
+    fixtures = (
+        (JITTER_DOC_PROBES, build_jittered_documents, "jittered-documents"),
+        (PROBES, build_scaled_dir, None),
+        (JITTER_EMB_PROBES, build_jittered_embeddings, "jittered-embeddings"),
+    )
+    built = []
     try:
         results = {}
-        for name in JITTER_DOC_PROBES:
-            if only is not None and name not in only:
+        for probes, build, label in fixtures:
+            names = [p for p in probes if only is None or p in only]
+            if not names:
                 continue
-            if jitterdoc_base is None:
-                # other tables come from the hardlink fixture; only
-                # documents is replaced by the jittered build
-                jitterdoc_base = build_scaled_dir(src, 1)
-                jdocs = build_jittered_documents(src, n)
-                dst = os.path.join(jitterdoc_base, "documents.parquet")
-                shutil.rmtree(dst)
-                shutil.copytree(jdocs, dst.rsplit("/", 1)[0] + "/_jd")
-                os.rename(
-                    os.path.join(
-                        dst.rsplit("/", 1)[0], "_jd", "documents.parquet"
-                    ),
-                    dst,
-                )
-            fn = registry.QUERIES[name]
-            times = {}
-            for label, sf_dir in (("t1", src), ("tN", jitterdoc_base)):
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                times[label] = round(best, 3)
-            times["ratio"] = round(times["tN"] / times["t1"], 2)
-            times["fixture"] = "jittered-documents"
-            results[name] = times
-            print(f"\n# {name}: {times}", file=sys.stderr, flush=True)
-        for name in PROBES:
-            if only is not None and name not in only:
-                continue
-            fn = registry.QUERIES[name]
-            times = {}
-            for label, sf_dir in (("t1", src), ("tN", scaled)):
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                times[label] = round(best, 3)
-            times["ratio"] = round(times["tN"] / times["t1"], 2)
-            results[name] = times
-            print(f"\n# {name}: {times}", file=sys.stderr, flush=True)
-        # The embedding probes run against JITTERED copies (exact
-        # hardlink duplication would hand every vector N-1 exact
-        # twins and distort dedup/ranking semantics): copy i shifts
-        # vec_id by i*n_vec and perturbs one dimension, so the corpus
-        # is N x larger with only near-dup structure. For
-        # semantic_dedup, k = ceil(n/budget) grows N x with it,
-        # holding expected cluster size constant — the probe measures
-        # the linear-total-pair-cost claim of the k ∝ n sizing rule
-        # directly. For similarity_mmr_rerank the pool stays
-        # queries x 12, so the probe isolates the corpus-scan stage.
-        for name in JITTER_EMB_PROBES:
-            if only is not None and name not in only:
-                continue
-            fn = registry.QUERIES[name]
-            times = {}
-            for label, sf_dir in (("t1", src), ("tN", jittered)):
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                times[label] = round(best, 3)
-            times["ratio"] = round(times["tN"] / times["t1"], 2)
-            times["fixture"] = "jittered-embeddings"
-            results[name] = times
-            print(f"\n# {name}: {times}", file=sys.stderr, flush=True)
+            scaled = build(src, n)
+            built.append(scaled)
+            for name in names:
+                times = {
+                    key: min(time_query(spark, name, sf_dir, runs=2))
+                    for key, sf_dir in (("t1", src), ("tN", scaled))
+                }
+                times["ratio"] = round(times["tN"] / times["t1"], 2)
+                if label:
+                    times["fixture"] = label
+                results[name] = times
+                print(f"\n# {name}: {times}", file=sys.stderr, flush=True)
         print(json.dumps({"scale": n, "queries": results}))
     finally:
-        shutil.rmtree(scaled, ignore_errors=True)
-        shutil.rmtree(jittered, ignore_errors=True)
+        for d in built:
+            shutil.rmtree(d, ignore_errors=True)
     return 0
 
 

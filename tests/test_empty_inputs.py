@@ -60,17 +60,17 @@ def test_connected_components_on_empty_pairs(spark):
 
 
 def test_running_total_on_empty_input(spark):
-    from kafka_spark_streaming_app_spark.operators.llmprep import (
-        with_running_total,
+    from kafka_spark_streaming_app_spark.operators.skew import (
+        hist_running_totals,
     )
 
     df = spark.createDataFrame(
         [], T.StructType([
             T.StructField("id", T.LongType()),
-            T.StructField("v", T.DoubleType()),
+            T.StructField("v", T.LongType()),
         ])
     )
-    assert with_running_total(df, ["id"], "v").count() == 0
+    assert hist_running_totals(df, ["id"], {"rt": "v"}, large=True).count() == 0
 
 
 def test_single_token_doc_chunks_and_shingles(spark):

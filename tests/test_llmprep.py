@@ -88,28 +88,35 @@ def test_dataset_split_stable_under_repartition(spark):
 def test_distributed_prefix_sum_equals_global_window(spark):
     """The two-level prefix sum must equal a naive single-partition
     global-window cumsum — including duplicate order keys that may
-    straddle range-partition boundaries (total order via tiebreak)."""
+    straddle range-partition boundaries (total order via tiebreak), a
+    descending order Column, and null values: skipped by the sum, and
+    0 where no non-null value precedes (the leading null row)."""
     from pyspark.sql import Window
 
-    from kafka_spark_streaming_app_spark.operators.llmprep import (
-        with_running_total,
+    from kafka_spark_streaming_app_spark.operators.skew import (
+        hist_running_totals,
     )
 
-    rows = [(i, i % 7, float((i * 13) % 50 + 1)) for i in range(2000)]
-    df = spark.createDataFrame(rows, ["id", "grp", "v"]).repartition(16)
+    rows = [(i, i % 7, (i * 13) % 50 + 1) for i in range(2000)]
+    rows += [(2000, 7, None), (2001, 3, None)]
+    df = spark.createDataFrame(rows, "id long, grp int, v long").repartition(16)
+    order = [F.col("grp").desc(), F.col("id")]
     got = {
-        r.id: float(r.running_total)
-        for r in with_running_total(
-            df, order_cols=[F.col("grp"), F.col("id")], value_col="v"
+        r.id: r.running_total
+        for r in hist_running_totals(
+            df, order, {"running_total": "v"}, large=True
         ).collect()
     }
-    w = Window.orderBy("grp", "id").rowsBetween(
+    w = Window.orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     want = {
-        r.id: float(r.rt)
-        for r in df.withColumn("rt", F.sum("v").over(w)).collect()
+        r.id: r.rt
+        for r in df.withColumn(
+            "rt", F.coalesce(F.sum("v").over(w), F.lit(0))
+        ).collect()
     }
+    assert got[2000] == 0 and got[2001] > 0
     assert got == want
 
 

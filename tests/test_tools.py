@@ -86,3 +86,26 @@ def test_consumer_smoke_file_transport(tmp_path):
     os.makedirs(empty_dir)
     got = consume_sample_files(empty_dir, max_messages=10)
     assert got["empty"] and got["available"] == []
+
+
+def test_bench_time_query_and_job_report(spark, sf_smoke):
+    """``bench.py --only``'s two halves on the shared session: the timing
+    function returns one sample per run, and the job report lists the
+    query's own jobs and none of a query run just before it."""
+    import bench
+
+    sc = spark.sparkContext
+    sc.setJobGroup("before_bench", "before_bench")
+    try:
+        spark.range(10).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    before = set(sc.statusTracker().getJobIdsForGroup("before_bench"))
+    assert before
+
+    samples = bench.time_query(spark, "q6_forecast_revenue", sf_smoke, runs=2)
+    assert len(samples) == 2 and all(t > 0 for t in samples)
+    jobs = bench.job_report(spark, "q6_forecast_revenue")
+    assert any(tasks > 0 for _, _, tasks, _ in jobs), jobs
+    assert all(ms >= 0 for _, ms, _, _ in jobs), jobs
+    assert not before & {job_id for job_id, _, _, _ in jobs}
