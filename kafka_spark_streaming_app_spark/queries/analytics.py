@@ -16,6 +16,8 @@ from ..functions.hashing import TOKENS_SQL, h60_sql, tokens
 from ..operators.windowed import stabilized_sum
 from ..registry import query
 from ..sources.batch import load_table
+from .feeds import scratch_dir
+from .streaming import _HLL_ROLLUP_ORACLE  # shared with streaming_hll_rollup
 
 # --- heavy hitters: hot tokens across the corpus ---------------------------
 
@@ -1213,17 +1215,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # DataSketches HLL at lgConfigK=12: rsd ≈ 1.04/sqrt(2^12) ≈ 0.01625.
 _HLL_RSD = 1.04 / (2 ** 12) ** 0.5
-
-_HLL_ROLLUP_ORACLE = """
-SELECT
-    CAST(date_trunc('week', ts) AS TIMESTAMP) AS week_start,
-    event_type,
-    count(DISTINCT user_id) AS exact_users,
-    true AS sketch_within_tolerance
-FROM events
-GROUP BY date_trunc('week', ts), event_type
-ORDER BY week_start, event_type
-"""
 
 
 @query("hll_mergeable_rollup", _HLL_ROLLUP_ORACLE)
@@ -3771,11 +3762,8 @@ def compaction_roundtrip_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle digests the original — equality certifies the rewrite
     changed layout, not content. A 'files' row pins the compacted
     file count (the thing compaction is FOR)."""
-    import atexit
     import glob
     import os
-    import shutil
-    import tempfile
 
     from ..functions.hashing import h60
 
@@ -3783,10 +3771,7 @@ def compaction_roundtrip_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority",
     )
-    frag = tempfile.mkdtemp(prefix="compact_frag_")
-    compacted = tempfile.mkdtemp(prefix="compact_out_")
-    for d in (frag, compacted):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    frag, compacted = scratch_dir("compact_frag_"), scratch_dir("compact_out_")
     # the small-file problem, manufactured
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     # the compaction rewrite (size-targeted: 4 writer tasks)

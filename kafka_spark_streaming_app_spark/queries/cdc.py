@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.batch import load_table
+from .feeds import materialize_feed, scratch_dir
+from .streaming import _run_available_now
 
 _CDC_ORACLE = """
 WITH changes AS (
@@ -142,9 +144,7 @@ def _change_feed_files(spark: SparkSession, sf_dir: str) -> str:
     """Change feed as JSON-lines files (8 files → several
     micro-batches under maxFilesPerTrigger), via the shared memoized
     feeder."""
-    from .feeds import materialize_json_feed
-
-    return materialize_json_feed(
+    return materialize_feed(
         spark, sf_dir, "cdc",
         lambda s, d: _change_feed(load_table(s, d, "orders")),
     )
@@ -198,16 +198,8 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger that costs O(batch) and one that re-snapshots a 100 TB
     key space. Replayed batch ids (foreachBatch is at-least-once)
     skip via the applied-batch marker."""
-    import atexit
-    import shutil
-    import tempfile
-
     src = _change_feed_files(spark, sf_dir)
-    state_root = tempfile.mkdtemp(prefix="cdc_state_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "latest")
+    state_dir = os.path.join(scratch_dir("cdc_state_"), "latest")
     schema = "c_custkey bigint, seq bigint, op string, new_bal double"
     stream = (
         spark.readStream.schema(schema)
@@ -229,24 +221,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=8, write_partitions=1,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            # Partial CDC state is a silently-wrong merge result; fail
-            # loudly rather than let a caller read a half-applied feed.
-            raise RuntimeError(
-                "streaming_cdc_upsert: availableNow run did not finish "
-                "within 300s; refusing to return partially-merged state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, merge_state, "streaming_cdc_upsert")
 
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -359,11 +334,7 @@ def _matview_revision_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _matview_feed_files(spark: SparkSession, sf_dir: str) -> str:
-    from .feeds import materialize_json_feed
-
-    return materialize_json_feed(
-        spark, sf_dir, "mv", _matview_revision_feed
-    )
+    return materialize_feed(spark, sf_dir, "mv", _matview_revision_feed)
 
 
 @query("streaming_matview_join", _MATVIEW_ORACLE)
@@ -382,21 +353,13 @@ def streaming_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     helper (CDC = argmax state, quantile = additive state, here the
     state IS a join view), and the one a 100 TB serving layer runs:
     per-trigger cost ∝ batch rows, view stays query-ready on disk."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming.state import (
         merge_into_partitioned_state,
         read_state,
     )
 
     src = _matview_feed_files(spark, sf_dir)
-    state_root = tempfile.mkdtemp(prefix="mv_state_")
-    ckpt = tempfile.mkdtemp(prefix="mv_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "view")
+    state_dir = os.path.join(scratch_dir("mv_state_"), "view")
 
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
@@ -442,22 +405,7 @@ def streaming_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=8, write_partitions=1,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_matview_join: availableNow run did not finish "
-                "within 300s; refusing to return a partially-merged view"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, merge_state, "streaming_matview_join")
 
     return (
         read_state(spark, state_dir)
@@ -548,10 +496,6 @@ def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``merge_into_partitioned_state`` (O(batch keys) I/O); the
     aggregate state is segment-sized compact state (one-job swap); the
     static dimension joins the BATCH's delta keys only, broadcast."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming.state import (
         merge_into_compact_state,
         merge_into_partitioned_state,
@@ -559,14 +503,8 @@ def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _change_feed_files(spark, sf_dir)
-    roots = {
-        n: tempfile.mkdtemp(prefix=f"ivm_{n}_") for n in ("keys", "agg")
-    }
-    ckpt = tempfile.mkdtemp(prefix="ivm_ckpt_")
-    for d in (*roots.values(), ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    key_state = os.path.join(roots["keys"], "state")
-    agg_state = os.path.join(roots["agg"], "state")
+    key_state = os.path.join(scratch_dir("ivm_keys_"), "state")
+    agg_state = os.path.join(scratch_dir("ivm_agg_"), "state")
 
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -691,22 +629,7 @@ def streaming_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=8, write_partitions=1,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_ivm_agg: availableNow run did not finish "
-                "within 300s; refusing to serve a partially-updated view"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, merge_batch, "streaming_ivm_agg")
 
     view = read_state(spark, agg_state)
     return (
@@ -754,21 +677,13 @@ def streaming_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch changes; untouched buckets are never read or rewritten.
     Serving is a pure state scan that must hash-match the batch
     window build (`scd2_build_versions`) exactly."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming.state import (
         merge_into_partitioned_state,
         read_state,
     )
 
     src = _change_feed_files(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="scd2_state_")
-    ckpt = tempfile.mkdtemp(prefix="scd2_ckpt_")
-    for d in (root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(root, "state")
+    state_dir = os.path.join(scratch_dir("scd2_state_"), "state")
 
     schema = "c_custkey bigint, seq bigint, op string, new_bal double"
     stream = (
@@ -805,22 +720,7 @@ def streaming_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=8, write_partitions=1,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_scd2_build: availableNow run did not finish "
-                "within 300s; refusing to serve a partially-built history"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, merge_batch, "streaming_scd2_build")
 
     return (
         read_state(spark, state_dir)

@@ -28,6 +28,7 @@ from ..operators.llmprep import global_shuffle, per_key_cap
 from ..operators.text import QUALITY_WEIGHTS, quality_score
 from ..registry import query
 from ..sources.batch import load_table
+from .feeds import materialize_feed
 
 # --- line-level dedup (C4-style) ---------------------------------------------
 
@@ -409,9 +410,6 @@ def importance_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming quality filter (through the real engine) ----------------------
 
-_DOC_STREAM_DIRS: dict = {}
-
-
 def _documents_as_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -424,26 +422,13 @@ def _documents_as_stream(
     (doc_id, text, source); ``schema`` picks which fields a query
     parses, and ``max_files_per_trigger`` splits the replay into
     several micro-batches for merge-independence proofs."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    # applicationId is stable and unique per SparkContext — id() values
-    # can be recycled after GC, which could silently hand a new session
-    # a stale directory
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _DOC_STREAM_DIRS.get(key)
-    if src is None or not os.path.isdir(src):
-        docs = load_table(spark, sf_dir, "documents").select(
+    src = materialize_feed(
+        spark, sf_dir, "doc_stream",
+        lambda s, d: load_table(s, d, "documents").select(
             "doc_id", "text", "source"
-        )
-        src = tempfile.mkdtemp(prefix="doc_stream_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        docs.repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).json(src)
-        _DOC_STREAM_DIRS[key] = src
+        ),
+        files=None,
+    )
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option(

@@ -1,14 +1,16 @@
-"""Shared memoized feed materializer for the streaming fixture
-queries.
+"""Scratch state of the registry queries, owned in one place:
 
-Several streaming operators (CDC merge, materialized-view upkeep,
-the lakehouse sinks, funnels) replay a deterministic JSON-lines feed
-as a file stream. The feed CONTENTS differ per family, but the
-lifecycle is identical: derive a DataFrame from the sf tables,
-materialize it once per (session, sf_dir) as N JSON files (N files →
-several micro-batches under ``maxFilesPerTrigger``), clean up at
-exit. This module owns that lifecycle once so each family supplies
-only its derivation.
+- scratch dirs (``scratch_dir``): a fresh temp dir per call, removed
+  at interpreter exit — streaming checkpoints, state roots, tables a
+  query mutates;
+- fixture dirs (``memo_dir``): a dir built once per (session, sf_dir,
+  kind) and shared by every query that reads it — lakehouse tables,
+  storage layouts, the flush sentinel;
+- feeds (``materialize_feed``): the fixture dirs that replay a
+  deterministic DataFrame as N files for a file stream (N files →
+  several micro-batches under ``maxFilesPerTrigger``). The feed
+  CONTENTS differ per family; each family supplies only its
+  derivation.
 """
 
 from __future__ import annotations
@@ -18,7 +20,30 @@ import os
 import shutil
 import tempfile
 
-_FEED_DIRS: dict[tuple, str] = {}
+_DIRS: dict[tuple, str] = {}
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new temp dir, removed when the interpreter exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def memo_dir(spark, sf_dir: str, kind: str, build) -> str:
+    """The dir ``build(dir)`` fills, built once per (session, sf_dir,
+    kind) and reused while it exists. The dir is remembered only after
+    ``build`` returns, so a build that raised is redone by the next
+    call instead of being handed out half-written. applicationId, not
+    id(spark): id() values are recycled after GC, which could hand a
+    new session a stale dir."""
+    key = (spark.sparkContext.applicationId, sf_dir, kind)
+    d = _DIRS.get(key)
+    if d is None or not os.path.isdir(d):
+        d = scratch_dir(f"{kind}_")
+        build(d)
+        _DIRS[key] = d
+    return d
 
 
 def materialize_feed(spark, sf_dir: str, kind: str, build,
@@ -27,23 +52,14 @@ def materialize_feed(spark, sf_dir: str, kind: str, build,
     (session, sf_dir, kind) as ``files`` files (None = one per core,
     so the file-stream source's task-per-file parallelism matches the
     cluster); ``fmt`` is "json" (JSON-lines) or "text" (a single
-    pre-serialized ``value`` column). Returns the directory. Memoized
-    so every query replaying the same feed shares one
-    materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    src = _FEED_DIRS.get(key)
-    if src is None or not os.path.isdir(src):
-        src = tempfile.mkdtemp(prefix=f"{kind}_feed_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
+    pre-serialized ``value`` column). Returns the directory, shared by
+    every query replaying the same feed."""
+
+    def write(d: str) -> None:
         n = files if files is not None else (
             spark.sparkContext.defaultParallelism
         )
         writer = build(spark, sf_dir).repartition(n).write.mode("overwrite")
-        getattr(writer, fmt)(src)
-        _FEED_DIRS[key] = src
-    return src
+        getattr(writer, fmt)(d)
 
-
-def materialize_json_feed(spark, sf_dir: str, kind: str, build,
-                          files: int = 8) -> str:
-    return materialize_feed(spark, sf_dir, kind, build, files, "json")
+    return memo_dir(spark, sf_dir, kind, write)

@@ -12,32 +12,16 @@ crosses a text format travels as integer cents.
 
 from __future__ import annotations
 
-import atexit
+import functools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.batch import load_table
-
-# one fixture materialization per (session, sf_dir, kind)
-_FIXTURE_DIRS: dict[tuple[str, str, str], str] = {}
-
-
-def _fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str | None:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    d = _FIXTURE_DIRS.get(key)
-    if d is not None and os.path.isdir(d):
-        return d
-    return None
-
-
-def _remember(spark: SparkSession, sf_dir: str, kind: str, d: str) -> None:
-    _FIXTURE_DIRS[(spark.sparkContext.applicationId, sf_dir, kind)] = d
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+from .feeds import materialize_feed, memo_dir, scratch_dir
+from .streaming import _run_available_now, _run_to_table
 
 
 # --- ORC round-trip with partition pruning -----------------------------------
@@ -69,9 +53,8 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py), ORC carries the same predicate-pushdown /
     column-pruning contract as parquet, and the aggregate is one
     partial+final pass over the pruned split set."""
-    d = _fixture_dir(spark, sf_dir, "orc")
-    if d is None:
-        d = tempfile.mkdtemp(prefix="orc_fixture_")
+
+    def build(d: str) -> None:
         (
             load_table(spark, sf_dir, "orders")
             .select(
@@ -86,7 +69,8 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderstatus")
             .orc(d)
         )
-        _remember(spark, sf_dir, "orc", d)
+
+    d = memo_dir(spark, sf_dir, "orc", build)
     return (
         spark.read.orc(d)
         .filter(F.col("o_orderstatus") == "F")
@@ -143,9 +127,8 @@ def csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: schema-explicit single-pass parse (no
     inferSchema scan), corrupt rows quarantined per-row instead of
     failing the job, and the audit is one partial+final aggregate."""
-    d = _fixture_dir(spark, sf_dir, "csv")
-    if d is None:
-        d = tempfile.mkdtemp(prefix="csv_fixture_")
+
+    def build(d: str) -> None:
         lines = load_table(spark, sf_dir, "events").select(
             F.concat_ws(
                 ",",
@@ -171,7 +154,8 @@ def csv_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value")
         )
         lines.write.mode("overwrite").text(d)
-        _remember(spark, sf_dir, "csv", d)
+
+    d = memo_dir(spark, sf_dir, "csv", build)
     parsed = (
         spark.read.schema(
             "event_id bigint, user_id bigint, event_type string, "
@@ -436,9 +420,7 @@ def delta_log_replay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.deltalog import DeltaFixtureWriter, read_delta_snapshot
 
-    d = _fixture_dir(spark, sf_dir, "delta")
-    if d is None:
-        d = tempfile.mkdtemp(prefix="delta_fixture_")
+    def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
             ["o_orderkey", "o_orderstatus", "o_orderpriority",
              "o_totalprice"]
@@ -470,7 +452,8 @@ def delta_log_replay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         w.checkpoint()
         for i, s in enumerate(rest):
             w.commit(add_files=[(f"part-x{i}.parquet", recs[s])])
-        _remember(spark, sf_dir, "delta", d)
+
+    d = memo_dir(spark, sf_dir, "delta", build)
     df = read_delta_snapshot(spark, d)
     return (
         df.groupBy("o_orderstatus")
@@ -522,9 +505,7 @@ def iceberg_metadata_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_iceberg_snapshot,
     )
 
-    d = _fixture_dir(spark, sf_dir, "iceberg")
-    if d is None:
-        d = tempfile.mkdtemp(prefix="iceberg_fixture_")
+    def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
             ["o_orderkey", "o_orderpriority", "o_totalprice"]
         ]
@@ -554,7 +535,8 @@ def iceberg_metadata_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(STATUS_DELETED, f0), (STATUS_ADDED, f0r)]
             + [(STATUS_ADDED, df) for df in rest]
         )
-        _remember(spark, sf_dir, "iceberg", d)
+
+    d = memo_dir(spark, sf_dir, "iceberg", build)
     df = read_iceberg_snapshot(spark, d)
     return (
         df.groupBy("o_orderpriority")
@@ -949,9 +931,7 @@ def _orders_json_feed(spark: SparkSession, sf_dir: str) -> str:
     """Shared orders JSON feed for the lakehouse sinks — one
     materialization per (session, sf_dir), every sink replays the
     same files."""
-    from .feeds import materialize_json_feed
-
-    return materialize_json_feed(
+    return materialize_feed(
         spark, sf_dir, "orders",
         lambda s, d: load_table(s, d, "orders").select(
             "o_orderkey",
@@ -984,7 +964,7 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distributed parquet write, per-file add actions); the driver
     writes only the O(KB) commit JSON after an O(log) replay scan —
     the log, not the directory, defines what the readback sees."""
-    table_dir = _run_delta_sink_stream(spark, sf_dir)
+    table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
 
     from ..sources.deltalog import read_delta_snapshot
 
@@ -992,17 +972,11 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_delta_sink_stream(
-    spark: SparkSession, sf_dir: str, partition_by: tuple = ()
+    spark: SparkSession, sf_dir: str, table_dir: str,
+    partition_by: tuple = (),
 ) -> str:
     """Drive the orders feed through the foreachBatch Delta sink
-    (availableNow); returns the table dir."""
-    import atexit as _atexit
-    import shutil as _shutil
-
-    table_dir = tempfile.mkdtemp(prefix="delta_sink_")
-    ckpt = tempfile.mkdtemp(prefix="delta_sink_ckpt_")
-    for d in (table_dir, ckpt):
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    (availableNow) into ``table_dir``; returns the table dir."""
     stream = _orders_feed_stream(spark, sf_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1014,21 +988,7 @@ def _run_delta_sink_stream(
             partition_by=partition_by,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise RuntimeError(
-                "delta sink: availableNow run did not finish "
-                "within 300s; refusing to read a partial table"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, sink, "delta sink")
     return table_dir
 
 
@@ -1047,13 +1007,12 @@ def _partitioned_orders_table(spark: SparkSession, sf_dir: str) -> str:
     """The PARTITIONED Delta sink's table, built once per session —
     shared by the read-only partitioned queries (the maintenance
     queries build their own tables because they mutate them)."""
-    d = _fixture_dir(spark, sf_dir, "delta_part_table")
-    if d is None:
-        d = _run_delta_sink_stream(
-            spark, sf_dir, partition_by=("o_orderstatus",)
-        )
-        _remember(spark, sf_dir, "delta_part_table", d)
-    return d
+    return memo_dir(
+        spark, sf_dir, "delta_part_table",
+        lambda d: _run_delta_sink_stream(
+            spark, sf_dir, d, partition_by=("o_orderstatus",)
+        ),
+    )
 
 
 @query("streaming_delta_sink_partitioned", _DELTA_STREAM_ORACLE)
@@ -1135,7 +1094,7 @@ def delta_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_checkpoint,
     )
 
-    table_dir = _run_delta_sink_stream(spark, sf_dir)
+    table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
     write_checkpoint(table_dir)
     cleanup_log(table_dir)
     vacuum(table_dir, keep_versions=1)
@@ -1332,24 +1291,20 @@ def streaming_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay idempotence at once."""
     from ..sources.iceberglog import read_iceberg_snapshot
 
-    table_dir = _run_iceberg_sink_stream(spark, sf_dir)
+    table_dir = _run_iceberg_sink_stream(
+        spark, sf_dir, scratch_dir("iceberg_sink_")
+    )
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
 
 def _run_iceberg_sink_stream(
-    spark: SparkSession, sf_dir: str, partition_by: tuple = ()
+    spark: SparkSession, sf_dir: str, table_dir: str,
+    partition_by: tuple = (),
 ) -> str:
     """Drive the orders feed through the foreachBatch Iceberg sink
-    (availableNow); returns the table dir."""
-    import atexit as _atexit
-    import shutil as _shutil
-
+    (availableNow) into ``table_dir``; returns the table dir."""
     from ..sources.iceberglog import IcebergCommitter
 
-    table_dir = tempfile.mkdtemp(prefix="iceberg_sink_")
-    ckpt = tempfile.mkdtemp(prefix="iceberg_sink_ckpt_")
-    for d in (table_dir, ckpt):
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
     committer = IcebergCommitter(
         table_dir, _ICEBERG_SINK_FIELDS, partition_by
     )
@@ -1360,32 +1315,17 @@ def _run_iceberg_sink_stream(
             committer, table_dir, batch_df, batch_id, partition_by
         )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise RuntimeError(
-                "iceberg sink: availableNow run did not finish "
-                "within 300s; refusing to read a partial table"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, sink, "iceberg sink")
     return table_dir
 
 
 def _partitioned_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
-    d = _fixture_dir(spark, sf_dir, "iceberg_part_table")
-    if d is None:
-        d = _run_iceberg_sink_stream(
-            spark, sf_dir, partition_by=("o_orderstatus",)
-        )
-        _remember(spark, sf_dir, "iceberg_part_table", d)
-    return d
+    return memo_dir(
+        spark, sf_dir, "iceberg_part_table",
+        lambda d: _run_iceberg_sink_stream(
+            spark, sf_dir, d, partition_by=("o_orderstatus",)
+        ),
+    )
 
 
 @query("streaming_iceberg_sink_partitioned", _DELTA_STREAM_ORACLE)
@@ -1448,7 +1388,9 @@ def iceberg_maintenance_roundtrip(
         read_iceberg_snapshot,
     )
 
-    table_dir = _run_iceberg_sink_stream(spark, sf_dir)
+    table_dir = _run_iceberg_sink_stream(
+        spark, sf_dir, scratch_dir("iceberg_sink_")
+    )
     expire_snapshots(table_dir, keep=1)
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1463,24 +1405,22 @@ _TRANSFORM_SPEC = (
 
 
 def _multipart_orders_delta(spark: SparkSession, sf_dir: str) -> str:
-    d = _fixture_dir(spark, sf_dir, "delta_multipart_table")
-    if d is None:
-        d = _run_delta_sink_stream(
-            spark, sf_dir,
+    return memo_dir(
+        spark, sf_dir, "delta_multipart_table",
+        lambda d: _run_delta_sink_stream(
+            spark, sf_dir, d,
             partition_by=("o_orderstatus", "o_orderpriority"),
-        )
-        _remember(spark, sf_dir, "delta_multipart_table", d)
-    return d
+        ),
+    )
 
 
 def _transform_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
-    d = _fixture_dir(spark, sf_dir, "iceberg_transform_table")
-    if d is None:
-        d = _run_iceberg_sink_stream(
-            spark, sf_dir, partition_by=_TRANSFORM_SPEC
-        )
-        _remember(spark, sf_dir, "iceberg_transform_table", d)
-    return d
+    return memo_dir(
+        spark, sf_dir, "iceberg_transform_table",
+        lambda d: _run_iceberg_sink_stream(
+            spark, sf_dir, d, partition_by=_TRANSFORM_SPEC
+        ),
+    )
 
 
 @query("streaming_delta_sink_multipart", _DELTA_STREAM_ORACLE)
@@ -1508,13 +1448,7 @@ def _v2_checkpoint_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     post-checkpoint append."""
     from ..sources.deltalog import cleanup_log, write_checkpoint
 
-    d = _fixture_dir(spark, sf_dir, "delta_v2cp_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_v2cp_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
         _delta_stream_commit(
             d, base.filter(F.col("o_orderkey") % 2 == 0), 0
@@ -1524,8 +1458,8 @@ def _v2_checkpoint_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         )
         write_checkpoint(d, parts=2, v2=True)
         cleanup_log(d)
-        _remember(spark, sf_dir, "delta_v2cp_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_v2cp_table", build)
 
 
 @query("delta_v2_checkpoint_read", _DELTA_STREAM_ORACLE)
@@ -1713,36 +1647,24 @@ def _skipping_agg(df: DataFrame) -> DataFrame:
 
 
 def _clustered_orders_delta(spark: SparkSession, sf_dir: str) -> str:
-    d = _fixture_dir(spark, sf_dir, "delta_clustered_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_clustered_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         _delta_stream_commit(
             d, _clustered_orders_batch(spark, sf_dir), 0
         )
-        _remember(spark, sf_dir, "delta_clustered_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_clustered_table", build)
 
 
 def _clustered_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.iceberglog import IcebergCommitter
 
-    d = _fixture_dir(spark, sf_dir, "iceberg_clustered_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="iceberg_clustered_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         _iceberg_stream_commit(
             committer, d, _clustered_orders_batch(spark, sf_dir), 0
         )
-        _remember(spark, sf_dir, "iceberg_clustered_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "iceberg_clustered_table", build)
 
 
 @query("delta_stats_skipping_read", _SKIP_ORACLE)
@@ -1881,37 +1803,25 @@ def _delta_evolved_commit(
 
 
 def _evolved_orders_delta(spark: SparkSession, sf_dir: str) -> str:
-    d = _fixture_dir(spark, sf_dir, "delta_evolved_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_evolved_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         v1, v2 = _evolve_batches(spark, sf_dir)
         _delta_evolved_commit(d, v1, 0, _EVOLVE_FIELDS_V1)
         _delta_evolved_commit(d, v2, 1, _EVOLVE_FIELDS_V2)
-        _remember(spark, sf_dir, "delta_evolved_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_evolved_table", build)
 
 
 def _evolved_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.iceberglog import IcebergCommitter
 
-    d = _fixture_dir(spark, sf_dir, "iceberg_evolved_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="iceberg_evolved_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         committer = IcebergCommitter(d, list(_EVOLVE_FIELDS_V1))
         v1, v2 = _evolve_batches(spark, sf_dir)
         _iceberg_stream_commit(committer, d, v1, 0)
         committer.evolve_schema([("o_orderpriority", "string")])
         _iceberg_stream_commit(committer, d, v2, 2)  # even: no compact
-        _remember(spark, sf_dir, "iceberg_evolved_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "iceberg_evolved_table", build)
 
 
 @query("delta_schema_evolution_read", _EVOLVE_ORACLE)
@@ -2038,13 +1948,7 @@ def _mor_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     columns, sorted (file_path, pos) per spec."""
     from ..sources.iceberglog import IcebergCommitter
 
-    d = _fixture_dir(spark, sf_dir, "iceberg_mor_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="iceberg_mor_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         _iceberg_stream_commit(
             committer, d, _clustered_orders_batch(spark, sf_dir), 0
@@ -2073,8 +1977,8 @@ def _mor_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
             if f.endswith(".parquet")
         ]
         committer.commit(2, entries, operation="delete")
-        _remember(spark, sf_dir, "iceberg_mor_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "iceberg_mor_table", build)
 
 
 _EQ_ORACLE = """
@@ -2105,13 +2009,7 @@ def _eq_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     spec's strictly-lower-sequence scoping, reproducible in SQL)."""
     from ..sources.iceberglog import IcebergCommitter
 
-    d = _fixture_dir(spark, sf_dir, "iceberg_eq_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="iceberg_eq_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         base = _clustered_orders_batch(spark, sf_dir)
         _iceberg_stream_commit(
@@ -2126,8 +2024,8 @@ def _eq_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
         _iceberg_stream_commit(
             committer, d, base.filter(F.col("o_orderkey") % 10 == 0), 4
         )
-        _remember(spark, sf_dir, "iceberg_eq_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "iceberg_eq_table", build)
 
 
 @query("iceberg_equality_delete_read", _EQ_ORACLE)
@@ -2205,13 +2103,7 @@ def _dv_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         read_delta_snapshot,
     )
 
-    d = _fixture_dir(spark, sf_dir, "delta_dv_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_dv_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         _delta_stream_commit(
             d, _clustered_orders_batch(spark, sf_dir), 0
         )
@@ -2234,8 +2126,8 @@ def _dv_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         # this fixture pins the INLINE shape; the file-backed twin is
         # _dv_file_orders_delta below
         delete_rows_by_position(d, by_rel, inline_threshold=1 << 30)
-        _remember(spark, sf_dir, "delta_dv_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_dv_table", build)
 
 
 @query("delta_deletion_vector_read", _DV_ORACLE)
@@ -2288,13 +2180,7 @@ def _dv_file_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         read_delta_snapshot,
     )
 
-    d = _fixture_dir(spark, sf_dir, "delta_dv_file_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_dvf_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         _delta_stream_commit(
             d, _clustered_orders_batch(spark, sf_dir), 0
         )
@@ -2314,8 +2200,8 @@ def _dv_file_orders_delta(spark: SparkSession, sf_dir: str) -> str:
             rel = os.path.relpath(r.file_path, d)
             by_rel.setdefault(rel, []).append(r.pos)
         delete_rows_by_position(d, by_rel, inline_threshold=0)
-        _remember(spark, sf_dir, "delta_dv_file_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_dv_file_table", build)
 
 
 @query("delta_deletion_vector_file_read", _DV_FILE_ORACLE)
@@ -2377,13 +2263,7 @@ def _cdf_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         read_delta_snapshot,
     )
 
-    d = _fixture_dir(spark, sf_dir, "delta_cdf_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="delta_cdf_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
         _delta_stream_commit(
             d, base.filter(F.col("o_orderkey") % 2 == 0), 0
@@ -2408,8 +2288,8 @@ def _cdf_orders_delta(spark: SparkSession, sf_dir: str) -> str:
                 os.path.relpath(r.file_path, d), []
             ).append(r.pos)
         delete_rows_by_position(d, by_rel)
-        _remember(spark, sf_dir, "delta_cdf_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "delta_cdf_table", build)
 
 
 @query("delta_change_feed_read", _CDF_ORACLE)
@@ -2468,13 +2348,7 @@ def _cdf_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
         read_iceberg_snapshot,
     )
 
-    d = _fixture_dir(spark, sf_dir, "iceberg_cdf_table")
-    if d is None:
-        import atexit as _atexit
-        import shutil as _shutil
-
-        d = tempfile.mkdtemp(prefix="iceberg_cdf_")
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         base = _clustered_orders_batch(spark, sf_dir)
         _iceberg_stream_commit(
@@ -2504,8 +2378,8 @@ def _cdf_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
             if f.endswith(".parquet")
         ]
         committer.commit(4, entries, operation="delete")
-        _remember(spark, sf_dir, "iceberg_cdf_table", d)
-    return d
+
+    return memo_dir(spark, sf_dir, "iceberg_cdf_table", build)
 
 
 @query("iceberg_changelog_read", _ICEBERG_CDF_ORACLE)
@@ -2616,14 +2490,9 @@ def streaming_delta_source_roundtrip(
     the version-offset planning, the incremental file resolution and
     the streaming engine together. The write side (streaming INTO
     delta) is streaming_delta_sink — this closes the loop."""
-    import atexit as _atexit
-    import shutil as _shutil
-
     from ..sources.deltastream_ds import register_deltastream
-    from ..streaming.pipeline import write_memory_stream
 
-    table_dir = tempfile.mkdtemp(prefix="delta_source_")
-    _atexit.register(_shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = scratch_dir("delta_source_")
     # Perf shape (r12): the four waves' data files are staged by ONE
     # distributed job and their stats collected by ONE job
     # (_staged_order_waves); each between-trigger "commit" is then a
@@ -2675,26 +2544,13 @@ def streaming_delta_source_roundtrip(
             F.sum("cents").cast("bigint").alias("cents"),
         )
     )
-    name = "delta_source_sink"
     # state width: the aggregate's group count is domain-bounded
-    # (status x priority), so size the stream's state partitions by
-    # state volume, not the session default — the _run_to_table rule
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = write_memory_stream(agg, name, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    try:
-        q.processAllAvailable()
-        for w in range(1, 4):
-            _commit_wave(w)  # driver-side metadata append
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy(
-        "o_orderstatus", "o_orderpriority"
-    )
+    # (status x priority); each later wave is a driver-side metadata
+    # append drained into its own micro-batch
+    return _run_to_table(
+        spark, agg, "complete", shuffle_partitions=8,
+        steps=[functools.partial(_commit_wave, w) for w in range(1, 4)],
+    ).orderBy("o_orderstatus", "o_orderpriority")
 
 
 @query("streaming_iceberg_source_roundtrip", _DELTA_STREAM_ORACLE)
@@ -2708,15 +2564,10 @@ def streaming_iceberg_source_roundtrip(
     added_snapshot_id, one task per added file). The complete-mode
     aggregate must equal the batch oracle — both lakehouse formats
     now stream in AND out of the engine with the same semantics."""
-    import atexit as _atexit
-    import shutil as _shutil
-
     from ..sources.iceberglog import IcebergCommitter
     from ..sources.icebergstream_ds import register_icebergstream
-    from ..streaming.pipeline import write_memory_stream
 
-    table_dir = tempfile.mkdtemp(prefix="iceberg_source_")
-    _atexit.register(_shutil.rmtree, table_dir, ignore_errors=True)
+    table_dir = scratch_dir("iceberg_source_")
     committer = IcebergCommitter(table_dir, _ICEBERG_SINK_FIELDS)
     # Perf shape (r12): one distributed job stages all four waves'
     # data files (see _staged_order_waves); each between-trigger
@@ -2751,22 +2602,10 @@ def streaming_iceberg_source_roundtrip(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.sum("cents").cast("bigint").alias("cents"),
     )
-    name = "iceberg_source_sink"
-    # state width sized by state volume (domain-bounded group count),
-    # matching the delta twin and the _run_to_table rule
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = write_memory_stream(agg, name, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    try:
-        q.processAllAvailable()
-        for w in range(1, 4):
-            _commit_wave(w)  # driver-side metadata commit
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy(
-        "o_orderstatus", "o_orderpriority"
-    )
+    # state width sized by state volume (domain-bounded group count);
+    # each later wave is a driver-side metadata commit drained into its
+    # own micro-batch
+    return _run_to_table(
+        spark, agg, "complete", shuffle_partitions=8,
+        steps=[functools.partial(_commit_wave, w) for w in range(1, 4)],
+    ).orderBy("o_orderstatus", "o_orderpriority")

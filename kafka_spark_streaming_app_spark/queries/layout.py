@@ -12,17 +12,12 @@ checks that a round-trip through the layout returns exactly the same
 answer as computing directly on the source parquet.
 
 Fixture layouts are materialized once per (session, sf_dir) into
-temp directories (the wire-stream cache pattern,
-``queries/streaming.py``), registered with atexit cleanup.
+scratch directories (``queries/feeds.py``).
 """
 
 from __future__ import annotations
 
-import atexit
 import hashlib
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,23 +26,19 @@ from ..operators.windowed import stabilized_sum
 from ..registry import query
 from ..sources.batch import load_table
 from ..sources.writers import write_bucketed_table, write_partitioned_parquet
+from .feeds import memo_dir, scratch_dir
 
-# one layout materialization per (session, sf_dir)
-_PART_DIRS: dict[tuple[str, str], str] = {}
+# the bucketed tables of each (session, sf_dir), by catalog name
 _BUCKET_TABLES: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _PART_DIRS.get(key)
-    if out is None or not os.path.isdir(out):
-        out = tempfile.mkdtemp(prefix="events_part_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        write_partitioned_parquet(
+    return memo_dir(
+        spark, sf_dir, "events_part",
+        lambda out: write_partitioned_parquet(
             load_table(spark, sf_dir, "events"), out, ["event_type"]
-        )
-        _PART_DIRS[key] = out
-    return out
+        ),
+    )
 
 
 _PRUNE_ORACLE = """
@@ -109,10 +100,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         (orders_t, "orders", "o_custkey"),
         (cust_t, "customer", "c_custkey"),
     ):
-        path = tempfile.mkdtemp(prefix=f"{tbl}_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
         write_bucketed_table(
-            load_table(spark, sf_dir, src), tbl, col, num_buckets=8, path=path
+            load_table(spark, sf_dir, src), tbl, col, num_buckets=8,
+            path=scratch_dir(f"{tbl}_"),
         )
     _BUCKET_TABLES[key] = (orders_t, cust_t)
     return orders_t, cust_t

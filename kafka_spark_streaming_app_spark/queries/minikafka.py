@@ -30,14 +30,18 @@ is this repo's worked example).
 from __future__ import annotations
 
 import atexit
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
 from ..registry import query
 from ..schemas import ORDER_SCHEMA
-from ..streaming.pipeline import parse_and_clean, write_memory_stream
+from ..streaming.pipeline import parse_and_clean
+from .feeds import scratch_dir
 from .pyds import _case, _h, _LOC_CASE, _PYDS_ORACLE, _ROWS
+from .streaming import _run_to_table
 
 _TOPIC = "orders"
 _V2_TOPIC = "orders_v2"
@@ -281,15 +285,16 @@ def _windowed_location_agg(parsed: DataFrame) -> DataFrame:
     )
 
 
-def _drain_waves(spark: SparkSession, broker, topic: str, q) -> None:
-    """Produce the deterministic stream in waves WHILE query ``q``
-    runs, draining each wave into its own micro-batch. Progress is
-    read from the broker's own end offsets (not an in-memory flag):
-    a replayed query in the same session just drains the complete
-    topic, and a partial prior produce raises instead of silently
-    appending duplicates."""
+def _wave_steps(spark: SparkSession, broker, topic: str) -> list:
+    """One driver-side step per wave, each producing its wave of the
+    deterministic stream, for a running query to drain into its own
+    micro-batch. Progress is read from the broker's own end offsets
+    (not an in-memory flag): a replayed query in the same session
+    finds the topic complete and produces nothing, and a partial prior
+    produce raises instead of silently appending duplicates."""
     per_wave = -(-_ROWS // _WAVES)
-    for w in range(_WAVES):
+
+    def produce(w: int) -> None:
         lo = w * per_wave
         hi = min(lo + per_wave, _ROWS)
         total = _produced_through(broker, topic)
@@ -303,7 +308,8 @@ def _drain_waves(spark: SparkSession, broker, topic: str, q) -> None:
                 )
             if lo < hi:
                 _produce_rows(spark, broker, topic, lo, hi)
-        q.processAllAvailable()
+
+    return [functools.partial(produce, w) for w in range(_WAVES)]
 
 
 _ROUNDTRIP_ORACLE = f"""
@@ -350,21 +356,13 @@ def streaming_kafka_roundtrip(
         .load()
     )
     parsed = parse_and_clean(raw, ORDER_SCHEMA, watermark=None)
-    agg = _windowed_location_agg(parsed)
-    name = "kafka_roundtrip_sink"
     # state width sized by state volume (windows x locations), the
     # streaming-module rule — not the session shuffle width (r12)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = write_memory_stream(agg, name, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    try:
-        _drain_waves(spark, broker, _STREAM_TOPIC, q)
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("window_start", "location")
+    return _run_to_table(
+        spark, _windowed_location_agg(parsed), "complete",
+        shuffle_partitions=8,
+        steps=_wave_steps(spark, broker, _STREAM_TOPIC),
+    ).orderBy("window_start", "location")
 
 
 @query("streaming_kafka_to_delta_pipeline", _ROUNDTRIP_ORACLE)
@@ -387,8 +385,6 @@ def streaming_kafka_to_delta_pipeline(
     aggregate state is windows × locations (matview-sized, the one
     thing that SHOULD flow whole per refresh); the Delta data path is
     a distributed write with the driver holding only the O(KB) log."""
-    import tempfile as _tempfile
-
     from ..queries.formats import _delta_overwrite_commit
     from ..sources.deltalog import read_delta_snapshot
 
@@ -402,13 +398,7 @@ def streaming_kafka_to_delta_pipeline(
     agg = _windowed_location_agg(
         parse_and_clean(raw, ORDER_SCHEMA, watermark=None)
     )
-    import atexit as _atexit
-    import shutil as _shutil
-
-    table_dir = _tempfile.mkdtemp(prefix="kafka_delta_pipe_")
-    ckpt = _tempfile.mkdtemp(prefix="kafka_delta_pipe_ckpt_")
-    for d in (table_dir, ckpt):
-        _atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    table_dir = scratch_dir("kafka_delta_pipe_")
     fields = (
         ("window_start", "timestamp"),
         ("location", "string"),
@@ -424,19 +414,17 @@ def streaming_kafka_to_delta_pipeline(
         )
 
     # state width sized by state volume (windows x locations), as above
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with session.shuffle_partitions(spark, 8):
         q = (
             agg.writeStream.foreachBatch(sink)
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", scratch_dir("kafka_delta_pipe_ckpt_"))
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     try:
-        _drain_waves(spark, broker, _PIPELINE_TOPIC, q)
+        for produce in _wave_steps(spark, broker, _PIPELINE_TOPIC):
+            produce()
+            q.processAllAvailable()
     finally:
         q.stop()
     return read_delta_snapshot(spark, table_dir).orderBy(

@@ -10,38 +10,7 @@ from pyspark.sql import functions as F
 from ..operators.sessions import sessionize
 from ..registry import query
 from ..sources.batch import load_table
-
-# Session semantics: a gap >= the duration starts a new session; the
-# session end is last_event + gap (Spark's session_window contract).
-_SESSION_ORACLE = """
-WITH ordered AS (
-    SELECT
-        user_id,
-        ts,
-        value,
-        CASE
-            WHEN lag(ts) OVER w IS NULL THEN 1
-            WHEN ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1
-            ELSE 0
-        END AS new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-sess AS (
-    SELECT *,
-           sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM ordered
-)
-SELECT
-    user_id,
-    min(ts) AS session_start,
-    max(ts) + INTERVAL 30 MINUTE AS session_end,
-    count(*) AS n_events,
-    CAST(sum(CAST(value AS DECIMAL(25,4))) AS DOUBLE) AS total_value
-FROM sess
-GROUP BY user_id, session_id
-"""
+from .streaming import _SESSION_ORACLE  # shared with streaming_sessionize
 
 
 @query("sessionize_users", _SESSION_ORACLE)

@@ -4,9 +4,18 @@ Each query materializes the ``events`` table as a JSON-lines text
 stream (one JSON object per line — exactly the Kafka wire shape minus
 the binary cast), runs the REAL ingestion path
 (``parse_and_clean``: from_json → flatten → try_to_timestamp → filter
-→ watermark) and a downstream operator as a Structured Streaming job
-into a memory sink, drives it to completion with
-``processAllAvailable``, and returns the result as a batch DataFrame.
+→ watermark) and a downstream operator as a Structured Streaming job,
+and returns the result as a batch DataFrame. Two drivers run every
+finite replay here and in the other query families:
+
+- ``_run_to_table``: memory sink, drained with
+  ``processAllAvailable``, with optional driver-side steps (a new
+  wave of input) between drains;
+- ``_run_available_now``: foreachBatch under
+  ``trigger(availableNow=True)`` for queries that fold each
+  micro-batch into persistent state. foreachBatch is at-least-once
+  and only a completed run's state is safe to read, so a run that has
+  not finished within 300 s raises instead of returning.
 
 Because the input is finite and deterministic, the streaming result
 must equal the batch oracle — so the driver's hash check covers the
@@ -17,18 +26,20 @@ SQL-mirrored and are covered by tests/test_streaming.py instead.)
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import session
 from ..operators.alerts import detect_fraud
 from ..operators.windowed import windowed_aggregation
 from ..registry import query
 from ..sources.batch import load_table
 from ..streaming.pipeline import parse_and_clean, write_memory_stream
+from .feeds import materialize_feed, scratch_dir
 
 WIRE_SCHEMA = T.StructType(
     [
@@ -62,8 +73,6 @@ def _events_wire_dir(spark: SparkSession, sf_dir: str) -> str:
     file-stream source assigns one task per file, so a 2-file wire
     dir would cap micro-batch parallelism at 2 regardless of cluster
     size) — all streaming queries replay the same files."""
-    from .feeds import materialize_feed
-
     return materialize_feed(
         spark, sf_dir, "wire", _events_wire_build, files=None, fmt="text"
     )
@@ -92,8 +101,13 @@ def _run_to_table(
     df: DataFrame,
     output_mode: str,
     shuffle_partitions: int | None = None,
+    steps: Sequence[Callable[[], None]] = (),
 ) -> DataFrame:
     """Drive a finite stream to completion into a memory sink.
+
+    The sink is drained once, then each of ``steps`` runs on the
+    driver (a new wave of input) and is drained in turn, so each
+    step's input lands in its own micro-batches.
 
     ``shuffle_partitions`` overrides the state-partition count for THIS
     query only (it is fixed at stream start from the session conf and
@@ -103,19 +117,50 @@ def _run_to_table(
     far fewer than a production cluster's shuffle width; results are
     partitioning-independent either way."""
     name = f"mem_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+    with session.shuffle_partitions(spark, shuffle_partitions):
         q = write_memory_stream(df, name, output_mode=output_mode)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
+        for step in steps:
+            step()
+            q.processAllAvailable()
     finally:
         q.stop()
     return spark.table(name)
+
+
+# Seconds an availableNow run may take before its state is refused.
+_AVAILABLE_NOW_TIMEOUT_S = 300
+
+
+def _run_available_now(
+    df: DataFrame,
+    on_batch: Callable[[DataFrame, int], None],
+    what: str,
+) -> None:
+    """Run ``on_batch(batch_df, batch_id)`` over every micro-batch of
+    the finite stream ``df`` (foreachBatch, availableNow trigger,
+    scratch checkpoint) and return when the run has finished.
+
+    Only a finished run's state is safe to read, so a run still going
+    after 300 s raises RuntimeError naming ``what`` (the query). An
+    error raised by ``on_batch`` propagates, and the query is stopped
+    on every way out."""
+    q = (
+        df.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", scratch_dir("ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        if not q.awaitTermination(_AVAILABLE_NOW_TIMEOUT_S):
+            raise RuntimeError(
+                f"{what}: availableNow run did not finish within "
+                f"{_AVAILABLE_NOW_TIMEOUT_S}s; refusing to read partial state"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 _STREAM_AGG_ORACLE = """
@@ -316,7 +361,11 @@ def streaming_enriched_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_table(spark, enriched, output_mode="append")
 
 
-_STREAM_SESSION_ORACLE = """
+# Also the oracle of the batch twin `sessionize_users`: queries/sessions.py
+# imports it from here because this module registers its queries first.
+# Session semantics: a gap >= the duration starts a new session; the
+# session end is last_event + gap (Spark's session_window contract).
+_SESSION_ORACLE = """
 WITH ordered AS (
     SELECT
         user_id,
@@ -347,7 +396,7 @@ GROUP BY user_id, session_id
 """
 
 
-@query("streaming_sessionize", _STREAM_SESSION_ORACLE)
+@query("streaming_sessionize", _SESSION_ORACLE)
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window sessionization executed BY THE STREAMING ENGINE
     (complete mode) over the JSON wire replay — the streaming twin of
@@ -841,9 +890,6 @@ def streaming_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied-batch marker, so at-least-once foreachBatch retries
     cannot double-add counts (additive merge is NOT idempotent — the
     guard is what makes it safe)."""
-    import atexit
-    import shutil
-
     from pyspark.sql import Window
 
     from ..streaming.state import (
@@ -856,11 +902,7 @@ def streaming_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("event_timestamp").alias("day"),
         F.floor(F.col("amount") / 50).cast("bigint").alias("bin"),
     )
-    state_root = tempfile.mkdtemp(prefix="qroll_state_")
-    ckpt = tempfile.mkdtemp(prefix="qroll_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "sketch")
+    state_dir = os.path.join(scratch_dir("qroll_state_"), "sketch")
 
     def _merge_sketch(
         existing: DataFrame | None, part: DataFrame
@@ -884,22 +926,7 @@ def streaming_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=4,
         )
 
-    q = (
-        binned.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_quantile_rollup: availableNow run did not "
-                "finish within 300s; refusing to read partial sketch state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(binned, merge_state, "streaming_quantile_rollup")
 
     sketch = read_state(spark, state_dir)
     w_cum = (
@@ -1000,9 +1027,6 @@ def streaming_cms_heavy_hitters(
     maintained sketch). Heavy set = users with 2*count > max count
     (scale-free, exact); the sketch stays 4096 counters at any
     volume — the bounded-memory answer to streaming top-k."""
-    import atexit
-    import shutil
-
     from ..functions.hashing import h60
     from ..streaming.state import (
         merge_into_compact_state,
@@ -1011,11 +1035,7 @@ def streaming_cms_heavy_hitters(
 
     stream = _events_as_wire_stream(spark, sf_dir, max_files_per_trigger=8)
     users = stream.select(F.col("user_id"))
-    state_root = tempfile.mkdtemp(prefix="scms_state_")
-    ckpt = tempfile.mkdtemp(prefix="scms_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "sketch")
+    state_dir = os.path.join(scratch_dir("scms_state_"), "sketch")
 
     def bucket_col(r: int):
         return (
@@ -1063,22 +1083,7 @@ def streaming_cms_heavy_hitters(
             state_dir, batch_id, part, _merge, shuffle_partitions=4
         )
 
-    q = (
-        users.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_cms_heavy_hitters: availableNow run did not "
-                "finish within 300s; refusing to read a partial sketch"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(users, merge_state, "streaming_cms_heavy_hitters")
 
     sketch = read_state(spark, state_dir).localCheckpoint(eager=False)
     ev = load_table(spark, sf_dir, "events").select("user_id")
@@ -1108,7 +1113,9 @@ def streaming_cms_heavy_hitters(
 
 # --- streaming HLL distinct rollup (fifth state shape) ----------------------
 
-_STREAM_HLL_ORACLE = """
+# Also the oracle of the batch twin `hll_mergeable_rollup`, which
+# queries/analytics.py imports from here (this module registers first).
+_HLL_ROLLUP_ORACLE = """
 SELECT
     CAST(date_trunc('week', ts) AS TIMESTAMP) AS week_start,
     event_type,
@@ -1120,7 +1127,7 @@ ORDER BY week_start, event_type
 """
 
 
-@query("streaming_hll_rollup", _STREAM_HLL_ORACLE)
+@query("streaming_hll_rollup", _HLL_ROLLUP_ORACLE)
 def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable DISTINCT-COUNT sketches maintained THROUGH the
     streaming engine — DataSketches HLL union alongside the argmax
@@ -1137,9 +1144,6 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific, the error contract is not). This is the
     production continuous-unique-users rollup: state is
     O(days × types) sketches, never O(users)."""
-    import atexit
-    import shutil
-
     from ..streaming.state import merge_into_compact_state, read_state
 
     stream = _events_as_wire_stream(spark, sf_dir, max_files_per_trigger=8)
@@ -1148,11 +1152,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"),
         F.col("user_id"),
     )
-    state_root = tempfile.mkdtemp(prefix="hroll_state_")
-    ckpt = tempfile.mkdtemp(prefix="hroll_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "sketch")
+    state_dir = os.path.join(scratch_dir("hroll_state_"), "sketch")
 
     def _merge_hll(existing, part):
         if existing is None:
@@ -1172,22 +1172,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_dir, batch_id, part, _merge_hll, shuffle_partitions=4
         )
 
-    q = (
-        keyed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_hll_rollup: availableNow run did not finish "
-                "within 300s; refusing to read partial sketch state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(keyed, merge_state, "streaming_hll_rollup")
 
     sketches = read_state(spark, state_dir)
     weekly_est = (
@@ -1286,9 +1271,6 @@ def streaming_reservoir_sample(
     the from-scratch batch window — Efraimidis-Spirakis's
     batch-boundary independence, demonstrated through the real
     engine."""
-    import atexit
-    import shutil
-
     from pyspark.sql import Window
 
     from ..streaming.state import (
@@ -1303,11 +1285,7 @@ def streaming_reservoir_sample(
         "event_type",
         F.expr(_SRES_RANK.format(w="amount")).alias("es_key_q"),
     )
-    state_root = tempfile.mkdtemp(prefix="sres_state_")
-    ckpt = tempfile.mkdtemp(prefix="sres_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "reservoir")
+    state_dir = os.path.join(scratch_dir("sres_state_"), "reservoir")
     w_day = Window.partitionBy("day").orderBy(
         F.desc("es_key_q"), F.asc("event_id")
     )
@@ -1335,22 +1313,7 @@ def streaming_reservoir_sample(
             shuffle_partitions=4,
         )
 
-    q = (
-        keyed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_reservoir_sample: availableNow run did not "
-                "finish within 300s; refusing to read partial state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(keyed, merge_state, "streaming_reservoir_sample")
 
     return (
         read_state(spark, state_dir)
@@ -1428,9 +1391,6 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     state and emits the CUMULATIVE day-by-day χ² against the
     designed 50/50 split with the 3.8415 alarm — the
     page-someone-today version of the batch srm_check."""
-    import atexit
-    import shutil
-
     from pyspark.sql import Window
 
     from ..streaming.state import (
@@ -1439,11 +1399,7 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = _events_as_wire_stream(spark, sf_dir, max_files_per_trigger=8)
-    state_root = tempfile.mkdtemp(prefix="srmmon_state_")
-    ckpt = tempfile.mkdtemp(prefix="srmmon_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    seen_dir = os.path.join(state_root, "seen")
+    seen_dir = os.path.join(scratch_dir("srmmon_state_"), "seen")
 
     def _merge_seen(existing, part):
         # per-user MIN enrollment day: idempotent and batch-order
@@ -1470,22 +1426,7 @@ def streaming_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=4, write_partitions=1,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_srm_monitor: availableNow run did not finish "
-                "within 300s; refusing to read partial state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(stream, fold, "streaming_srm_monitor")
 
     daily = (
         read_state(spark, seen_dir)
@@ -1577,9 +1518,6 @@ def streaming_kmv_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     specific sketch bytes, tolerance contract), the KMV sketch itself
     is cross-engine exact, so the oracle recomputes the entire sketch
     and the estimator from the batch table."""
-    import atexit
-    import shutil
-
     from pyspark.sql import Window
 
     from ..functions.hashing import h60, word_shingles
@@ -1596,11 +1534,7 @@ def streaming_kmv_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(word_shingles("text", 3)).alias("shingle")
     ).select("source", h60(F.col("shingle")).alias("h"))
 
-    state_root = tempfile.mkdtemp(prefix="kmv_state_")
-    ckpt = tempfile.mkdtemp(prefix="kmv_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "sketch")
+    state_dir = os.path.join(scratch_dir("kmv_state_"), "sketch")
 
     def _bottom_k(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("source").orderBy("h")
@@ -1626,22 +1560,7 @@ def streaming_kmv_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=4,
         )
 
-    q = (
-        hashed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_kmv_sketch_rollup: availableNow run did not "
-                "finish within 300s; refusing to read partial sketch state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(hashed, merge_state, "streaming_kmv_sketch_rollup")
 
     sk = read_state(spark, state_dir)
     return sk.groupBy("source").agg(
@@ -1698,9 +1617,6 @@ def streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned path, not compact, per the state-module rule). The
     oracle is `dedup_exact`'s batch oracle verbatim — the ledger must
     agree with the one-shot batch answer exactly."""
-    import atexit
-    import shutil
-
     from ..functions.hashing import normalize_text
     from ..streaming.state import merge_into_partitioned_state, read_state
     from .corpus_prep import _documents_as_stream
@@ -1720,11 +1636,7 @@ def streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.xxhash64("content_hash"), F.lit(_LEDGER_BUCKETS)),
     )
 
-    state_root = tempfile.mkdtemp(prefix="ledger_state_")
-    ckpt = tempfile.mkdtemp(prefix="ledger_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "ledger")
+    state_dir = os.path.join(scratch_dir("ledger_state_"), "ledger")
 
     def _merge(existing, part):
         if existing is None:
@@ -1748,22 +1660,7 @@ def streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=4,
         )
 
-    q = (
-        hashed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_dedup_ledger: availableNow run did not finish "
-                "within 300s; refusing to read partial ledger state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(hashed, merge_state, "streaming_dedup_ledger")
 
     return read_state(spark, state_dir).select(
         "content_hash",
@@ -1825,9 +1722,6 @@ def streaming_funnel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-collapses to one row per user BEFORE touching state, so the
     merge shuffles batch-keys, not batch-events. The read-side
     conversion scan is one pass over state."""
-    import atexit
-    import shutil
-
     from ..streaming.state import (
         merge_into_partitioned_state,
         read_state,
@@ -1837,11 +1731,7 @@ def streaming_funnel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = stream.filter(F.col("user_id").isNotNull()).select(
         "user_id", "event_type", "event_timestamp"
     )
-    state_root = tempfile.mkdtemp(prefix="sfunnel_state_")
-    ckpt = tempfile.mkdtemp(prefix="sfunnel_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "funnel")
+    state_dir = os.path.join(scratch_dir("sfunnel_state_"), "funnel")
 
     def _stage_mins(df: DataFrame) -> DataFrame:
         return df.groupBy("user_id").agg(
@@ -1887,22 +1777,7 @@ def streaming_funnel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=8, write_partitions=1,
         )
 
-    q = (
-        keyed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_funnel_rollup: availableNow run did not finish "
-                "within 300s; refusing to read partial funnel state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(keyed, merge_state, "streaming_funnel_rollup")
 
     stage = read_state(spark, state_dir)
     return stage.agg(
@@ -1965,9 +1840,6 @@ def streaming_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     property rather than a marker discipline. The ALL row OR-merges
     the same state rows across types at read time — the
     materialized-bitmap rollup pattern, kept continuously current."""
-    import atexit
-    import shutil
-
     from ..streaming.state import merge_into_compact_state, read_state
 
     stream = _events_as_wire_stream(spark, sf_dir, max_files_per_trigger=8)
@@ -1976,11 +1848,7 @@ def streaming_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bitmap_bucket_number(user_id) AS bkt",
         "bitmap_bit_position(user_id) AS pos",
     )
-    state_root = tempfile.mkdtemp(prefix="bmroll_state_")
-    ckpt = tempfile.mkdtemp(prefix="bmroll_ckpt_")
-    for d in (state_root, ckpt):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    state_dir = os.path.join(state_root, "bitmaps")
+    state_dir = os.path.join(scratch_dir("bmroll_state_"), "bitmaps")
 
     def _merge_bm(existing, part):
         if existing is None:
@@ -1999,22 +1867,7 @@ def streaming_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_dir, batch_id, part, _merge_bm, shuffle_partitions=4
         )
 
-    q = (
-        keyed.writeStream.foreachBatch(merge_state)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            raise RuntimeError(
-                "streaming_bitmap_rollup: availableNow run did not finish "
-                "within 300s; refusing to read partial bitmap state"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _run_available_now(keyed, merge_state, "streaming_bitmap_rollup")
 
     bitmaps = read_state(spark, state_dir)
     per_type = bitmaps.groupBy(F.col("event_type").alias("segment")).agg(

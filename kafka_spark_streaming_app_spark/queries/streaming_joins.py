@@ -22,14 +22,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.batch import load_table
+from .feeds import memo_dir
 from .streaming import _events_as_wire_stream, _run_to_table
 
 _DEDUP_ORACLE = """
@@ -286,9 +284,6 @@ UNION ALL
 SELECT * FROM unmatched_p
 """
 
-_SENTINEL_DIRS: dict = {}
-
-
 def _events_with_flush_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The wire replay PLUS a far-future flush sentinel (one 'view' +
     one 'purchase' at max(events.ts) + 10 h, user_id -1), unioned at
@@ -297,16 +292,10 @@ def _events_with_flush_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global watermark is the MIN across operators. The sentinel
     lifts the final watermark past every real row's join window,
     draining outer-join state (the shutdown-flush pattern)."""
-    import atexit
-    import shutil
-
     from ..streaming.pipeline import parse_and_clean
     from .streaming import WIRE_SCHEMA, _events_wire_dir
 
-    wire_dir = _events_wire_dir(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sent_dir = _SENTINEL_DIRS.get(key)
-    if sent_dir is None or not os.path.isdir(sent_dir):
+    def write_sentinel(sent_dir: str) -> None:
         events = load_table(spark, sf_dir, "events")
         flush_ts = F.date_format(
             F.max("ts") + F.expr("INTERVAL 10 HOURS"),
@@ -323,10 +312,10 @@ def _events_with_flush_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                    'event_type', 'purchase', 'amount', 0.0d,
                    'timestamp', t)))) AS value"""
         )
-        sent_dir = tempfile.mkdtemp(prefix="wire_sentinel_")
-        atexit.register(shutil.rmtree, sent_dir, ignore_errors=True)
         rows.coalesce(1).write.mode("overwrite").text(sent_dir)
-        _SENTINEL_DIRS[key] = sent_dir
+
+    wire_dir = _events_wire_dir(spark, sf_dir)
+    sent_dir = memo_dir(spark, sf_dir, "wire_sentinel", write_sentinel)
     raw = spark.readStream.text(wire_dir).union(
         spark.readStream.text(sent_dir)
     )

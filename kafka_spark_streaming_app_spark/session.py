@@ -48,6 +48,7 @@ memory/instance settings differ (supplied by spark-submit, not here).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -150,3 +151,21 @@ def get_spark(
     # machine-sized default apply_runtime_confs just installed
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark: SparkSession, n: int | None):
+    """Run the body with ``spark.sql.shuffle.partitions`` set to ``n``,
+    restoring the previous width on the way out, also when the body
+    raises; ``n=None`` leaves the session as it is. A streaming query
+    reads the width once, when it starts, as its state-partition count,
+    and its checkpoint pins that count from then on."""
+    if n is None:
+        yield
+        return
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

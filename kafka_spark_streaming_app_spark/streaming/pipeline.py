@@ -143,17 +143,14 @@ def write_console_stream(
 
 
 def write_memory_stream(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    available_now: bool = False,
+    df: DataFrame, name: str, output_mode: str = "append"
 ) -> StreamingQuery:
     """Memory sink for deterministic tests: drive with
     ``processAllAvailable()`` then read ``spark.table(name)``."""
-    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        df.writeStream.format("memory").queryName(name)
+        .outputMode(output_mode).start()
+    )
 
 
 def foreach_batch_parquet(

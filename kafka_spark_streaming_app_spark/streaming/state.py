@@ -105,6 +105,8 @@ from urllib.parse import urlsplit
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
+
 __all__ = [
     "merge_into_partitioned_state",
     "merge_into_compact_state",
@@ -331,22 +333,11 @@ def merge_into_partitioned_state(
     # its materializing job — one job instead of checkpoint+collect
     # (per-trigger fixed costs are the whole price of this design at
     # small batch sizes, so every job counts).
-    if shuffle_partitions is not None:
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+    with session.shuffle_partitions(spark, shuffle_partitions):
+        return _merge_impl(
+            spark, state_dir, batch_id, part, merge_fn, bucket_col,
+            marker, intent, marker_root, write_partitions,
         )
-        try:
-            return _merge_impl(
-                spark, state_dir, batch_id, part, merge_fn, bucket_col,
-                marker, intent, marker_root, write_partitions,
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    return _merge_impl(
-        spark, state_dir, batch_id, part, merge_fn, bucket_col,
-        marker, intent, marker_root, write_partitions,
-    )
 
 
 def _merge_impl(
@@ -546,22 +537,11 @@ def merge_into_compact_state(
         return False
 
     spark = part.sparkSession
-    if shuffle_partitions is not None:
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+    with session.shuffle_partitions(spark, shuffle_partitions):
+        return _compact_impl(
+            spark, state_dir, batch_id, part, merge_fn,
+            marker, intent, marker_root,
         )
-        try:
-            return _compact_impl(
-                spark, state_dir, batch_id, part, merge_fn,
-                marker, intent, marker_root,
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    return _compact_impl(
-        spark, state_dir, batch_id, part, merge_fn,
-        marker, intent, marker_root,
-    )
 
 
 def _compact_impl(

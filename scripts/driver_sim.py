@@ -1,7 +1,8 @@
 """Simulate the spark-graft driver: virgin SparkSession (none of the
 engine's confs), import __spark_entry__ from the repo root, smoke
 entry(), then run every queries()[name] vs oracle_sql()[name] at
-sf0.01 with an order-insensitive value hash.
+sf0.01 with an order-insensitive value hash. A query fails if it
+raises, mismatches its oracle, or leaves a streaming query running.
 
 Usage: python scripts/driver_sim.py [--smoke] [--only q1,q2,...]
 """
@@ -108,8 +109,15 @@ def main() -> int:
         try:
             sdf = fn(spark, sf).toPandas()
         except Exception as exc:
-            failures.append(name)
+            sdf = None
             print(f"{name}: SPARK ERROR {exc}")
+        # a stream a query leaves running would load every later query
+        leaked = spark.streams.active
+        for q in leaked:
+            print(f"{name}: LEAKED STREAM id={q.id} name={q.name}")
+            q.stop()
+        if sdf is None or leaked:
+            failures.append(name)
             continue
         if name in oracles:
             odf = con.execute(oracles[name]).fetchdf()

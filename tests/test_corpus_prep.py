@@ -232,14 +232,11 @@ def test_quality_score_runs_unchanged_on_a_stream(spark):
             f.write(_json.dumps(r) + "\n")
     schema = "doc_id long, text string"
     stream = spark.readStream.schema(schema).json(src)
-    q = write_memory_stream(
-        quality_score(stream), "qs_stream_out", available_now=True
-    )
+    q = write_memory_stream(quality_score(stream), "qs_stream_out")
     try:
-        q.awaitTermination(60)
+        q.processAllAvailable()
     finally:
-        if q.isActive:
-            q.stop()
+        q.stop()
     got = {
         r["doc_id"]: r for r in spark.table("qs_stream_out").collect()
     }

@@ -1,6 +1,7 @@
 """Streaming semantics that have no SQL oracle: watermark late-data
 drop under append mode, the rate-source order synthesis, foreachBatch
-sink idempotence, and multi-sink fan-out."""
+sink idempotence, multi-sink fan-out, and the failure paths of the
+finite-run drivers and scratch-state helpers the queries share."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import tempfile
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_spark_streaming_app_spark.schemas import ORDER_SCHEMA
@@ -524,3 +526,83 @@ def test_streaming_ivm_agg_matches_pandas_latest_wins(spark, sf_smoke):
         ).collect()
     }
     assert got == expected
+
+
+def _one_file_stream(spark, dir_):
+    with open(os.path.join(dir_, "b0.json"), "w") as f:
+        f.write(json.dumps({"k": 1}) + "\n")
+    return spark.readStream.schema("k long").json(str(dir_))
+
+
+def test_run_available_now_raises_batch_errors_and_stops(spark, tmp_path):
+    """An error inside on_batch comes out of the availableNow driver,
+    and no query is left running."""
+    from kafka_spark_streaming_app_spark.queries.streaming import (
+        _run_available_now,
+    )
+
+    def on_batch(batch_df, batch_id):
+        raise ValueError("boom in on_batch")
+
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(Exception, match="boom in on_batch"):
+        _run_available_now(_one_file_stream(spark, tmp_path), on_batch, "t")
+    assert {q.id for q in spark.streams.active} == before
+
+
+def test_run_available_now_refuses_an_unfinished_run(
+    spark, tmp_path, monkeypatch
+):
+    """A run still going at the timeout raises instead of returning
+    (its state would be partial), and the query is stopped."""
+    from kafka_spark_streaming_app_spark.queries import streaming
+
+    monkeypatch.setattr(streaming, "_AVAILABLE_NOW_TIMEOUT_S", 0.2)
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(RuntimeError, match="t: availableNow run did not finish"):
+        streaming._run_available_now(
+            _one_file_stream(spark, tmp_path), lambda df, i: time.sleep(2), "t"
+        )
+    assert {q.id for q in spark.streams.active} == before
+
+
+def test_shuffle_partitions_restores_width_when_body_raises(spark):
+    from kafka_spark_streaming_app_spark.session import shuffle_partitions
+
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    with pytest.raises(RuntimeError):
+        with shuffle_partitions(spark, 3):
+            assert spark.conf.get(conf) == "3"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(conf) == prev
+    with shuffle_partitions(spark, None):
+        assert spark.conf.get(conf) == prev
+
+
+def test_memo_dir_reuses_rebuilds_and_never_remembers_a_failed_build(spark):
+    import shutil
+
+    from kafka_spark_streaming_app_spark.queries.feeds import memo_dir
+
+    built, failed = [], []
+
+    def build(d):
+        built.append(d)
+
+    def fail(d):
+        failed.append(d)
+        raise ValueError("build failed")
+
+    kind = f"memo_test_{uuid.uuid4().hex[:8]}"
+    first = memo_dir(spark, "sf", kind, build)
+    assert memo_dir(spark, "sf", kind, build) == first
+    assert built == [first]
+    shutil.rmtree(first)
+    again = memo_dir(spark, "sf", kind, build)
+    assert again != first and built == [first, again]
+
+    with pytest.raises(ValueError):
+        memo_dir(spark, "sf", kind + "_bad", fail)
+    fresh = memo_dir(spark, "sf", kind + "_bad", build)
+    assert fresh not in failed and built[-1] == fresh
