@@ -20,6 +20,32 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.batch import load_table
+from ..sources.deltalog import (
+    DeltaCommitter,
+    cleanup_log,
+    delete_rows_by_position,
+    part_files,
+    read_delta_incremental,
+    read_delta_snapshot,
+    table_changes,
+    tombstone,
+    vacuum,
+    write_checkpoint,
+)
+from ..sources.iceberglog import (
+    STATUS_ADDED,
+    STATUS_DELETED,
+    IcebergCommitter,
+    IcebergFixtureWriter,
+    _metadata_path,
+    bucket_long_array,
+    bucket_str_array,
+    expire_snapshots,
+    iceberg_changelog,
+    read_iceberg_incremental,
+    read_iceberg_snapshot,
+)
+from ..sources.lakehouse import partition_values_from_path, with_row_position
 from .feeds import materialize_feed, memo_dir, scratch_dir
 from .streaming import _run_available_now, _run_to_table
 
@@ -417,8 +443,8 @@ def delta_log_replay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-after-log-truncation are pinned in
     tests/test_deltalog.py."""
     import pandas as pd
-
-    from ..sources.deltalog import DeltaFixtureWriter, read_delta_snapshot
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
@@ -434,24 +460,23 @@ def delta_log_replay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s, g in pdf.groupby("o_orderstatus")
         }
         statuses = sorted(recs)
-        w = DeltaFixtureWriter(
-            d,
-            [("o_orderkey", "long"), ("o_orderstatus", "string"),
-             ("o_orderpriority", "string"), ("cents", "long")],
-        )
+        committer = DeltaCommitter(d, _ORDERS_FIELDS)
+
+        def commit(name, rows, removed=()):
+            pq.write_table(pa.Table.from_pylist(rows), os.path.join(d, name))
+            committer.commit(
+                None, committer.add_entries(spark, [name]),
+                [tombstone(p) for p in removed],
+            )
+
         first, rest = statuses[0], statuses[1:]
-        w.commit(
-            add_files=[("part-f0.parquet", recs[first])], first=True
-        )
+        commit("part-f0.parquet", recs[first])
         # compaction: rewrite the same rows, tombstone the original —
         # part-f0.parquet stays on disk
-        w.commit(
-            add_files=[("part-f1.parquet", recs[first])],
-            remove_paths=["part-f0.parquet"],
-        )
-        w.checkpoint()
+        commit("part-f1.parquet", recs[first], removed=["part-f0.parquet"])
+        write_checkpoint(d)
         for i, s in enumerate(rest):
-            w.commit(add_files=[(f"part-x{i}.parquet", recs[s])])
+            commit(f"part-x{i}.parquet", recs[s])
 
     d = memo_dir(spark, sf_dir, "delta", build)
     df = read_delta_snapshot(spark, d)
@@ -496,14 +521,6 @@ def iceberg_metadata_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     files reach spark.read.parquet. Snapshot pinning (time travel)
     and the rewrite semantics are pinned in tests/test_iceberglog.py."""
     import pandas as pd
-
-    from ..sources.iceberglog import (
-        IcebergFixtureWriter,
-        STATUS_ADDED,
-        STATUS_DELETED,
-        STATUS_EXISTING,
-        read_iceberg_snapshot,
-    )
 
     def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
@@ -552,7 +569,8 @@ def iceberg_metadata_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming Delta sink ----------------------------------------------------
 # Structured Streaming -> Delta without the jar: foreachBatch commits
-# every micro-batch as a REAL transaction (data file + JSON commit),
+# every micro-batch as a REAL transaction (data files + one JSON commit
+# through sources/deltalog.DeltaCommitter),
 # odd batches additionally compact their predecessor (add + remove in
 # one commit), and at-least-once replays are deduplicated by the txn
 # action exactly as the real Delta sink does (appId + batch version
@@ -569,260 +587,35 @@ GROUP BY o_orderstatus, o_orderpriority
 ORDER BY o_orderstatus, o_orderpriority
 """
 
-_DELTA_STREAM_APP = "spark-graft-delta-sink"
+_ORDERS_FIELDS = (
+    ("o_orderkey", "long"),
+    ("o_orderstatus", "string"),
+    ("o_orderpriority", "string"),
+    ("cents", "long"),
+)
 
 
-def _delta_next_version(log_dir: str, batch_id: int):
-    """O(log) replay: None if this sink batch already committed (txn
-    action replay dedup), else the next commit version number.
-
-    Both answers come from ``snapshot_files`` so they survive log
-    retention: the next version is max ADDRESSABLE version + 1 (a
-    checkpointed version counts even after ``cleanup_log`` removed
-    its JSON commits — ``len(commits)`` would re-assign version 0
-    and the commit would land invisibly below the checkpoint), and
-    the txn ledger is read from checkpoint + commits, not just the
-    retained JSON files."""
-    from ..sources.deltalog import snapshot_files
-
-    os.makedirs(log_dir, exist_ok=True)
-    table_dir = os.path.dirname(log_dir)
-    try:
-        snap = snapshot_files(table_dir)
-    except ValueError:
-        # empty _delta_log (or no metaData yet): fresh table
-        return 0
-    last = snap["txns"].get(_DELTA_STREAM_APP)
-    if last is not None and last >= batch_id:
-        return None
-    return snap["version"] + 1
-
-
-def _delta_part_files(table_dir: str, rel_dir: str) -> list:
-    """Parquet files under rel_dir, recursive (hive partition layout
-    nests col=value directories)."""
-    base = os.path.join(table_dir, rel_dir)
-    out = []
-    for root, _, fs in os.walk(base):
-        for f in fs:
-            if f.endswith(".parquet"):
-                out.append(
-                    os.path.relpath(os.path.join(root, f), table_dir)
-                )
-    return sorted(out)
-
-
-def _partition_values_from_path(rel: str, partition_by) -> dict:
-    """{col: value} parsed from hive path segments (col=value).
-    Spark spells a NULL partition value ``__HIVE_DEFAULT_PARTITION__``
-    in the directory name — map it back to None so the metadata
-    stores a real null (Delta: JSON null in partitionValues; leaking
-    the literal string would make null partitions silently
-    unprunable/mismatched)."""
-    from urllib.parse import unquote
-
-    vals = {}
-    for seg in rel.split("/")[:-1]:
-        if "=" in seg:
-            c, v = seg.split("=", 1)
-            if c in partition_by:
-                v = unquote(v)
-                vals[c] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                )
-    return vals
-
-
-def _delta_add_actions(
-    spark: SparkSession, table_dir: str, rels,
-    data_change=True, partition_by=(),
-) -> list:
-    """add actions for a BATCH of part files with per-file stats
-    collected in ONE distributed job over the paths — each task opens
-    only its own files' footers (O(KB) each) and the driver receives
-    just the stats rows. A fanout commit with thousands of part files
-    must not serialize thousands of footer opens on the driver; real
-    Delta collects stats inside the write job the same way. Stats
-    (Delta spec: a JSON string of numRecords/minValues/maxValues)
-    make the log itself the data-skipping index: a range predicate
-    prunes the file list before any footer or page is read."""
-    rels = sorted(rels)
-    if not rels:
-        return []
-    abs_root = os.path.abspath(table_dir)
-
-    def _footer_stats(it):
-        # self-contained executor closure (workers must not need the
-        # package importable): the logic mirrors the driver-side
-        # sources/iceberglog.parquet_column_stats + _delta_add_action
-        import json as _j
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        for rel in it:
-            path = _os.path.join(abs_root, rel)
-            md = _pq.ParquetFile(path).metadata
-            out = {}
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    lo, hi = st.min, st.max
-                    if isinstance(lo, bytes):
-                        try:
-                            lo, hi = lo.decode(), hi.decode()
-                        except UnicodeDecodeError:
-                            continue
-                    if not isinstance(
-                        lo, (int, float, str)
-                    ) or isinstance(lo, bool):
-                        continue
-                    name = col.path_in_schema
-                    if name in out:
-                        out[name] = (
-                            min(out[name][0], lo),
-                            max(out[name][1], hi),
-                        )
-                    else:
-                        out[name] = (lo, hi)
-            stats = {
-                "numRecords": md.num_rows,
-                "minValues": {c: lo for c, (lo, _) in out.items()},
-                "maxValues": {c: hi for c, (_, hi) in out.items()},
-            }
-            yield rel, _j.dumps(stats), _os.path.getsize(path)
-
-    sc = spark.sparkContext
-    # amortize per-task (Python worker) overhead over a few footers
-    # each — a footer open is O(ms), so one file per task is pure
-    # scheduling; parallelism still scales to the cluster for big
-    # fanout commits (thousands of files -> defaultParallelism tasks)
-    slices = max(1, min((len(rels) + 3) // 4, sc.defaultParallelism))
-    collected = {
-        rel: (stats, size)
-        for rel, stats, size in sc.parallelize(rels, slices)
-        .mapPartitions(_footer_stats)
-        .collect()
-    }
-    return [
-        {
-            "add": {
-                "path": rel,
-                "partitionValues": _partition_values_from_path(
-                    rel, partition_by
-                ),
-                "size": collected[rel][1],
-                "modificationTime": 0,
-                "dataChange": data_change,
-                "stats": collected[rel][0],
-            }
-        }
-        for rel in rels
-    ]
-
-
-def _delta_meta_actions(fields, partition_by=()) -> list:
-    """protocol + metaData actions for a first commit;
-    ``fields`` = [(name, delta_type)] covering ALL columns (the
-    Delta spec keeps partition columns in schemaString too)."""
-    import json as _json
-
-    return [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": "stream-table",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": _json.dumps(
-                    {
-                        "type": "struct",
-                        "fields": [
-                            {"name": n, "type": t, "nullable": True,
-                             "metadata": {}}
-                            for n, t in fields
-                        ],
-                    }
-                ),
-                "partitionColumns": list(partition_by),
-                "configuration": {},
-                "createdTime": 0,
-            }
-        },
-    ]
-
-
-def _delta_write_commit(
-    log_dir: str, version: int, actions: list,
-    table_dir: str, checkpoint_interval: int,
-) -> None:
-    import json as _json
-
-    with open(
-        os.path.join(log_dir, f"{version:020d}.json"), "w"
-    ) as fh:
-        for a in actions:
-            fh.write(_json.dumps(a) + "\n")
-    # write-side checkpoint parity (real Delta defaults to every 10
-    # commits): readers then replay O(commits-since-checkpoint)
-    if (version + 1) % max(checkpoint_interval, 1) == 0:
-        from ..sources.deltalog import write_checkpoint
-
-        write_checkpoint(table_dir)
-
-
-def _delta_overwrite_commit(
-    table_dir: str, batch_df: DataFrame, batch_id: int, fields,
-    checkpoint_interval: int = 10,
-) -> None:
-    """Full-refresh OVERWRITE transaction: one commit atomically
-    replaces the table's entire live file set (remove-all + add) —
-    the streaming materialized-view maintenance pattern (a
-    complete-mode aggregate lands each trigger's full state).
-    Data path is a distributed write; the driver replays the O(KB)
-    log for the removal set and writes the commit JSON. Idempotent
-    under foreachBatch replay via the txn action. Superseded files
-    stay on disk as tombstone decoys until vacuum, exactly like the
-    compaction shape."""
-    from ..sources.deltalog import snapshot_files
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    version = _delta_next_version(log_dir, batch_id)
-    if version is None:
-        return
-    refresh_rel = f"refresh-{batch_id:05d}"
-    batch_df.write.mode("overwrite").parquet(
-        os.path.join(table_dir, refresh_rel)
-    )
-    live = snapshot_files(table_dir)["files"] if version > 0 else []
-    actions = [] if version > 0 else _delta_meta_actions(fields)
-    actions.append(
-        {"txn": {"appId": _DELTA_STREAM_APP, "version": batch_id}}
-    )
-    for p in live:
-        actions.append(
-            {"remove": {"path": p, "deletionTimestamp": 0,
-                        "dataChange": True}}
-        )
-    actions += _delta_add_actions(
-        batch_df.sparkSession, table_dir,
-        _delta_part_files(table_dir, refresh_rel),
-    )
-    _delta_write_commit(
-        log_dir, version, actions, table_dir, checkpoint_interval
+def _compact(spark: SparkSession, paths: list, out_dir: str) -> None:
+    """Rewrite ``paths`` as one file under ``out_dir``. Compaction is a
+    distributed read->coalesce->write too: the driver only renames log
+    state, never holds rows."""
+    (
+        spark.read.parquet(*paths)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(out_dir)
     )
 
 
 def _delta_stream_commit(
     table_dir: str, batch_df: DataFrame, batch_id: int,
     checkpoint_interval: int = 10, partition_by: tuple = (),
-) -> None:
+    fields: tuple = _ORDERS_FIELDS,
+) -> int | None:
     """One streaming micro-batch -> one (or, for odd batches, one
-    compacting) Delta commit, idempotent under foreachBatch replay
-    via the txn action.
+    compacting) Delta commit through ``DeltaCommitter``, idempotent
+    under foreachBatch replay via the txn action. Returns the new
+    version, or None for a replay.
 
     The micro-batch DATA never touches the driver: a distributed
     ``batch_df.write.parquet`` job lands the files, and the driver
@@ -830,14 +623,12 @@ def _delta_stream_commit(
     commit JSON (one ``add`` per part file) — the real Delta sink's
     division of labor, so a tens-of-GB batch on a 1000-executor
     cluster commits without driver materialization."""
-    log_dir = os.path.join(table_dir, "_delta_log")
-    version = _delta_next_version(log_dir, batch_id)
-    if version is None:  # txn replay check: batch already committed
-        return
-
-    def _part_files(rel_dir: str) -> list:
-        return _delta_part_files(table_dir, rel_dir)
-
+    committer = DeltaCommitter(
+        table_dir, fields, partition_by, checkpoint_interval
+    )
+    if committer.committed_batch_id() >= batch_id:  # txn replay check
+        return None
+    spark = batch_df.sparkSession
     batch_rel = f"batch-{batch_id:05d}"
     # distributed data write; overwrite makes a crashed half-written
     # attempt of this same batch cleanly replaced on replay (files
@@ -873,52 +664,26 @@ def _delta_stream_commit(
         _shutil.rmtree(staging, ignore_errors=True)
     else:
         writer.parquet(os.path.join(table_dir, batch_rel))
-        rels = _part_files(batch_rel)
-    actions = [] if version > 0 else _delta_meta_actions(
-        (
-            ("o_orderkey", "long"),
-            ("o_orderstatus", "string"),
-            ("o_orderpriority", "string"),
-            ("cents", "long"),
-        ),
-        partition_by,
-    )
-    actions.append(
-        {"txn": {"appId": _DELTA_STREAM_APP, "version": batch_id}}
-    )
-    actions += _delta_add_actions(
-        batch_df.sparkSession, table_dir, rels,
-        partition_by=partition_by,
-    )
+        rels = part_files(table_dir, batch_rel)
+    added = committer.add_entries(spark, rels)
+    removed = []
     # compaction stays in the unpartitioned sink (per-partition-dir
     # compaction is the identical shape, one directory deeper)
     if batch_id % 2 == 1 and not partition_by:
         prev_rel = f"batch-{batch_id - 1:05d}"
         if os.path.isdir(os.path.join(table_dir, prev_rel)):
-            prev_files = _part_files(prev_rel)
+            prev_files = part_files(table_dir, prev_rel)
             rewritten = f"{prev_rel}-compacted"
-            # compaction is a distributed read->coalesce->write too:
-            # the driver only renames log state, never holds rows
-            (
-                batch_df.sparkSession.read.parquet(
-                    *[os.path.join(table_dir, p) for p in prev_files]
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(table_dir, rewritten))
+            _compact(
+                spark,
+                [os.path.join(table_dir, p) for p in prev_files],
+                os.path.join(table_dir, rewritten),
             )
-            for p in prev_files:
-                actions.append(
-                    {"remove": {"path": p, "deletionTimestamp": 0,
-                                "dataChange": False}}
-                )
-            actions += _delta_add_actions(
-                batch_df.sparkSession, table_dir,
-                _part_files(rewritten), data_change=False,
+            removed = [tombstone(p, data_change=False) for p in prev_files]
+            added += committer.add_entries(
+                spark, part_files(table_dir, rewritten), data_change=False
             )
-    _delta_write_commit(
-        log_dir, version, actions, table_dir, checkpoint_interval
-    )
+    return committer.commit(batch_id, added, removed)
 
 
 _ORDERS_FEED_SCHEMA = (
@@ -965,8 +730,6 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes only the O(KB) commit JSON after an O(log) replay scan —
     the log, not the directory, defines what the readback sees."""
     table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
-
-    from ..sources.deltalog import read_delta_snapshot
 
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1026,8 +789,6 @@ def streaming_delta_sink_partitioned(
     Readback recovers the partition column from directory names via
     basePath — data files do not store it — so the oracle hash proves
     the full partitioned-write contract end to end."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _partitioned_orders_table(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1057,8 +818,6 @@ def delta_partition_pruned_read(
     same aggregate with a WHERE clause, so the hash also proves the
     pruned set is exactly complete — one extra or missing file
     breaks it."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _partitioned_orders_table(spark, sf_dir)
     df = read_delta_snapshot(
         spark, table_dir, partition_filter={"o_orderstatus": "F"}
@@ -1087,13 +846,6 @@ def delta_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: checkpoint is O(live files) metadata, cleanup is
     O(commits), vacuum is one directory walk against a hash set —
     all driver-side METADATA work; no data moves at any size."""
-    from ..sources.deltalog import (
-        cleanup_log,
-        read_delta_snapshot,
-        vacuum,
-        write_checkpoint,
-    )
-
     table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
     write_checkpoint(table_dir)
     cleanup_log(table_dir)
@@ -1111,12 +863,7 @@ def delta_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # disk as DELETED-entry tombstones — naive directory listing
 # double-counts by construction; only the metadata tree is truth.
 
-_ICEBERG_SINK_FIELDS = [
-    ("o_orderkey", "long"),
-    ("o_orderstatus", "string"),
-    ("o_orderpriority", "string"),
-    ("cents", "long"),
-]
+_ICEBERG_SINK_FIELDS = list(_ORDERS_FIELDS)  # same names and types
 
 
 def _iceberg_partition_col(df: DataFrame, sf: dict):
@@ -1145,8 +892,6 @@ def _iceberg_partition_col(df: DataFrame, sf: dict):
             def _bucket_long(s):
                 import pandas as pd
 
-                from ..sources.iceberglog import bucket_long_array
-
                 mask = s.isna().to_numpy()
                 vals = s.fillna(0).astype("int64").to_numpy()
                 out = pd.Series(
@@ -1160,8 +905,6 @@ def _iceberg_partition_col(df: DataFrame, sf: dict):
             @pandas_udf("int")
             def _bucket_str(s):
                 import pandas as pd
-
-                from ..sources.iceberglog import bucket_str_array
 
                 mask = s.isna().to_numpy()
                 enc = [
@@ -1203,13 +946,10 @@ def _iceberg_stream_commit(
     per value: a job-count scale-killer at 1000-value columns)."""
     if committer.committed_batch_id() >= batch_id:
         return
+    data_dir = os.path.join(table_dir, "data")
 
     def _parts(rel: str) -> list:
-        d = os.path.join(table_dir, "data", rel)
-        return sorted(
-            os.path.join(d, f) for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
+        return [os.path.join(data_dir, p) for p in part_files(data_dir, rel)]
 
     batch_rel = f"batch-{batch_id:05d}"
     if partition_by:
@@ -1224,46 +964,36 @@ def _iceberg_stream_commit(
         (
             staged.write.mode("overwrite")
             .partitionBy(*part_cols)
-            .parquet(os.path.join(table_dir, "data", batch_rel))
+            .parquet(os.path.join(data_dir, batch_rel))
         )
-        added = []
-        root = os.path.join(table_dir, "data", batch_rel)
-        for dirpath, _, files in os.walk(root):
-            pqs = sorted(f for f in files if f.endswith(".parquet"))
-            if not pqs:
-                continue
-            rel = os.path.relpath(dirpath, root)
-            struct = {
-                k[len("__part_"):]: v
-                for k, v in _partition_values_from_path(
-                    rel + "/x", tuple(part_cols)
-                ).items()
-            }
-            added += [
-                committer.data_file_entry(
-                    os.path.join(dirpath, f), partition=struct
-                )
-                for f in pqs
-            ]
+        added = [
+            committer.data_file_entry(
+                os.path.join(data_dir, rel),
+                partition={
+                    k[len("__part_"):]: v
+                    for k, v in partition_values_from_path(
+                        rel, part_cols
+                    ).items()
+                },
+            )
+            for rel in part_files(data_dir, batch_rel)
+        ]
         committer.commit(batch_id, added)
         return
     batch_df.write.mode("overwrite").parquet(
-        os.path.join(table_dir, "data", batch_rel)
+        os.path.join(data_dir, batch_rel)
     )
     added = [committer.data_file_entry(p) for p in _parts(batch_rel)]
     removed = []
     drop = ()
     if batch_id % 2 == 1:
         prev_rel = f"batch-{batch_id - 1:05d}"
-        prev_dir = os.path.join(table_dir, "data", prev_rel)
-        if os.path.isdir(prev_dir):
+        if os.path.isdir(os.path.join(data_dir, prev_rel)):
             prev_files = _parts(prev_rel)
             compact_rel = f"{prev_rel}-compacted"
-            (
-                batch_df.sparkSession.read.parquet(*prev_files)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(table_dir, "data", compact_rel))
+            _compact(
+                batch_df.sparkSession, prev_files,
+                os.path.join(data_dir, compact_rel),
             )
             added += [
                 committer.data_file_entry(p) for p in _parts(compact_rel)
@@ -1289,8 +1019,6 @@ def streaming_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/iceberglog.py) — so the oracle hash proves snapshot
     framing, manifest carry-forward, DELETED-entry semantics, and
     replay idempotence at once."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _run_iceberg_sink_stream(
         spark, sf_dir, scratch_dir("iceberg_sink_")
     )
@@ -1303,8 +1031,6 @@ def _run_iceberg_sink_stream(
 ) -> str:
     """Drive the orders feed through the foreachBatch Iceberg sink
     (availableNow) into ``table_dir``; returns the table dir."""
-    from ..sources.iceberglog import IcebergCommitter
-
     committer = IcebergCommitter(
         table_dir, _ICEBERG_SINK_FIELDS, partition_by
     )
@@ -1337,8 +1063,6 @@ def streaming_iceberg_sink_partitioned(
     declares the identity spec, and — unlike hive layout — the data
     files keep their partition columns, so readback is the pruned (or
     full) file list under the one table schema."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _partitioned_orders_iceberg(spark, sf_dir)
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1353,8 +1077,6 @@ def iceberg_partition_pruned_read(
     defining scan-planning property. The oracle recomputes the same
     aggregate with a WHERE clause; one extra or missing file breaks
     the hash."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _partitioned_orders_iceberg(spark, sf_dir)
     df = read_iceberg_snapshot(
         spark, table_dir, partition_filter={"o_orderstatus": "F"}
@@ -1383,11 +1105,6 @@ def iceberg_maintenance_roundtrip(
 
     Scale posture: reachability walks manifests (metadata-sized);
     data files are only ever unlinked, never read."""
-    from ..sources.iceberglog import (
-        expire_snapshots,
-        read_iceberg_snapshot,
-    )
-
     table_dir = _run_iceberg_sink_stream(
         spark, sf_dir, scratch_dir("iceberg_sink_")
     )
@@ -1434,8 +1151,6 @@ def streaming_delta_sink_multipart(
     order. Partition count here is |status|×|priority| = 15 — the
     shape that, at a 1000×1000-value table, only works because the
     commit is ONE fanout write and pruning happens in the log."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _multipart_orders_delta(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1446,7 +1161,6 @@ def _v2_checkpoint_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     the pre-checkpoint commits retention-cleaned — the replay must
     start from the manifest, splice both sidecars, and still apply a
     post-checkpoint append."""
-    from ..sources.deltalog import cleanup_log, write_checkpoint
 
     def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
@@ -1474,8 +1188,6 @@ def delta_v2_checkpoint_read(
     snapshot after log retention removed every JSON commit. The
     oracle hash proves no row is lost or doubled across the
     manifest/sidecar split."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _v2_checkpoint_orders_delta(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1500,8 +1212,6 @@ def delta_compound_pruned_read(
     100 TB a compound partition predicate must multiply its
     selectivities in METADATA, not scan one level and filter the
     other. The oracle recomputes the cell with a WHERE clause."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _multipart_orders_delta(spark, sf_dir)
     df = read_delta_snapshot(
         spark, table_dir,
@@ -1526,8 +1236,6 @@ def streaming_iceberg_sink_transforms(
     with derived ``__part_*`` columns. The full-table readback hash
     proves the fanout, the transformed partition structs, and the
     manifest carry-forward lose nothing."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1557,8 +1265,6 @@ def iceberg_transform_pruned_read(
     recomputes with the exact WHERE, so a pruning false-NEGATIVE
     (lost file) breaks the hash, and the residual step catches the
     false positives pruning legitimately leaves."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     df = read_iceberg_snapshot(
         spark, table_dir,
@@ -1597,8 +1303,6 @@ def iceberg_bucket_pruned_point_read(
     bucketed tables exist for. A hash mismatch means either the
     writer bucketed the row into the wrong cell or the reader pruned
     the right cell away."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     return read_iceberg_snapshot(
         spark, table_dir, partition_filter={"o_orderkey": 1}
@@ -1656,8 +1360,6 @@ def _clustered_orders_delta(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _clustered_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.iceberglog import IcebergCommitter
-
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         _iceberg_stream_commit(
@@ -1681,8 +1383,6 @@ def delta_stats_skipping_read(
     re-applies as the residual (stats are a superset guarantee), and
     the oracle recomputes with the same WHERE — a lost file breaks
     the hash."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _clustered_orders_delta(spark, sf_dir)
     return _skipping_agg(
         read_delta_snapshot(
@@ -1702,8 +1402,6 @@ def iceberg_stats_skipping_read(
     the spec) and the scan transforms the range predicate into a
     bounds-overlap test at the MANIFEST level. Same clustered layout,
     same residual re-application, same oracle."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _clustered_orders_iceberg(spark, sf_dir)
     return _skipping_agg(
         read_iceberg_snapshot(
@@ -1771,49 +1469,17 @@ def _evolved_agg(df: DataFrame) -> DataFrame:
     )
 
 
-def _delta_evolved_commit(
-    table_dir: str, batch_df: DataFrame, batch_id: int, fields
-) -> None:
-    """One commit carrying BOTH the batch's adds and a metaData
-    action declaring the (possibly evolved) schema — Delta's
-    add-column evolution is exactly a new metaData action in the log
-    (replay takes the latest), no data rewrite; older files simply
-    lack the new column and read as null."""
-    log_dir = os.path.join(table_dir, "_delta_log")
-    version = _delta_next_version(log_dir, batch_id)
-    if version is None:
-        return
-    batch_rel = f"batch-{batch_id:05d}"
-    batch_df.write.mode("overwrite").parquet(
-        os.path.join(table_dir, batch_rel)
-    )
-    actions = (
-        _delta_meta_actions(fields)
-        if version == 0
-        else [a for a in _delta_meta_actions(fields) if "metaData" in a]
-    )
-    actions.append(
-        {"txn": {"appId": _DELTA_STREAM_APP, "version": batch_id}}
-    )
-    actions += _delta_add_actions(
-        batch_df.sparkSession, table_dir,
-        _delta_part_files(table_dir, batch_rel),
-    )
-    _delta_write_commit(log_dir, version, actions, table_dir, 10)
-
-
 def _evolved_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
         v1, v2 = _evolve_batches(spark, sf_dir)
-        _delta_evolved_commit(d, v1, 0, _EVOLVE_FIELDS_V1)
-        _delta_evolved_commit(d, v2, 1, _EVOLVE_FIELDS_V2)
+        # the committer declares a new metaData when the fields change
+        _delta_stream_commit(d, v1, 0, fields=_EVOLVE_FIELDS_V1)
+        _delta_stream_commit(d, v2, 2, fields=_EVOLVE_FIELDS_V2)  # even
 
     return memo_dir(spark, sf_dir, "delta_evolved_table", build)
 
 
 def _evolved_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.iceberglog import IcebergCommitter
-
     def build(d: str) -> None:
         committer = IcebergCommitter(d, list(_EVOLVE_FIELDS_V1))
         v1, v2 = _evolve_batches(spark, sf_dir)
@@ -1835,8 +1501,6 @@ def delta_schema_evolution_read(
     for the new column under the evolved schema. The oracle splits
     the same rows by which schema era wrote them, so the hash proves
     the evolved read is value-exact on both eras at once."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _evolved_orders_delta(spark, sf_dir)
     return _evolved_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1851,8 +1515,6 @@ def iceberg_schema_evolution_read(
     keeps bounds and partition source-ids stable across evolution).
     Readers resolve current-schema-id and fill pre-evolution files
     with null. Same oracle as the Delta twin."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _evolved_orders_iceberg(spark, sf_dir)
     return _evolved_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1894,8 +1556,6 @@ def delta_incremental_append_read(
     two-era evolution table, commits after version 0 are exactly the
     odd orderkeys, which is what the oracle recomputes. Removes in
     the range gate loudly (append-scan, not CDF)."""
-    from ..sources.deltalog import read_delta_incremental
-
     table_dir = _evolved_orders_delta(spark, sf_dir)
     return _incremental_agg(
         read_delta_incremental(spark, table_dir, from_version=0)
@@ -1912,11 +1572,6 @@ def iceberg_incremental_append_read(
     snapshots in the range gate loudly. Same two-era fixture and
     oracle as the Delta twin."""
     import json as _json
-
-    from ..sources.iceberglog import (
-        _metadata_path,
-        read_iceberg_incremental,
-    )
 
     table_dir = _evolved_orders_iceberg(spark, sf_dir)
     meta = _json.loads(open(_metadata_path(table_dir)).read())
@@ -1940,43 +1595,45 @@ ORDER BY o_orderstatus
 """
 
 
+def _iceberg_position_delete(
+    spark: SparkSession, committer, d: str, predicate, batch_id: int
+) -> None:
+    """Delete the rows of the table at ``d`` matching ``predicate`` by
+    POSITION: a distributed write lands their (file_path, pos) pairs,
+    sorted per spec, as a format-v2 delete parquet, and one delete
+    commit wraps its footer. Data parquet is untouched."""
+    dels_dir = os.path.join(d, "data", "deletes-00001")
+    (
+        with_row_position(read_iceberg_snapshot(spark, d).filter(predicate))
+        .select("file_path", "pos")
+        .repartition(1)
+        .sortWithinPartitions("file_path", "pos")
+        .write.mode("overwrite")
+        .parquet(dels_dir)
+    )
+    entries = [
+        committer.delete_file_entry(os.path.join(dels_dir, f))
+        for f in sorted(os.listdir(dels_dir))
+        if f.endswith(".parquet")
+    ]
+    committer.commit(batch_id, entries, operation="delete")
+
+
 def _mor_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Orders committed once, then every o_orderkey % 3 == 0 row
     deleted by POSITION (format v2 delete files) — data parquet
     untouched. The delete file itself is a distributed Spark write:
     (file_path, row_index) pairs selected via the hidden _metadata
     columns, sorted (file_path, pos) per spec."""
-    from ..sources.iceberglog import IcebergCommitter
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         _iceberg_stream_commit(
             committer, d, _clustered_orders_batch(spark, sf_dir), 0
         )
-        from ..sources.iceberglog import read_iceberg_snapshot
-
-        dels_rel = "deletes-00001"
-        dels_dir = os.path.join(d, "data", dels_rel)
-        (
-            read_iceberg_snapshot(spark, d)
-            .filter(F.col("o_orderkey") % 3 == 0)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .repartition(1)
-            .sortWithinPartitions("file_path", "pos")
-            .write.mode("overwrite")
-            .parquet(dels_dir)
+        _iceberg_position_delete(
+            spark, committer, d, F.col("o_orderkey") % 3 == 0, 2
         )
-        entries = [
-            committer.delete_file_entry(os.path.join(dels_dir, f))
-            for f in sorted(os.listdir(dels_dir))
-            if f.endswith(".parquet")
-        ]
-        committer.commit(2, entries, operation="delete")
 
     return memo_dir(spark, sf_dir, "iceberg_mor_table", build)
 
@@ -2007,7 +1664,6 @@ def _eq_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     o_orderstatus = 'F'. Snapshot 2 (seq 2): the % 10 == 0 rows —
     appended AFTER the delete, so their F rows must SURVIVE (the
     spec's strictly-lower-sequence scoping, reproducible in SQL)."""
-    from ..sources.iceberglog import IcebergCommitter
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
@@ -2038,8 +1694,6 @@ def iceberg_equality_delete_read(
     data files with a strictly LOWER sequence number. The fixture
     appends more 'F' rows AFTER the delete; the oracle hash breaks
     if scoping resurrects a deleted row or kills a later one."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _eq_orders_iceberg(spark, sf_dir)
     return (
         read_iceberg_snapshot(spark, table_dir)
@@ -2065,8 +1719,6 @@ def iceberg_position_delete_read(
     side streams through. The oracle recomputes the surviving rows
     with the equivalent predicate; one ghost or lost row breaks the
     hash."""
-    from ..sources.iceberglog import read_iceberg_snapshot
-
     table_dir = _mor_orders_iceberg(spark, sf_dir)
     return (
         read_iceberg_snapshot(spark, table_dir)
@@ -2093,39 +1745,40 @@ ORDER BY o_orderpriority
 """
 
 
+def _dv_delete(
+    spark: SparkSession, d: str, predicate, inline_threshold: int = 512
+) -> None:
+    """Delete the rows of the table at ``d`` matching ``predicate``
+    with deletion vectors: their (file, position) pairs are collected
+    — O(deleted rows), the DV payloads, which are log-resident
+    metadata by definition — grouped per data file, and committed as
+    one DELETE. No data parquet is rewritten."""
+    by_rel: dict = {}
+    for r in (
+        with_row_position(read_delta_snapshot(spark, d).filter(predicate))
+        .select("file_path", "pos")
+        .collect()
+    ):
+        by_rel.setdefault(os.path.relpath(r.file_path, d), []).append(r.pos)
+    delete_rows_by_position(d, by_rel, inline_threshold=inline_threshold)
+
+
 def _dv_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     """Orders committed once, then every o_orderkey % 3 == 0 row
     deleted via INLINE DELETION VECTORS (z85 + RoaringBitmapArray) —
     remove + re-add of the same path in one commit, no data parquet
     rewritten."""
-    from ..sources.deltalog import (
-        delete_rows_by_position,
-        read_delta_snapshot,
-    )
 
     def build(d: str) -> None:
         _delta_stream_commit(
             d, _clustered_orders_batch(spark, sf_dir), 0
         )
-        doomed = (
-            read_delta_snapshot(spark, d)
-            .filter(F.col("o_orderkey") % 3 == 0)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .collect()  # O(deleted rows): builds the DV payloads,
-            # which are log-resident metadata by definition
-        )
-        by_rel: dict = {}
-        for r in doomed:
-            rel = os.path.relpath(r.file_path, d)
-            by_rel.setdefault(rel, []).append(r.pos)
         # this fixture pins the INLINE shape; the file-backed twin is
         # _dv_file_orders_delta below
-        delete_rows_by_position(d, by_rel, inline_threshold=1 << 30)
+        _dv_delete(
+            spark, d, F.col("o_orderkey") % 3 == 0,
+            inline_threshold=1 << 30,
+        )
 
     return memo_dir(spark, sf_dir, "delta_dv_table", build)
 
@@ -2142,8 +1795,6 @@ def delta_deletion_vector_read(
     the decoded positions against the hidden parquet row index.
     Iceberg's position-delete twin is iceberg_position_delete_read —
     same semantics, the two formats' different encodings."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _dv_orders_delta(spark, sf_dir)
     return (
         read_delta_snapshot(spark, table_dir)
@@ -2175,31 +1826,14 @@ def _dv_file_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     ``deletion_vector_<uuid>.bin`` with version byte, BE size and
     CRC-32; ``inline_threshold=0`` forces the file path even at small
     SF so the shape under test is scale-invariant)."""
-    from ..sources.deltalog import (
-        delete_rows_by_position,
-        read_delta_snapshot,
-    )
 
     def build(d: str) -> None:
         _delta_stream_commit(
             d, _clustered_orders_batch(spark, sf_dir), 0
         )
-        doomed = (
-            read_delta_snapshot(spark, d)
-            .filter(F.col("o_orderkey") % 2 == 0)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .collect()
+        _dv_delete(
+            spark, d, F.col("o_orderkey") % 2 == 0, inline_threshold=0
         )
-        by_rel: dict = {}
-        for r in doomed:
-            rel = os.path.relpath(r.file_path, d)
-            by_rel.setdefault(rel, []).append(r.pos)
-        delete_rows_by_position(d, by_rel, inline_threshold=0)
 
     return memo_dir(spark, sf_dir, "delta_dv_file_table", build)
 
@@ -2216,8 +1850,6 @@ def delta_deletion_vector_file_read(
     ``deletion_vector_<uuid>.bin``, validates size + checksum, and
     anti-joins positions against the hidden parquet row index exactly
     like the inline path."""
-    from ..sources.deltalog import read_delta_snapshot
-
     table_dir = _dv_file_orders_delta(spark, sf_dir)
     return (
         read_delta_snapshot(spark, table_dir)
@@ -2258,10 +1890,6 @@ def _cdf_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     DV-delete of every o_orderkey % 3 == 0 row (touches both files).
     The (0, latest] change feed is then commit 1's inserts plus
     commit 2's deletes — SQL-reproducible."""
-    from ..sources.deltalog import (
-        delete_rows_by_position,
-        read_delta_snapshot,
-    )
 
     def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
@@ -2271,23 +1899,7 @@ def _cdf_orders_delta(spark: SparkSession, sf_dir: str) -> str:
         _delta_stream_commit(
             d, base.filter(F.col("o_orderkey") % 2 == 1), 2
         )  # even batch id: no compaction — pure append commit
-        doomed = (
-            read_delta_snapshot(spark, d)
-            .filter(F.col("o_orderkey") % 3 == 0)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .collect()
-        )
-        by_rel: dict = {}
-        for r in doomed:
-            by_rel.setdefault(
-                os.path.relpath(r.file_path, d), []
-            ).append(r.pos)
-        delete_rows_by_position(d, by_rel)
+        _dv_delete(spark, d, F.col("o_orderkey") % 3 == 0)
 
     return memo_dir(spark, sf_dir, "delta_cdf_table", build)
 
@@ -2303,8 +1915,6 @@ def delta_change_feed_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental consumers (CDC replication, TTL audits, training-set
     diffs) read changes without ever rescanning the table; rewrites
     and explicit cdc actions gate loudly."""
-    from ..sources.deltalog import table_changes
-
     table_dir = _cdf_orders_delta(spark, sf_dir)
     return (
         table_changes(spark, table_dir, from_version=0)
@@ -2343,10 +1953,6 @@ ORDER BY _change_type, _snapshot_id
 def _cdf_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Snapshot 1000: even orderkeys; 1001: odd orderkeys; 1002:
     position-delete of every o_orderkey % 3 == 0 row."""
-    from ..sources.iceberglog import (
-        IcebergCommitter,
-        read_iceberg_snapshot,
-    )
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
@@ -2357,27 +1963,9 @@ def _cdf_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
         _iceberg_stream_commit(
             committer, d, base.filter(F.col("o_orderkey") % 2 == 1), 2
         )
-        dels_dir = os.path.join(d, "data", "deletes-00001")
-        (
-            read_iceberg_snapshot(spark, d)
-            .filter(F.col("o_orderkey") % 3 == 0)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .repartition(1)
-            .sortWithinPartitions("file_path", "pos")
-            .write.mode("overwrite")
-            .parquet(dels_dir)
+        _iceberg_position_delete(
+            spark, committer, d, F.col("o_orderkey") % 3 == 0, 4
         )
-        entries = [
-            committer.delete_file_entry(os.path.join(dels_dir, f))
-            for f in sorted(os.listdir(dels_dir))
-            if f.endswith(".parquet")
-        ]
-        committer.commit(4, entries, operation="delete")
 
     return memo_dir(spark, sf_dir, "iceberg_cdf_table", build)
 
@@ -2392,11 +1980,6 @@ def iceberg_changelog_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table without rescans, across BOTH lakehouse formats with the
     same semantics. Rewrite snapshots gate loudly."""
     import json as _json
-
-    from ..sources.iceberglog import (
-        _metadata_path,
-        iceberg_changelog,
-    )
 
     table_dir = _cdf_orders_iceberg(spark, sf_dir)
     meta = _json.loads(open(_metadata_path(table_dir)).read())
@@ -2498,35 +2081,18 @@ def streaming_delta_source_roundtrip(
     # (_staged_order_waves); each between-trigger "commit" is then a
     # driver-side O(KB) log write — identical per-wave row sets and
     # commit sequence, 4x fewer passes over the input.
-    log_dir = os.path.join(table_dir, "_delta_log")
+    committer = DeltaCommitter(table_dir, _ORDERS_FIELDS)
     rels_by_wave = _staged_order_waves(spark, sf_dir, table_dir)
     adds = {
-        a["add"]["path"]: a
-        for a in _delta_add_actions(
-            spark, table_dir,
-            [r for rs in rels_by_wave.values() for r in rs],
+        a["path"]: a
+        for a in committer.add_entries(
+            spark, [r for rs in rels_by_wave.values() for r in rs]
         )
     }
 
     def _commit_wave(w: int) -> None:
-        batch_id = 2 * w  # even: append (parity with the r11 ids)
-        version = _delta_next_version(log_dir, batch_id)
-        if version is None:
-            return
-        actions = [] if version > 0 else _delta_meta_actions(
-            (
-                ("o_orderkey", "long"),
-                ("o_orderstatus", "string"),
-                ("o_orderpriority", "string"),
-                ("cents", "long"),
-            ),
-            (),
-        )
-        actions.append(
-            {"txn": {"appId": _DELTA_STREAM_APP, "version": batch_id}}
-        )
-        actions += [adds[r] for r in rels_by_wave[w]]
-        _delta_write_commit(log_dir, version, actions, table_dir, 10)
+        # even batch ids: appends (parity with the r11 ids)
+        committer.commit(2 * w, [adds[r] for r in rels_by_wave[w]])
 
     # commit wave 0 first: the source needs the table's schema
     _commit_wave(0)
@@ -2564,7 +2130,6 @@ def streaming_iceberg_source_roundtrip(
     added_snapshot_id, one task per added file). The complete-mode
     aggregate must equal the batch oracle — both lakehouse formats
     now stream in AND out of the engine with the same semantics."""
-    from ..sources.iceberglog import IcebergCommitter
     from ..sources.icebergstream_ds import register_icebergstream
 
     table_dir = scratch_dir("iceberg_source_")

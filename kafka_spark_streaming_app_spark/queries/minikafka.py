@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import atexit
 import functools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -365,6 +366,32 @@ def streaming_kafka_roundtrip(
     ).orderBy("window_start", "location")
 
 
+def _delta_refresh(committer, batch_df: DataFrame, batch_id: int) -> None:
+    """Full-refresh OVERWRITE transaction: one commit atomically
+    replaces the table's entire live file set (remove-all + add) —
+    the streaming materialized-view maintenance pattern (a
+    complete-mode aggregate lands each trigger's full state). The data
+    path is a distributed write; the driver replays the O(KB) log and
+    writes the commit JSON. A foreachBatch replay is a no-op via the
+    txn ledger, checked before the write so it never rewrites files a
+    commit already names."""
+    from ..sources.deltalog import part_files
+
+    if committer.committed_batch_id() >= batch_id:
+        return
+    rel = f"refresh-{batch_id:05d}"
+    batch_df.write.mode("overwrite").parquet(
+        os.path.join(committer.table_dir, rel)
+    )
+    committer.commit(
+        batch_id,
+        committer.add_entries(
+            batch_df.sparkSession, part_files(committer.table_dir, rel)
+        ),
+        overwrite=True,
+    )
+
+
 @query("streaming_kafka_to_delta_pipeline", _ROUNDTRIP_ORACLE)
 def streaming_kafka_to_delta_pipeline(
     spark: SparkSession, sf_dir: str
@@ -385,8 +412,7 @@ def streaming_kafka_to_delta_pipeline(
     aggregate state is windows × locations (matview-sized, the one
     thing that SHOULD flow whole per refresh); the Delta data path is
     a distributed write with the driver holding only the O(KB) log."""
-    from ..queries.formats import _delta_overwrite_commit
-    from ..sources.deltalog import read_delta_snapshot
+    from ..sources.deltalog import DeltaCommitter, read_delta_snapshot
 
     broker = _broker(spark)
     raw = (
@@ -399,19 +425,21 @@ def streaming_kafka_to_delta_pipeline(
         parse_and_clean(raw, ORDER_SCHEMA, watermark=None)
     )
     table_dir = scratch_dir("kafka_delta_pipe_")
-    fields = (
-        ("window_start", "timestamp"),
-        ("location", "string"),
-        ("n_orders", "long"),
-        ("cents", "long"),
+    # interval 2 so the sf0.01 run transits a sink-written checkpoint
+    # before the readback
+    committer = DeltaCommitter(
+        table_dir,
+        (
+            ("window_start", "timestamp"),
+            ("location", "string"),
+            ("n_orders", "long"),
+            ("cents", "long"),
+        ),
+        checkpoint_interval=2,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # interval 2 so the sf0.01 run transits a sink-written
-        # checkpoint before the readback
-        _delta_overwrite_commit(
-            table_dir, batch_df, batch_id, fields, checkpoint_interval=2
-        )
+        _delta_refresh(committer, batch_df, batch_id)
 
     # state width sized by state volume (windows x locations), as above
     with session.shuffle_partitions(spark, 8):

@@ -1,5 +1,5 @@
-"""From-scratch Delta Lake TRANSACTION-LOG reader (and fixture
-writer): snapshot construction without the delta-spark jar.
+"""From-scratch Delta Lake TRANSACTION-LOG reader and writer:
+snapshot construction and commits without the delta-spark jar.
 
 A Delta table is parquet data files plus ``_delta_log/`` — versioned
 JSON commits of actions (protocol / metaData / add / remove /
@@ -18,9 +18,13 @@ log defines the table. This module implements exactly that contract
   * ``read_delta_snapshot``: the live files handed to
     ``spark.read.parquet`` with the schema from ``metaData`` —
     Catalyst plans the scan exactly as it would any parquet relation;
-  * ``DeltaFixtureWriter``: writes REAL multi-version logs (appends,
-    a compaction that adds+removes, a parquet checkpoint via
-    pyarrow) for the oracle-checked query in ``queries/formats.py``.
+  * ``DeltaCommitter``: the one writer of the log, the read path's
+    twin and ``iceberglog.IcebergCommitter``'s Delta counterpart.
+    It numbers versions, keeps the ``txn`` ledger, declares protocol
+    and metaData, writes the write-side checkpoints, and publishes
+    each commit whole or not at all (temp file + put-if-absent
+    link). Every Delta sink, fixture and DELETE in the engine commits
+    through it.
 
 Partitioned tables are first-class: metaData.partitionColumns +
 per-add partitionValues replay into LOG-LEVEL partition pruning
@@ -41,12 +45,25 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .lakehouse import (
+    parquet_column_stats,
+    partition_values_from_path,
+    with_row_position,
+)
 
 
 def _commit_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, "_delta_log", f"{version:020d}.json")
+
+
+def _is_commit(name: str) -> bool:
+    """A ``NNNNNNNNNNNNNNNNNNNN.json`` commit file name (temp files and
+    checkpoints never match)."""
+    return name.endswith(".json") and name[:20].isdigit()
 
 
 def snapshot_files(
@@ -79,9 +96,7 @@ def snapshot_files(
     if not os.path.isdir(log_dir):
         raise ValueError(f"{table_dir}: no _delta_log — not a Delta table")
     versions = sorted(
-        int(f[:20])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f[:20].isdigit()
+        int(f[:20]) for f in os.listdir(log_dir) if _is_commit(f)
     )
     # a checkpointed version is as addressable as a JSON commit:
     # standard retention may clean EVERY commit <= the checkpoint,
@@ -491,10 +506,7 @@ def _apply_deletion_vectors(
     dels = spark.createDataFrame(
         pairs, "file_path string, pos bigint"
     )
-    tagged = df.withColumn(
-        "__mor_file",
-        F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
-    ).withColumn("__mor_pos", F.col("_metadata.row_index"))
+    tagged = with_row_position(df, "__mor_file", "__mor_pos")
     return tagged.join(
         F.broadcast(dels),
         (tagged["__mor_file"] == dels["file_path"])
@@ -503,15 +515,65 @@ def _apply_deletion_vectors(
     ).select(out_cols)
 
 
-class DeltaFixtureWriter:
-    """Writes a REAL Delta log: pyarrow data files, versioned JSON
-    commits, and a spec-shaped parquet checkpoint."""
+def tombstone(path: str, data_change: bool = True) -> dict:
+    """The ``remove`` action body for ``path``; dataChange=false marks
+    a compaction, which changes no rows."""
+    return {"path": path, "deletionTimestamp": 0, "dataChange": data_change}
 
-    def __init__(self, table_dir: str, schema_fields):
-        # schema_fields: [(name, delta_type_string)]
+
+def part_files(table_dir: str, rel_dir: str) -> list:
+    """Parquet files under ``rel_dir``, recursive (hive partition
+    layout nests col=value directories), relative to the table."""
+    out = []
+    for root, _, fs in os.walk(os.path.join(table_dir, rel_dir)):
+        out += [
+            os.path.relpath(os.path.join(root, f), table_dir)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+    return sorted(out)
+
+
+class DeltaCommitter:
+    """Stateless-from-disk committer, the write path mirroring
+    ``snapshot_files`` and the Delta twin of
+    ``iceberglog.IcebergCommitter``: every commit replays the log, so
+    foreachBatch replays and crash-restarts see the authoritative
+    table state. It owns every decision about the log format:
+
+    * version numbering: max ADDRESSABLE version + 1, so a version a
+      checkpoint covers still counts after ``cleanup_log`` removed its
+      JSON commit (``len(commits)`` would land the commit invisibly
+      below the checkpoint);
+    * the ``txn`` ledger, read from checkpoint + commits, which makes
+      a replayed batch a no-op;
+    * protocol + metaData on the first commit, and metaData again when
+      ``schema_fields`` differ from the table's (add-column evolution
+      is exactly a new metaData action; older files read the new
+      column as null);
+    * the write-side checkpoint every ``checkpoint_interval`` commits;
+    * publishing the commit file (``_publish``).
+
+    A table is fresh only when its log holds no commit and no
+    checkpoint, an explicit existence check. Every other replay error
+    (a torn commit, a missing metaData) propagates: reading it as
+    "fresh" would write version 0 over the table."""
+
+    app_id = "spark-graft-delta-sink"
+
+    def __init__(
+        self, table_dir: str, schema_fields=None, partition_by=(),
+        checkpoint_interval: int = 10,
+    ):
+        # schema_fields: [(name, delta_type)] covering ALL columns (the
+        # spec keeps partition columns in schemaString too); None when
+        # the committer only writes to an existing table
         self.table_dir = table_dir
-        os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
-        self.schema_string = json.dumps(
+        self.log_dir = os.path.join(table_dir, "_delta_log")
+        os.makedirs(self.log_dir, exist_ok=True)
+        self.partition_by = tuple(partition_by)
+        self.checkpoint_interval = max(checkpoint_interval, 1)
+        self.schema_string = None if schema_fields is None else json.dumps(
             {
                 "type": "struct",
                 "fields": [
@@ -520,59 +582,145 @@ class DeltaFixtureWriter:
                 ],
             }
         )
-        self.version = -1
 
-    def _write_data_file(self, name: str, rows: list) -> dict:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def _snapshot(self) -> dict | None:
+        """The current snapshot, or None for a fresh table."""
+        if not any(
+            _is_commit(f) or f == "_last_checkpoint"
+            for f in os.listdir(self.log_dir)
+        ):
+            return None
+        return snapshot_files(self.table_dir)
 
-        path = os.path.join(self.table_dir, name)
-        pq.write_table(pa.Table.from_pylist(rows), path)
-        return {
-            "path": name,
-            "partitionValues": {},
-            "size": os.path.getsize(path),
-            "modificationTime": 0,
-            "dataChange": True,
+    def committed_batch_id(self) -> int:
+        """Highest sink batch id in the txn ledger, or -1."""
+        snap = self._snapshot()
+        return -1 if snap is None else snap["txns"].get(self.app_id, -1)
+
+    def add_entries(
+        self, spark: SparkSession, rels, data_change: bool = True
+    ) -> list:
+        """``add`` action bodies for a BATCH of part files (paths
+        relative to the table), with per-file stats collected in ONE
+        distributed job: each task opens only its own files' footers
+        (O(KB) each) and the driver receives just the stats rows, so a
+        fanout commit of thousands of files never serializes their
+        footer opens on the driver (real Delta collects stats inside
+        the write job the same way). Stats (Delta spec: a JSON string
+        of numRecords/minValues/maxValues) make the log itself the
+        data-skipping index."""
+        rels = sorted(rels)
+        if not rels:
+            return []
+        abs_root = os.path.abspath(self.table_dir)
+
+        def _footer_stats(it):
+            import pyarrow.parquet as pq
+
+            for rel in it:
+                path = os.path.join(abs_root, rel)
+                md = pq.ParquetFile(path).metadata
+                out = parquet_column_stats(md)
+                stats = {
+                    "numRecords": md.num_rows,
+                    "minValues": {c: lo for c, (lo, _) in out.items()},
+                    "maxValues": {c: hi for c, (_, hi) in out.items()},
+                }
+                yield rel, json.dumps(stats), os.path.getsize(path)
+
+        sc = spark.sparkContext
+        # amortize per-task (Python worker) overhead over a few footers
+        # each — a footer open is O(ms), so one file per task is pure
+        # scheduling; parallelism still scales to the cluster for big
+        # fanout commits (thousands of files -> defaultParallelism tasks)
+        slices = max(1, min((len(rels) + 3) // 4, sc.defaultParallelism))
+        collected = {
+            rel: (stats, size)
+            for rel, stats, size in sc.parallelize(rels, slices)
+            .mapPartitions(_footer_stats)
+            .collect()
         }
+        return [
+            {
+                "path": rel,
+                "partitionValues": partition_values_from_path(
+                    rel, self.partition_by
+                ),
+                "size": collected[rel][1],
+                "modificationTime": 0,
+                "dataChange": data_change,
+                "stats": collected[rel][0],
+            }
+            for rel in rels
+        ]
 
-    def commit(self, add_files=(), remove_paths=(), first: bool = False):
-        """``add_files``: [(name, rows)]."""
-        self.version += 1
-        actions = []
-        if first:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
+    def commit(
+        self, batch_id: int | None, added, removed=(),
+        overwrite: bool = False, protocol: dict | None = None,
+    ) -> int | None:
+        """One transaction: ``removed`` (``tombstone`` bodies), then
+        ``added`` (``add_entries`` bodies). Returns the new version, or
+        None when the ledger already holds ``batch_id`` (a foreachBatch
+        replay); ``batch_id=None`` commits outside the ledger (a
+        DELETE). ``overwrite`` also removes every file live in the
+        snapshot the version is numbered from — the full-refresh shape
+        (superseded files stay on disk as decoys until vacuum).
+        ``protocol`` upgrades the table's protocol in this commit."""
+        snap = self._snapshot()
+        if batch_id is not None and snap is not None:
+            if batch_id <= snap["txns"].get(self.app_id, -1):
+                return None
+        if snap is None and not protocol:
+            protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
+        actions = [{"protocol": protocol}] if protocol else []
+        if snap is None or self.schema_string not in (
+            None, snap["schema_string"]
+        ):
             actions.append(
                 {
                     "metaData": {
-                        "id": "fixture-table",
+                        "id": "stream-table",
                         "format": {"provider": "parquet", "options": {}},
                         "schemaString": self.schema_string,
-                        "partitionColumns": [],
+                        "partitionColumns": list(self.partition_by),
                         "configuration": {},
                         "createdTime": 0,
                     }
                 }
             )
-        for name, rows in add_files:
-            actions.append({"add": self._write_data_file(name, rows)})
-        for p in remove_paths:
+        if batch_id is not None:
             actions.append(
-                {"remove": {"path": p, "deletionTimestamp": 0,
-                            "dataChange": True}}
+                {"txn": {"appId": self.app_id, "version": batch_id}}
             )
-        actions.append({"commitInfo": {"operation": "FIXTURE"}})
-        with open(_commit_path(self.table_dir, self.version), "w") as fh:
+        if overwrite and snap is not None:
+            actions += [{"remove": tombstone(p)} for p in snap["files"]]
+        actions += [{"remove": r} for r in removed]
+        actions += [{"add": a} for a in added]
+        version = 0 if snap is None else snap["version"] + 1
+        self._publish(version, actions)
+        # write-side checkpoint parity (real Delta defaults to every 10
+        # commits): readers then replay O(commits-since-checkpoint)
+        if (version + 1) % self.checkpoint_interval == 0:
+            write_checkpoint(self.table_dir)
+        return version
+
+    def _publish(self, version: int, actions: list) -> None:
+        """Write the commit whole under a temp name the log listing
+        never matches, then hard-link it to the version name. The link
+        fails if that version exists — the put-if-absent a Delta log
+        store must provide — so a commit lands whole or not at all and
+        never over another. A crash before the link leaves only an
+        invisible temp file, and the batch's replay commits afresh."""
+        fd, tmp = tempfile.mkstemp(
+            prefix=".", suffix=".json.tmp", dir=self.log_dir
+        )
+        with os.fdopen(fd, "w") as fh:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
-        return self.version
-
-    def checkpoint(self):
-        """Materialize the current snapshot as a parquet checkpoint
-        and point _last_checkpoint at it."""
-        write_checkpoint(self.table_dir)
+        try:
+            os.link(tmp, _commit_path(self.table_dir, version))
+        finally:
+            os.unlink(tmp)
 
 
 def write_checkpoint(
@@ -870,7 +1018,7 @@ def cleanup_log(table_dir: str) -> list:
     cp_version = int(json.loads(open(cp_meta).read())["version"])
     removed = []
     for f in sorted(os.listdir(log_dir)):
-        if f.endswith(".json") and f[:20].isdigit() and int(f[:20]) <= cp_version:
+        if _is_commit(f) and int(f[:20]) <= cp_version:
             os.remove(os.path.join(log_dir, f))
             removed.append(f)
     return removed
@@ -1020,9 +1168,7 @@ def delete_rows_by_position(
 
     snap = snapshot_files(table_dir)
     live = snap["adds"]
-    actions = []
-    if not _protocol_supports_dv(snap["protocol"]):
-        actions.append({"protocol": dict(DV_PROTOCOL)})
+    removed, added = [], []
     for rel, positions in sorted(positions_by_path.items()):
         if rel not in live:
             raise ValueError(
@@ -1034,23 +1180,21 @@ def delete_rows_by_position(
             merged |= set(
                 dv_positions(old["deletionVector"], table_dir)
             )
-        actions.append(
-            {"remove": {"path": rel, "deletionTimestamp": 0,
-                        "dataChange": True}}
-        )
         ordered = sorted(merged)
         if len(dv_serialize(ordered)) <= inline_threshold:
             old["deletionVector"] = dv_inline(ordered)
         else:
             old["deletionVector"] = dv_file_write(table_dir, ordered)
         old["dataChange"] = True
-        actions.append({"add": old})
-    actions.append({"commitInfo": {"operation": "DELETE"}})
-    version = snap["version"] + 1
-    with open(_commit_path(table_dir, version), "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-    return version
+        removed.append(tombstone(rel))
+        added.append(old)
+    return DeltaCommitter(table_dir).commit(
+        None, added, removed,
+        protocol=(
+            None if _protocol_supports_dv(snap["protocol"])
+            else dict(DV_PROTOCOL)
+        ),
+    )
 
 
 def table_changes(
@@ -1159,12 +1303,7 @@ def table_changes(
             base = spark.read.schema(schema).parquet(
                 *sorted({p for p, _ in del_pairs})
             )
-            tagged = base.withColumn(
-                "__cdf_file",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                ),
-            ).withColumn("__cdf_pos", F.col("_metadata.row_index"))
+            tagged = with_row_position(base, "__cdf_file", "__cdf_pos")
             parts.append(
                 tagged.join(
                     F.broadcast(dels),

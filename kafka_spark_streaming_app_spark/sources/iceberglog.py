@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.avrocodec import read_container, write_container
+from .lakehouse import local_path, parquet_column_stats, with_row_position
 
 STATUS_EXISTING = 0
 STATUS_ADDED = 1
@@ -367,40 +368,6 @@ def _manifest_schema(partition_fields=()) -> dict:
 _MANIFEST_SCHEMA = _manifest_schema()
 
 
-def parquet_column_stats(path: str) -> dict:
-    """Per-column (min, max) from the parquet FOOTER — the O(KB)
-    metadata read both lakehouse writers use to attach file-skipping
-    stats at commit time (never the data). Columns without usable
-    statistics are simply absent. long/double/string subset."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    out: dict = {}
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    continue
-            if not isinstance(lo, (int, float, str)) or isinstance(
-                lo, bool
-            ):
-                continue
-            name = col.path_in_schema
-            if name in out:
-                out[name] = (min(out[name][0], lo), max(out[name][1], hi))
-            else:
-                out[name] = (lo, hi)
-    return out
-
-
 def _bound_to_bytes(value, icetype: str | None = None) -> bytes:
     """Iceberg single-value serialization for bounds: int -> 4-byte
     little-endian (spec Appendix D — NOT 8), long -> 8-byte LE,
@@ -702,20 +669,15 @@ def read_iceberg_snapshot(
 
     from pyspark.sql import functions as F
 
-    def norm(c):  # "file:///t/x" / "file:/t/x" / "/t/x" -> "/t/x"
-        return F.regexp_replace(c, "^file:/*", "/")
-
     cols = df.columns
-    tagged = df.withColumn(
-        "__mor_file", norm(F.col("_metadata.file_path"))
-    ).withColumn("__mor_pos", F.col("_metadata.row_index"))
+    tagged = with_row_position(df, "__mor_file", "__mor_pos")
     if snap.get("delete_files"):
         dels = spark.read.schema(
             "file_path string, pos bigint"
         ).parquet(*snap["delete_files"])
         tagged = tagged.join(
             F.broadcast(dels),
-            (tagged["__mor_file"] == norm(dels["file_path"]))
+            (tagged["__mor_file"] == local_path(dels["file_path"]))
             & (tagged["__mor_pos"] == dels["pos"]),
             "left_anti",
         )
@@ -996,20 +958,19 @@ class IcebergCommitter:
         binary serialization) for stats-based file skipping."""
         import pyarrow.parquet as pq
 
+        md = pq.ParquetFile(path).metadata
         entry = {
             "content": 0,
             "file_path": path,
             "file_format": "PARQUET",
-            "record_count": pq.ParquetFile(path).metadata.num_rows,
+            "record_count": md.num_rows,
             "file_size_in_bytes": os.path.getsize(path),
         }
         name_to_field = {
             f["name"]: f for f in self.schema["fields"]
         }
         lower, upper = [], []
-        for name, (lo, hi) in sorted(
-            parquet_column_stats(path).items()
-        ):
+        for name, (lo, hi) in sorted(parquet_column_stats(md).items()):
             f = name_to_field.get(name)
             if f is None:
                 continue
@@ -1494,9 +1455,6 @@ def iceberg_changelog(
     if lo > hi:
         raise ValueError(f"from {from_snapshot} is newer than to {to}")
 
-    def _norm(c):
-        return F.regexp_replace(c, "^file:/*", "/")
-
     def _delete_pairs(delete_paths) -> set:
         import pyarrow.parquet as pq
 
@@ -1578,15 +1536,11 @@ def iceberg_changelog(
                 base = spark.read.schema(spark_schema).parquet(
                     *sorted({p for p, _ in new_pairs})
                 )
-                tagged = base.withColumn(
-                    "__cl_file", _norm(F.col("_metadata.file_path"))
-                ).withColumn(
-                    "__cl_pos", F.col("_metadata.row_index")
-                )
+                tagged = with_row_position(base, "__cl_file", "__cl_pos")
                 parts.append(
                     tagged.join(
                         F.broadcast(dels),
-                        (tagged["__cl_file"] == _norm(dels["file_path"]))
+                        (tagged["__cl_file"] == local_path(dels["file_path"]))
                         & (tagged["__cl_pos"] == dels["pos"]),
                         "left_semi",
                     )

@@ -1,26 +1,31 @@
 """Lakehouse table formats (Delta / Iceberg) — jar-backed paths,
-gated with remediation.
+gated with remediation, plus the helpers both log modules share.
 
 The connector jars are not on this environment's classpath; these
 entry points keep the API surface present and fail with remediation
 instead of a raw ClassNotFoundException (same pattern as the Kafka
 source wrapper).
 
-The jar gap no longer blocks READING either format: the engine
-carries from-scratch metadata-layer readers built on the public
-protocol specs — ``sources/deltalog.py`` (transaction-log replay:
-JSON commits, parquet checkpoints, time travel) and
-``sources/iceberglog.py`` (version hint -> metadata JSON -> Avro
-manifest lists/manifests via ``operators/avrocodec.py``). Both hand
-the live file set to ``spark.read.parquet`` so Catalyst plans the
-scan normally; writers, partitioned tables, deletion vectors and
-row-level merges remain jar-backed behavior behind this module's
-gates.
+The jar gap no longer blocks either format: the engine carries
+from-scratch metadata-layer readers AND writers built on the public
+protocol specs — ``sources/deltalog.py`` (transaction-log replay and
+``DeltaCommitter``) and ``sources/iceberglog.py`` (version hint ->
+metadata JSON -> Avro manifest lists/manifests via
+``operators/avrocodec.py``, and ``IcebergCommitter``). Both hand the
+live file set to ``spark.read.parquet`` so Catalyst plans the scan
+normally. What stays jar-backed, behind each module's loud gates, is
+the rest of the protocols: id-mode column mapping, date transforms,
+cdc actions, rewrite change feeds and time travel past retention.
+
+Shared here: the parquet footer-stats reader both committers attach
+file-skipping stats with, and the hidden (file, row position) pair
+that every merge-on-read join and delete builder keys on.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _REMEDIATION = {
     "delta": (
@@ -112,3 +117,75 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
                 f"avro datasource unavailable: {_AVRO_REMEDIATION}"
             ) from exc
         raise
+
+
+def parquet_column_stats(md) -> dict:
+    """Per-column (min, max) from a parquet FOOTER (pyarrow
+    ``FileMetaData``) — the O(KB) metadata read both lakehouse writers
+    use to attach file-skipping stats at commit time (never the
+    data): ``DeltaCommitter`` on the executors, inside its one stats
+    job, and ``IcebergCommitter`` on the driver. Columns without
+    usable statistics are simply absent. long/double/string subset."""
+    out: dict = {}
+    for rg in range(md.num_row_groups):
+        row_group = md.row_group(rg)
+        for ci in range(row_group.num_columns):
+            col = row_group.column(ci)
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo, hi = st.min, st.max
+            if isinstance(lo, bytes):
+                try:
+                    lo, hi = lo.decode(), hi.decode()
+                except UnicodeDecodeError:
+                    continue
+            if not isinstance(lo, (int, float, str)) or isinstance(
+                lo, bool
+            ):
+                continue
+            name = col.path_in_schema
+            if name in out:
+                out[name] = (min(out[name][0], lo), max(out[name][1], hi))
+            else:
+                out[name] = (lo, hi)
+    return out
+
+
+def local_path(c: Column) -> Column:
+    """A file URI as the plain local path the logs store:
+    ``file:///t/x``, ``file:/t/x`` and ``/t/x`` all become ``/t/x``."""
+    return F.regexp_replace(c, "^file:/*", "/")
+
+
+def with_row_position(
+    df: DataFrame, file_col: str = "file_path", pos_col: str = "pos"
+) -> DataFrame:
+    """``df`` plus each row's position in its data file, from the
+    hidden parquet ``_metadata`` columns: the (file, row index) pair
+    that Delta deletion vectors and Iceberg position deletes name, so
+    both the delete builders and the merge-on-read joins key on it."""
+    return df.withColumn(
+        file_col, local_path(F.col("_metadata.file_path"))
+    ).withColumn(pos_col, F.col("_metadata.row_index"))
+
+
+def partition_values_from_path(rel: str, partition_by) -> dict:
+    """{col: value} parsed from hive path segments (col=value).
+    Spark spells a NULL partition value ``__HIVE_DEFAULT_PARTITION__``
+    in the directory name — map it back to None so the metadata
+    stores a real null (Delta: JSON null in partitionValues; leaking
+    the literal string would make null partitions silently
+    unprunable/mismatched)."""
+    from urllib.parse import unquote
+
+    vals = {}
+    for seg in rel.split("/")[:-1]:
+        if "=" in seg:
+            c, v = seg.split("=", 1)
+            if c in partition_by:
+                v = unquote(v)
+                vals[c] = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
+                )
+    return vals

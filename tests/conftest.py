@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -23,6 +24,19 @@ from kafka_spark_streaming_app_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _tempdir_under_basetemp(tmp_path_factory):
+    """Point ``tempfile``'s default directory under pytest's base temp
+    dir, so scratch dirs that tests (and the queries they run) make
+    with a bare ``tempfile.mkdtemp`` are removed by pytest's retention
+    of its last 3 base dirs instead of piling up in the system temp
+    dir."""
+    old = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("tempfile"))
+    yield
+    tempfile.tempdir = old
 
 
 @pytest.fixture(scope="session")

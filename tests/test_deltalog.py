@@ -10,9 +10,11 @@ import os
 import pytest
 
 from kafka_spark_streaming_app_spark.sources.deltalog import (
-    DeltaFixtureWriter,
+    DeltaCommitter,
     read_delta_snapshot,
     snapshot_files,
+    tombstone,
+    write_checkpoint,
 )
 
 _FIELDS = [("k", "long"), ("v", "string")]
@@ -22,20 +24,36 @@ def _rows(lo, hi, tag):
     return [{"k": i, "v": f"{tag}{i}"} for i in range(lo, hi)]
 
 
-def _make_table(d):
-    w = DeltaFixtureWriter(str(d), _FIELDS)
-    w.commit(add_files=[("a0.parquet", _rows(0, 10, "a"))], first=True)
-    w.commit(
+def _commit(spark, d, add_files=(), remove_paths=()):
+    """One commit through DeltaCommitter: ``add_files`` ([(name,
+    rows)]) land as pyarrow-written parquet, ``remove_paths`` as
+    tombstones. Returns the version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name, rows in add_files:
+        pq.write_table(pa.Table.from_pylist(rows), os.path.join(d, name))
+    c = DeltaCommitter(str(d), _FIELDS)
+    return c.commit(
+        None,
+        c.add_entries(spark, [name for name, _ in add_files]),
+        [tombstone(p) for p in remove_paths],
+    )
+
+
+def _make_table(spark, d):
+    _commit(spark, d, [("a0.parquet", _rows(0, 10, "a"))])
+    _commit(
+        spark, d,
         add_files=[("a1.parquet", _rows(0, 10, "a"))],
         remove_paths=["a0.parquet"],
     )  # compaction: a0 tombstoned but still on disk
-    w.checkpoint()
-    w.commit(add_files=[("b.parquet", _rows(10, 25, "b"))])
-    return w
+    write_checkpoint(str(d))
+    _commit(spark, d, [("b.parquet", _rows(10, 25, "b"))])
 
 
 def test_snapshot_excludes_tombstoned_file(tmp_path, spark):
-    _make_table(tmp_path)
+    _make_table(spark, tmp_path)
     snap = snapshot_files(str(tmp_path))
     assert snap["version"] == 2
     assert snap["files"] == ["a1.parquet", "b.parquet"]
@@ -49,7 +67,7 @@ def test_snapshot_excludes_tombstoned_file(tmp_path, spark):
 
 
 def test_time_travel_pins_versions(tmp_path, spark):
-    _make_table(tmp_path)
+    _make_table(spark, tmp_path)
     assert snapshot_files(str(tmp_path), 0)["files"] == ["a0.parquet"]
     assert snapshot_files(str(tmp_path), 1)["files"] == ["a1.parquet"]
     assert read_delta_snapshot(spark, str(tmp_path), 1).count() == 10
@@ -60,7 +78,7 @@ def test_time_travel_pins_versions(tmp_path, spark):
 def test_checkpoint_survives_log_truncation(tmp_path, spark):
     """Delta permits deleting commits at or before the checkpoint;
     the snapshot must then START from the checkpoint state."""
-    _make_table(tmp_path)
+    _make_table(spark, tmp_path)
     os.remove(tmp_path / "_delta_log" / f"{0:020d}.json")
     os.remove(tmp_path / "_delta_log" / f"{1:020d}.json")
     snap = snapshot_files(str(tmp_path))
@@ -69,34 +87,31 @@ def test_checkpoint_survives_log_truncation(tmp_path, spark):
     assert read_delta_snapshot(spark, str(tmp_path)).count() == 25
 
 
-def test_guards(tmp_path):
+def test_guards(tmp_path, spark):
     with pytest.raises(ValueError, match="not a Delta table"):
         snapshot_files(str(tmp_path / "nope"))
-    w = DeltaFixtureWriter(str(tmp_path), _FIELDS)
-    w.commit(add_files=[("a.parquet", _rows(0, 3, "a"))], first=True)
+    _commit(spark, tmp_path, [("a.parquet", _rows(0, 3, "a"))])
     # a partition filter must name actual partition columns
     with pytest.raises(ValueError, match="non-partition columns"):
         snapshot_files(str(tmp_path), partition_filter={"day": "x"})
 
 
-def test_missing_commit_versions_gate_loudly(tmp_path):
+def test_missing_commit_versions_gate_loudly(tmp_path, spark):
     """A log with a hole (retention cleaned a commit the target
     version needs) must refuse to replay, not silently skip it."""
-    w = DeltaFixtureWriter(str(tmp_path), _FIELDS)
-    w.commit(add_files=[("a.parquet", _rows(0, 5, "a"))], first=True)
-    w.commit(add_files=[("b.parquet", _rows(5, 10, "b"))])
-    w.commit(add_files=[("c.parquet", _rows(10, 15, "c"))])
+    _commit(spark, tmp_path, [("a.parquet", _rows(0, 5, "a"))])
+    _commit(spark, tmp_path, [("b.parquet", _rows(5, 10, "b"))])
+    _commit(spark, tmp_path, [("c.parquet", _rows(10, 15, "c"))])
     os.remove(tmp_path / "_delta_log" / f"{1:020d}.json")
     with pytest.raises(NotImplementedError, match=r"\[1\] are absent"):
         snapshot_files(str(tmp_path))
 
 
-def test_checkpoint_shape_gates(tmp_path):
+def test_checkpoint_shape_gates(tmp_path, spark):
     """A dangling _last_checkpoint (single- or multi-part, files
     absent) gates with the explicit jar-backed-path message, never a
     raw FileNotFoundError."""
-    w = DeltaFixtureWriter(str(tmp_path), _FIELDS)
-    w.commit(add_files=[("a.parquet", _rows(0, 5, "a"))], first=True)
+    _commit(spark, tmp_path, [("a.parquet", _rows(0, 5, "a"))])
     cp_meta = tmp_path / "_delta_log" / "_last_checkpoint"
     cp_meta.write_text(json.dumps({"version": 0, "size": 1, "parts": 2}))
     with pytest.raises(NotImplementedError, match="cannot find"):
@@ -223,17 +238,17 @@ def test_overwrite_commit_full_refresh_checkpoint_and_retention(
     each commit replaces the live set; replays dedup via txn; the
     write-side checkpoint makes pre-checkpoint log retention safe
     (and the contiguity gate still fires for holes AFTER it)."""
-    from kafka_spark_streaming_app_spark.queries.formats import (
-        _delta_overwrite_commit,
+    from kafka_spark_streaming_app_spark.queries.minikafka import (
+        _delta_refresh,
     )
 
-    fields = (("k", "long"), ("v", "string"))
+    committer = DeltaCommitter(
+        str(tmp_path), _FIELDS, checkpoint_interval=2
+    )
 
     def refresh(rows, batch_id):
         df = spark.createDataFrame(rows, "k long, v string").coalesce(1)
-        _delta_overwrite_commit(
-            str(tmp_path), df, batch_id, fields, checkpoint_interval=2
-        )
+        _delta_refresh(committer, df, batch_id)
 
     refresh([(1, "a"), (2, "b")], 0)
     refresh([(3, "c")], 1)
@@ -373,12 +388,10 @@ def test_resume_after_log_retention_assigns_fresh_versions(
     would restart at 0, landing commits invisibly below the
     checkpoint — silent data loss)."""
     from kafka_spark_streaming_app_spark.queries.formats import (
-        _delta_next_version,
         _delta_stream_commit,
     )
     from kafka_spark_streaming_app_spark.sources.deltalog import (
         cleanup_log,
-        write_checkpoint,
     )
 
     _delta_stream_commit(str(tmp_path), _batch_df(spark, [1, 2]), 0)
@@ -387,11 +400,14 @@ def test_resume_after_log_retention_assigns_fresh_versions(
     removed = cleanup_log(str(tmp_path))
     assert removed  # every JSON commit is below the checkpoint now
     # checkpoint carries the txn ledger: replays of both batches no-op
-    assert _delta_next_version(str(tmp_path / "_delta_log"), 0) is None
-    assert _delta_next_version(str(tmp_path / "_delta_log"), 1) is None
+    assert DeltaCommitter(str(tmp_path)).committed_batch_id() == 1
+    c = DeltaCommitter(str(tmp_path))
+    assert c.commit(0, []) is None
+    assert c.commit(1, []) is None
     # and a genuinely new batch lands ABOVE the checkpoint
-    assert _delta_next_version(str(tmp_path / "_delta_log"), 2) == 2
-    _delta_stream_commit(str(tmp_path), _batch_df(spark, [5, 6]), 2)
+    assert _delta_stream_commit(
+        str(tmp_path), _batch_df(spark, [5, 6]), 2
+    ) == 2
     snap = snapshot_files(str(tmp_path))
     assert snap["version"] == 2 and snap["from_checkpoint"]
     assert snap["txns"] == {"spark-graft-delta-sink": 2}
@@ -456,9 +472,8 @@ def test_empty_unpartitioned_snapshot_reads_as_empty_df(
     """ADVICE: an unpartitioned snapshot with zero live files (e.g.
     overwrite of an empty aggregate) must return an empty DataFrame,
     not raise from spark.read.parquet() with no paths."""
-    w = DeltaFixtureWriter(str(tmp_path), _FIELDS)
-    w.commit(add_files=[("a.parquet", _rows(0, 3, "a"))], first=True)
-    w.commit(remove_paths=["a.parquet"])
+    _commit(spark, tmp_path, [("a.parquet", _rows(0, 3, "a"))])
+    _commit(spark, tmp_path, remove_paths=["a.parquet"])
     df = read_delta_snapshot(spark, str(tmp_path))
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]
@@ -562,7 +577,7 @@ def test_schema_evolution_is_a_metadata_action(tmp_path, spark):
     from kafka_spark_streaming_app_spark.queries.formats import (
         _EVOLVE_FIELDS_V1,
         _EVOLVE_FIELDS_V2,
-        _delta_evolved_commit,
+        _delta_stream_commit,
     )
     from kafka_spark_streaming_app_spark.sources.deltalog import (
         cleanup_log,
@@ -579,8 +594,8 @@ def test_schema_evolution_is_a_metadata_action(tmp_path, spark):
         "o_orderpriority string, cents long",
     ).select("o_orderkey", "o_orderstatus", "cents", "o_orderpriority"
              ).coalesce(1)
-    _delta_evolved_commit(str(tmp_path), v1, 0, _EVOLVE_FIELDS_V1)
-    _delta_evolved_commit(str(tmp_path), v2, 1, _EVOLVE_FIELDS_V2)
+    _delta_stream_commit(str(tmp_path), v1, 0, fields=_EVOLVE_FIELDS_V1)
+    _delta_stream_commit(str(tmp_path), v2, 2, fields=_EVOLVE_FIELDS_V2)
     df = read_delta_snapshot(spark, str(tmp_path))
     assert df.columns == [
         "o_orderkey", "o_orderstatus", "cents", "o_orderpriority",
@@ -1135,3 +1150,83 @@ def test_v2_sidecar_checkpoint_roundtrip(tmp_path, spark):
     os.remove(log_dir / "_sidecars" / sidecars[0])
     with pytest.raises(NotImplementedError, match="sidecar"):
         snapshot_files(str(tmp_path))
+
+
+def test_torn_commit_fails_the_writer_and_keeps_every_commit(
+    tmp_path, spark
+):
+    """A commit N>0 whose last line was cut off is not a fresh table:
+    the next commit raises and every existing commit file stays
+    byte-identical. Reading the replay error as "fresh" would number
+    the next commit 0 and write it over the table's protocol,
+    metaData and first adds."""
+    from kafka_spark_streaming_app_spark.queries.formats import (
+        _delta_stream_commit,
+    )
+
+    _delta_stream_commit(str(tmp_path), _batch_df(spark, [1, 2]), 0)
+    _delta_stream_commit(str(tmp_path), _batch_df(spark, [3, 4]), 2)
+    log = tmp_path / "_delta_log"
+    torn = log / f"{1:020d}.json"
+    body = torn.read_bytes()
+    last = body.rstrip(b"\n").rfind(b"\n") + 1
+    torn.write_bytes(body[: last + 10])  # the last line, cut off
+    before = {f: (log / f).read_bytes() for f in os.listdir(log)}
+    with pytest.raises(ValueError):
+        _delta_stream_commit(str(tmp_path), _batch_df(spark, [5]), 4)
+    assert {f: (log / f).read_bytes() for f in os.listdir(log)} == before
+
+
+def test_crash_before_publish_replays_exactly_once(
+    tmp_path, spark, monkeypatch
+):
+    """A writer that dies while writing commit N leaves only an
+    unpublished temp file, which the log listing never matches: the
+    table stays at N-1, and the batch's replay commits it exactly
+    once. Publishing never replaces an existing version."""
+    from kafka_spark_streaming_app_spark.queries.formats import (
+        _delta_stream_commit,
+    )
+    from kafka_spark_streaming_app_spark.sources import deltalog
+
+    class Crash(Exception):
+        pass
+
+    real_dumps = json.dumps
+
+    def dies_at_first_add(obj, *a, **k):
+        if isinstance(obj, dict) and "add" in obj:
+            raise Crash
+        return real_dumps(obj, *a, **k)
+
+    log = tmp_path / "_delta_log"
+    _delta_stream_commit(str(tmp_path), _batch_df(spark, [1, 2]), 0)
+    with monkeypatch.context() as m:
+        m.setattr(deltalog.json, "dumps", dies_at_first_add)
+        with pytest.raises(Crash):
+            _delta_stream_commit(str(tmp_path), _batch_df(spark, [3, 4]), 2)
+    assert not (log / f"{1:020d}.json").exists()
+    (tmp,) = [f for f in os.listdir(log) if f.endswith(".tmp")]
+    assert (log / tmp).read_text()  # written, not published
+    assert snapshot_files(str(tmp_path))["version"] == 0
+    assert DeltaCommitter(str(tmp_path)).committed_batch_id() == 0
+    assert _delta_stream_commit(
+        str(tmp_path), _batch_df(spark, [3, 4]), 2
+    ) == 1
+    assert _delta_stream_commit(
+        str(tmp_path), _batch_df(spark, [3, 4]), 2
+    ) is None
+    assert sorted(f for f in os.listdir(log) if f.endswith(".json")) == [
+        f"{v:020d}.json" for v in (0, 1)
+    ]
+    got = sorted(
+        r.o_orderkey
+        for r in read_delta_snapshot(spark, str(tmp_path)).collect()
+    )
+    assert got == [1, 2, 3, 4]
+    # put-if-absent: a second writer of version 0 fails, leaving it whole
+    v0 = (log / f"{0:020d}.json").read_bytes()
+    with pytest.raises(FileExistsError):
+        DeltaCommitter(str(tmp_path))._publish(0, [{"commitInfo": {}}])
+    assert (log / f"{0:020d}.json").read_bytes() == v0
+    assert [f for f in os.listdir(log) if f.endswith(".tmp")] == [tmp]
