@@ -20,32 +20,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.batch import load_table
-from ..sources.deltalog import (
-    DeltaCommitter,
-    cleanup_log,
-    delete_rows_by_position,
-    part_files,
-    read_delta_incremental,
-    read_delta_snapshot,
-    table_changes,
-    tombstone,
-    vacuum,
-    write_checkpoint,
-)
-from ..sources.iceberglog import (
-    STATUS_ADDED,
-    STATUS_DELETED,
-    IcebergCommitter,
-    IcebergFixtureWriter,
-    _metadata_path,
-    bucket_long_array,
-    bucket_str_array,
-    expire_snapshots,
-    iceberg_changelog,
-    read_iceberg_incremental,
-    read_iceberg_snapshot,
-)
-from ..sources.lakehouse import partition_values_from_path, with_row_position
 from .feeds import materialize_feed, memo_dir, scratch_dir
 from .streaming import _run_available_now, _run_to_table
 
@@ -446,6 +420,13 @@ def delta_log_replay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..sources.deltalog import (
+        DeltaCommitter,
+        read_delta_snapshot,
+        tombstone,
+        write_checkpoint,
+    )
+
     def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
             ["o_orderkey", "o_orderstatus", "o_orderpriority",
@@ -521,6 +502,13 @@ def iceberg_metadata_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     files reach spark.read.parquet. Snapshot pinning (time travel)
     and the rewrite semantics are pinned in tests/test_iceberglog.py."""
     import pandas as pd
+
+    from ..sources.iceberglog import (
+        IcebergFixtureWriter,
+        STATUS_ADDED,
+        STATUS_DELETED,
+        read_iceberg_snapshot,
+    )
 
     def build(d: str) -> None:
         pdf = pd.read_parquet(os.path.join(sf_dir, "orders.parquet"))[
@@ -623,6 +611,9 @@ def _delta_stream_commit(
     commit JSON (one ``add`` per part file) — the real Delta sink's
     division of labor, so a tens-of-GB batch on a 1000-executor
     cluster commits without driver materialization."""
+    from ..sources.deltalog import DeltaCommitter, tombstone
+    from ..sources.lakehouse import part_files
+
     committer = DeltaCommitter(
         table_dir, fields, partition_by, checkpoint_interval
     )
@@ -731,6 +722,8 @@ def streaming_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the log, not the directory, defines what the readback sees."""
     table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
 
+    from ..sources.deltalog import read_delta_snapshot
+
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
 
@@ -789,6 +782,8 @@ def streaming_delta_sink_partitioned(
     Readback recovers the partition column from directory names via
     basePath — data files do not store it — so the oracle hash proves
     the full partitioned-write contract end to end."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _partitioned_orders_table(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -818,6 +813,8 @@ def delta_partition_pruned_read(
     same aggregate with a WHERE clause, so the hash also proves the
     pruned set is exactly complete — one extra or missing file
     breaks it."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _partitioned_orders_table(spark, sf_dir)
     df = read_delta_snapshot(
         spark, table_dir, partition_filter={"o_orderstatus": "F"}
@@ -846,6 +843,13 @@ def delta_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: checkpoint is O(live files) metadata, cleanup is
     O(commits), vacuum is one directory walk against a hash set —
     all driver-side METADATA work; no data moves at any size."""
+    from ..sources.deltalog import (
+        cleanup_log,
+        read_delta_snapshot,
+        vacuum,
+        write_checkpoint,
+    )
+
     table_dir = _run_delta_sink_stream(spark, sf_dir, scratch_dir("delta_sink_"))
     write_checkpoint(table_dir)
     cleanup_log(table_dir)
@@ -892,6 +896,8 @@ def _iceberg_partition_col(df: DataFrame, sf: dict):
             def _bucket_long(s):
                 import pandas as pd
 
+                from ..sources.iceberglog import bucket_long_array
+
                 mask = s.isna().to_numpy()
                 vals = s.fillna(0).astype("int64").to_numpy()
                 out = pd.Series(
@@ -905,6 +911,8 @@ def _iceberg_partition_col(df: DataFrame, sf: dict):
             @pandas_udf("int")
             def _bucket_str(s):
                 import pandas as pd
+
+                from ..sources.iceberglog import bucket_str_array
 
                 mask = s.isna().to_numpy()
                 enc = [
@@ -944,6 +952,8 @@ def _iceberg_stream_commit(
     partition struct for the manifest entries — O(files) metadata, no
     per-partition-value jobs (the round-10 shape ran one Spark job
     per value: a job-count scale-killer at 1000-value columns)."""
+    from ..sources.lakehouse import part_files, partition_values_from_path
+
     if committer.committed_batch_id() >= batch_id:
         return
     data_dir = os.path.join(table_dir, "data")
@@ -1019,6 +1029,8 @@ def streaming_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/iceberglog.py) — so the oracle hash proves snapshot
     framing, manifest carry-forward, DELETED-entry semantics, and
     replay idempotence at once."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _run_iceberg_sink_stream(
         spark, sf_dir, scratch_dir("iceberg_sink_")
     )
@@ -1031,6 +1043,8 @@ def _run_iceberg_sink_stream(
 ) -> str:
     """Drive the orders feed through the foreachBatch Iceberg sink
     (availableNow) into ``table_dir``; returns the table dir."""
+    from ..sources.iceberglog import IcebergCommitter
+
     committer = IcebergCommitter(
         table_dir, _ICEBERG_SINK_FIELDS, partition_by
     )
@@ -1063,6 +1077,8 @@ def streaming_iceberg_sink_partitioned(
     declares the identity spec, and — unlike hive layout — the data
     files keep their partition columns, so readback is the pruned (or
     full) file list under the one table schema."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _partitioned_orders_iceberg(spark, sf_dir)
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1077,6 +1093,8 @@ def iceberg_partition_pruned_read(
     defining scan-planning property. The oracle recomputes the same
     aggregate with a WHERE clause; one extra or missing file breaks
     the hash."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _partitioned_orders_iceberg(spark, sf_dir)
     df = read_iceberg_snapshot(
         spark, table_dir, partition_filter={"o_orderstatus": "F"}
@@ -1105,6 +1123,11 @@ def iceberg_maintenance_roundtrip(
 
     Scale posture: reachability walks manifests (metadata-sized);
     data files are only ever unlinked, never read."""
+    from ..sources.iceberglog import (
+        expire_snapshots,
+        read_iceberg_snapshot,
+    )
+
     table_dir = _run_iceberg_sink_stream(
         spark, sf_dir, scratch_dir("iceberg_sink_")
     )
@@ -1151,6 +1174,8 @@ def streaming_delta_sink_multipart(
     order. Partition count here is |status|×|priority| = 15 — the
     shape that, at a 1000×1000-value table, only works because the
     commit is ONE fanout write and pruning happens in the log."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _multipart_orders_delta(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1161,6 +1186,7 @@ def _v2_checkpoint_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     the pre-checkpoint commits retention-cleaned — the replay must
     start from the manifest, splice both sidecars, and still apply a
     post-checkpoint append."""
+    from ..sources.deltalog import cleanup_log, write_checkpoint
 
     def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
@@ -1188,6 +1214,8 @@ def delta_v2_checkpoint_read(
     snapshot after log retention removed every JSON commit. The
     oracle hash proves no row is lost or doubled across the
     manifest/sidecar split."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _v2_checkpoint_orders_delta(spark, sf_dir)
     return _orders_sink_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1212,6 +1240,8 @@ def delta_compound_pruned_read(
     100 TB a compound partition predicate must multiply its
     selectivities in METADATA, not scan one level and filter the
     other. The oracle recomputes the cell with a WHERE clause."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _multipart_orders_delta(spark, sf_dir)
     df = read_delta_snapshot(
         spark, table_dir,
@@ -1236,6 +1266,8 @@ def streaming_iceberg_sink_transforms(
     with derived ``__part_*`` columns. The full-table readback hash
     proves the fanout, the transformed partition structs, and the
     manifest carry-forward lose nothing."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     return _orders_sink_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1265,6 +1297,8 @@ def iceberg_transform_pruned_read(
     recomputes with the exact WHERE, so a pruning false-NEGATIVE
     (lost file) breaks the hash, and the residual step catches the
     false positives pruning legitimately leaves."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     df = read_iceberg_snapshot(
         spark, table_dir,
@@ -1303,6 +1337,8 @@ def iceberg_bucket_pruned_point_read(
     bucketed tables exist for. A hash mismatch means either the
     writer bucketed the row into the wrong cell or the reader pruned
     the right cell away."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _transform_orders_iceberg(spark, sf_dir)
     return read_iceberg_snapshot(
         spark, table_dir, partition_filter={"o_orderkey": 1}
@@ -1360,6 +1396,8 @@ def _clustered_orders_delta(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _clustered_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
+    from ..sources.iceberglog import IcebergCommitter
+
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
         _iceberg_stream_commit(
@@ -1383,6 +1421,8 @@ def delta_stats_skipping_read(
     re-applies as the residual (stats are a superset guarantee), and
     the oracle recomputes with the same WHERE — a lost file breaks
     the hash."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _clustered_orders_delta(spark, sf_dir)
     return _skipping_agg(
         read_delta_snapshot(
@@ -1402,6 +1442,8 @@ def iceberg_stats_skipping_read(
     the spec) and the scan transforms the range predicate into a
     bounds-overlap test at the MANIFEST level. Same clustered layout,
     same residual re-application, same oracle."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _clustered_orders_iceberg(spark, sf_dir)
     return _skipping_agg(
         read_iceberg_snapshot(
@@ -1480,6 +1522,8 @@ def _evolved_orders_delta(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _evolved_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
+    from ..sources.iceberglog import IcebergCommitter
+
     def build(d: str) -> None:
         committer = IcebergCommitter(d, list(_EVOLVE_FIELDS_V1))
         v1, v2 = _evolve_batches(spark, sf_dir)
@@ -1501,6 +1545,8 @@ def delta_schema_evolution_read(
     for the new column under the evolved schema. The oracle splits
     the same rows by which schema era wrote them, so the hash proves
     the evolved read is value-exact on both eras at once."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _evolved_orders_delta(spark, sf_dir)
     return _evolved_agg(read_delta_snapshot(spark, table_dir))
 
@@ -1515,6 +1561,8 @@ def iceberg_schema_evolution_read(
     keeps bounds and partition source-ids stable across evolution).
     Readers resolve current-schema-id and fill pre-evolution files
     with null. Same oracle as the Delta twin."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _evolved_orders_iceberg(spark, sf_dir)
     return _evolved_agg(read_iceberg_snapshot(spark, table_dir))
 
@@ -1556,6 +1604,8 @@ def delta_incremental_append_read(
     two-era evolution table, commits after version 0 are exactly the
     odd orderkeys, which is what the oracle recomputes. Removes in
     the range gate loudly (append-scan, not CDF)."""
+    from ..sources.deltalog import read_delta_incremental
+
     table_dir = _evolved_orders_delta(spark, sf_dir)
     return _incremental_agg(
         read_delta_incremental(spark, table_dir, from_version=0)
@@ -1572,6 +1622,11 @@ def iceberg_incremental_append_read(
     snapshots in the range gate loudly. Same two-era fixture and
     oracle as the Delta twin."""
     import json as _json
+
+    from ..sources.iceberglog import (
+        _metadata_path,
+        read_iceberg_incremental,
+    )
 
     table_dir = _evolved_orders_iceberg(spark, sf_dir)
     meta = _json.loads(open(_metadata_path(table_dir)).read())
@@ -1602,6 +1657,9 @@ def _iceberg_position_delete(
     POSITION: a distributed write lands their (file_path, pos) pairs,
     sorted per spec, as a format-v2 delete parquet, and one delete
     commit wraps its footer. Data parquet is untouched."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+    from ..sources.lakehouse import with_row_position
+
     dels_dir = os.path.join(d, "data", "deletes-00001")
     (
         with_row_position(read_iceberg_snapshot(spark, d).filter(predicate))
@@ -1625,6 +1683,7 @@ def _mor_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     untouched. The delete file itself is a distributed Spark write:
     (file_path, row_index) pairs selected via the hidden _metadata
     columns, sorted (file_path, pos) per spec."""
+    from ..sources.iceberglog import IcebergCommitter
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
@@ -1664,6 +1723,7 @@ def _eq_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     o_orderstatus = 'F'. Snapshot 2 (seq 2): the % 10 == 0 rows —
     appended AFTER the delete, so their F rows must SURVIVE (the
     spec's strictly-lower-sequence scoping, reproducible in SQL)."""
+    from ..sources.iceberglog import IcebergCommitter
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
@@ -1694,6 +1754,8 @@ def iceberg_equality_delete_read(
     data files with a strictly LOWER sequence number. The fixture
     appends more 'F' rows AFTER the delete; the oracle hash breaks
     if scoping resurrects a deleted row or kills a later one."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _eq_orders_iceberg(spark, sf_dir)
     return (
         read_iceberg_snapshot(spark, table_dir)
@@ -1719,6 +1781,8 @@ def iceberg_position_delete_read(
     side streams through. The oracle recomputes the surviving rows
     with the equivalent predicate; one ghost or lost row breaks the
     hash."""
+    from ..sources.iceberglog import read_iceberg_snapshot
+
     table_dir = _mor_orders_iceberg(spark, sf_dir)
     return (
         read_iceberg_snapshot(spark, table_dir)
@@ -1753,6 +1817,9 @@ def _dv_delete(
     — O(deleted rows), the DV payloads, which are log-resident
     metadata by definition — grouped per data file, and committed as
     one DELETE. No data parquet is rewritten."""
+    from ..sources.deltalog import delete_rows_by_position, read_delta_snapshot
+    from ..sources.lakehouse import with_row_position
+
     by_rel: dict = {}
     for r in (
         with_row_position(read_delta_snapshot(spark, d).filter(predicate))
@@ -1768,6 +1835,10 @@ def _dv_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     deleted via INLINE DELETION VECTORS (z85 + RoaringBitmapArray) —
     remove + re-add of the same path in one commit, no data parquet
     rewritten."""
+    from ..sources.deltalog import (
+        delete_rows_by_position,
+        read_delta_snapshot,
+    )
 
     def build(d: str) -> None:
         _delta_stream_commit(
@@ -1795,6 +1866,8 @@ def delta_deletion_vector_read(
     the decoded positions against the hidden parquet row index.
     Iceberg's position-delete twin is iceberg_position_delete_read —
     same semantics, the two formats' different encodings."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _dv_orders_delta(spark, sf_dir)
     return (
         read_delta_snapshot(spark, table_dir)
@@ -1826,6 +1899,10 @@ def _dv_file_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     ``deletion_vector_<uuid>.bin`` with version byte, BE size and
     CRC-32; ``inline_threshold=0`` forces the file path even at small
     SF so the shape under test is scale-invariant)."""
+    from ..sources.deltalog import (
+        delete_rows_by_position,
+        read_delta_snapshot,
+    )
 
     def build(d: str) -> None:
         _delta_stream_commit(
@@ -1850,6 +1927,8 @@ def delta_deletion_vector_file_read(
     ``deletion_vector_<uuid>.bin``, validates size + checksum, and
     anti-joins positions against the hidden parquet row index exactly
     like the inline path."""
+    from ..sources.deltalog import read_delta_snapshot
+
     table_dir = _dv_file_orders_delta(spark, sf_dir)
     return (
         read_delta_snapshot(spark, table_dir)
@@ -1890,6 +1969,10 @@ def _cdf_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     DV-delete of every o_orderkey % 3 == 0 row (touches both files).
     The (0, latest] change feed is then commit 1's inserts plus
     commit 2's deletes — SQL-reproducible."""
+    from ..sources.deltalog import (
+        delete_rows_by_position,
+        read_delta_snapshot,
+    )
 
     def build(d: str) -> None:
         base = _clustered_orders_batch(spark, sf_dir)
@@ -1915,6 +1998,8 @@ def delta_change_feed_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental consumers (CDC replication, TTL audits, training-set
     diffs) read changes without ever rescanning the table; rewrites
     and explicit cdc actions gate loudly."""
+    from ..sources.deltalog import table_changes
+
     table_dir = _cdf_orders_delta(spark, sf_dir)
     return (
         table_changes(spark, table_dir, from_version=0)
@@ -1953,6 +2038,10 @@ ORDER BY _change_type, _snapshot_id
 def _cdf_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Snapshot 1000: even orderkeys; 1001: odd orderkeys; 1002:
     position-delete of every o_orderkey % 3 == 0 row."""
+    from ..sources.iceberglog import (
+        IcebergCommitter,
+        read_iceberg_snapshot,
+    )
 
     def build(d: str) -> None:
         committer = IcebergCommitter(d, _ICEBERG_SINK_FIELDS)
@@ -1980,6 +2069,11 @@ def iceberg_changelog_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table without rescans, across BOTH lakehouse formats with the
     same semantics. Rewrite snapshots gate loudly."""
     import json as _json
+
+    from ..sources.iceberglog import (
+        _metadata_path,
+        iceberg_changelog,
+    )
 
     table_dir = _cdf_orders_iceberg(spark, sf_dir)
     meta = _json.loads(open(_metadata_path(table_dir)).read())
@@ -2073,6 +2167,7 @@ def streaming_delta_source_roundtrip(
     the version-offset planning, the incremental file resolution and
     the streaming engine together. The write side (streaming INTO
     delta) is streaming_delta_sink — this closes the loop."""
+    from ..sources.deltalog import DeltaCommitter
     from ..sources.deltastream_ds import register_deltastream
 
     table_dir = scratch_dir("delta_source_")
@@ -2130,6 +2225,7 @@ def streaming_iceberg_source_roundtrip(
     added_snapshot_id, one task per added file). The complete-mode
     aggregate must equal the batch oracle — both lakehouse formats
     now stream in AND out of the engine with the same semantics."""
+    from ..sources.iceberglog import IcebergCommitter
     from ..sources.icebergstream_ds import register_icebergstream
 
     table_dir = scratch_dir("iceberg_source_")

@@ -375,7 +375,7 @@ def _delta_refresh(committer, batch_df: DataFrame, batch_id: int) -> None:
     writes the commit JSON. A foreachBatch replay is a no-op via the
     txn ledger, checked before the write so it never rewrites files a
     commit already names."""
-    from ..sources.deltalog import part_files
+    from ..sources.lakehouse import part_files
 
     if committer.committed_batch_id() >= batch_id:
         return

@@ -45,7 +45,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -521,19 +520,6 @@ def tombstone(path: str, data_change: bool = True) -> dict:
     return {"path": path, "deletionTimestamp": 0, "dataChange": data_change}
 
 
-def part_files(table_dir: str, rel_dir: str) -> list:
-    """Parquet files under ``rel_dir``, recursive (hive partition
-    layout nests col=value directories), relative to the table."""
-    out = []
-    for root, _, fs in os.walk(os.path.join(table_dir, rel_dir)):
-        out += [
-            os.path.relpath(os.path.join(root, f), table_dir)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    return sorted(out)
-
-
 class DeltaCommitter:
     """Stateless-from-disk committer, the write path mirroring
     ``snapshot_files`` and the Delta twin of
@@ -551,7 +537,9 @@ class DeltaCommitter:
       ``schema_fields`` differ from the table's (add-column evolution
       is exactly a new metaData action; older files read the new
       column as null);
-    * the write-side checkpoint every ``checkpoint_interval`` commits;
+    * the write-side checkpoint every ``checkpoint_interval`` commits
+      (None: never — a DELETE leaves checkpointing to the sink that
+      owns the table's interval);
     * publishing the commit file (``_publish``).
 
     A table is fresh only when its log holds no commit and no
@@ -563,7 +551,7 @@ class DeltaCommitter:
 
     def __init__(
         self, table_dir: str, schema_fields=None, partition_by=(),
-        checkpoint_interval: int = 10,
+        checkpoint_interval: int | None = 10,
     ):
         # schema_fields: [(name, delta_type)] covering ALL columns (the
         # spec keeps partition columns in schemaString too); None when
@@ -572,7 +560,10 @@ class DeltaCommitter:
         self.log_dir = os.path.join(table_dir, "_delta_log")
         os.makedirs(self.log_dir, exist_ok=True)
         self.partition_by = tuple(partition_by)
-        self.checkpoint_interval = max(checkpoint_interval, 1)
+        self.checkpoint_interval = (
+            None if checkpoint_interval is None
+            else max(checkpoint_interval, 1)
+        )
         self.schema_string = None if schema_fields is None else json.dumps(
             {
                 "type": "struct",
@@ -657,6 +648,7 @@ class DeltaCommitter:
     def commit(
         self, batch_id: int | None, added, removed=(),
         overwrite: bool = False, protocol: dict | None = None,
+        operation: str | None = None,
     ) -> int | None:
         """One transaction: ``removed`` (``tombstone`` bodies), then
         ``added`` (``add_entries`` bodies). Returns the new version, or
@@ -665,7 +657,8 @@ class DeltaCommitter:
         DELETE). ``overwrite`` also removes every file live in the
         snapshot the version is numbered from — the full-refresh shape
         (superseded files stay on disk as decoys until vacuum).
-        ``protocol`` upgrades the table's protocol in this commit."""
+        ``protocol`` upgrades the table's protocol in this commit;
+        ``operation`` closes it with a commitInfo naming the operation."""
         snap = self._snapshot()
         if batch_id is not None and snap is not None:
             if batch_id <= snap["txns"].get(self.app_id, -1):
@@ -696,11 +689,14 @@ class DeltaCommitter:
             actions += [{"remove": tombstone(p)} for p in snap["files"]]
         actions += [{"remove": r} for r in removed]
         actions += [{"add": a} for a in added]
+        if operation:
+            actions.append({"commitInfo": {"operation": operation}})
         version = 0 if snap is None else snap["version"] + 1
         self._publish(version, actions)
         # write-side checkpoint parity (real Delta defaults to every 10
         # commits): readers then replay O(commits-since-checkpoint)
-        if (version + 1) % self.checkpoint_interval == 0:
+        interval = self.checkpoint_interval
+        if interval is not None and (version + 1) % interval == 0:
             write_checkpoint(self.table_dir)
         return version
 
@@ -710,10 +706,15 @@ class DeltaCommitter:
         fails if that version exists — the put-if-absent a Delta log
         store must provide — so a commit lands whole or not at all and
         never over another. A crash before the link leaves only an
-        invisible temp file, and the batch's replay commits afresh."""
-        fd, tmp = tempfile.mkstemp(
-            prefix=".", suffix=".json.tmp", dir=self.log_dir
+        invisible temp file, and the batch's replay commits afresh.
+        The temp file is created with the umask's default mode, like
+        every other log file, since the link shares its inode."""
+        import uuid
+
+        tmp = os.path.join(
+            self.log_dir, f".{version:020d}.{uuid.uuid4().hex}.json.tmp"
         )
+        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o666)
         with os.fdopen(fd, "w") as fh:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
@@ -1188,12 +1189,13 @@ def delete_rows_by_position(
         old["dataChange"] = True
         removed.append(tombstone(rel))
         added.append(old)
-    return DeltaCommitter(table_dir).commit(
+    return DeltaCommitter(table_dir, checkpoint_interval=None).commit(
         None, added, removed,
         protocol=(
             None if _protocol_supports_dv(snap["protocol"])
             else dict(DV_PROTOCOL)
         ),
+        operation="DELETE",
     )
 
 

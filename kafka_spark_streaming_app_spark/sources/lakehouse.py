@@ -18,11 +18,14 @@ the rest of the protocols: id-mode column mapping, date transforms,
 cdc actions, rewrite change feeds and time travel past retention.
 
 Shared here: the parquet footer-stats reader both committers attach
-file-skipping stats with, and the hidden (file, row position) pair
-that every merge-on-read join and delete builder keys on.
+file-skipping stats with, the hidden (file, row position) pair that
+every merge-on-read join and delete builder keys on, and the part-file
+listing and hive partition-path parser both stream sinks commit from.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -189,3 +192,16 @@ def partition_values_from_path(rel: str, partition_by) -> dict:
                     None if v == "__HIVE_DEFAULT_PARTITION__" else v
                 )
     return vals
+
+
+def part_files(table_dir: str, rel_dir: str) -> list:
+    """Parquet files under ``rel_dir``, recursive (hive partition
+    layout nests col=value directories), relative to the table."""
+    out = []
+    for root, _, fs in os.walk(os.path.join(table_dir, rel_dir)):
+        out += [
+            os.path.relpath(os.path.join(root, f), table_dir)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+    return sorted(out)

@@ -1230,3 +1230,39 @@ def test_crash_before_publish_replays_exactly_once(
         DeltaCommitter(str(tmp_path))._publish(0, [{"commitInfo": {}}])
     assert (log / f"{0:020d}.json").read_bytes() == v0
     assert [f for f in os.listdir(log) if f.endswith(".tmp")] == [tmp]
+
+
+def test_delete_writes_no_checkpoint_and_names_its_operation(
+    tmp_path, spark
+):
+    """A DELETE that lands on version 9 leaves checkpointing to the
+    sink that owns the table's interval: no write-side checkpoint, and
+    the commit closes with commitInfo {operation: DELETE}."""
+    from kafka_spark_streaming_app_spark.sources.deltalog import (
+        delete_rows_by_position,
+    )
+
+    _commit(spark, tmp_path, [("a.parquet", _rows(0, 5, "a"))])
+    c = DeltaCommitter(str(tmp_path))
+    for v in range(1, 9):
+        assert c.commit(None, []) == v
+    assert delete_rows_by_position(str(tmp_path), {"a.parquet": [0]}) == 9
+    log = tmp_path / "_delta_log"
+    assert not (log / "_last_checkpoint").exists()
+    assert not [f for f in os.listdir(log) if ".checkpoint." in f]
+    lines = (log / f"{9:020d}.json").read_text().splitlines()
+    assert json.loads(lines[-1]) == {"commitInfo": {"operation": "DELETE"}}
+    assert read_delta_snapshot(spark, str(tmp_path)).count() == 4
+
+
+def test_commit_files_take_the_umask_default_mode(tmp_path):
+    """Commit files are readable by whoever may read the table: the
+    temp file a commit is published from, and so the linked commit
+    file, gets the umask's default mode, not an owner-only one."""
+    umask = os.umask(0o022)
+    try:
+        DeltaCommitter(str(tmp_path), _FIELDS).commit(None, [])
+        mode = os.stat(tmp_path / "_delta_log" / f"{0:020d}.json").st_mode
+    finally:
+        os.umask(umask)
+    assert mode & 0o777 == 0o644
