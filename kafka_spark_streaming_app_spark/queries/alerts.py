@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.alerts import detect_fraud
+from ..operators.windowed import approx_distinct
 from ..registry import query
 from ..sources.batch import load_table
 
@@ -57,9 +58,10 @@ def fraud_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sketch values are engine-specific (cross-engine HLL never matches),
 # but the sketch's ERROR BOUND is checkable: the query emits the exact
 # distinct count plus a boolean asserting |HLL − exact| within 4 sigma
-# of the configured rsd (0.05 default → 20%) with a small-cardinality
-# floor. The oracle emits the exact count and literal TRUE — if the
-# sketch ever drifts outside its contract, the driver hash flips red.
+# of a 5% rsd (20%; the sketch's own rsd is ≈1.6%) with a
+# small-cardinality floor. The oracle emits the exact count and literal
+# TRUE — if the sketch ever drifts outside its contract, the driver
+# hash flips red.
 _APPROX_TOL_ORACLE = """
 WITH expanded AS (
     SELECT
@@ -82,17 +84,17 @@ GROUP BY window_start, window_end, event_type
 
 @query("windowed_agg_approx", _APPROX_TOL_ORACLE)
 def windowed_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION flagship twin: approx_count_distinct (HLL++) with a
-    TOLERANCE oracle — the HLL value itself is engine-specific, so the
-    query computes both sketch and exact distinct in one aggregation
-    and hash-checks that the sketch honors its rsd error contract
-    (SURVEY.md §2.5 A4)."""
+    """PRODUCTION flagship twin: the production aggregate's
+    ``approx_distinct`` (DataSketches HLL) with a TOLERANCE oracle —
+    the HLL value itself is engine-specific, so the query computes both
+    sketch and exact distinct in one aggregation and hash-checks that
+    the sketch honors its rsd error contract (SURVEY.md §2.5 A4)."""
     events = load_table(spark, sf_dir, "events")
     agg = events.groupBy(
         F.window(F.col("ts"), "1 minute", "30 seconds").alias("window"),
         "event_type",
     ).agg(
-        F.approx_count_distinct("user_id").alias("hll_u"),
+        approx_distinct("user_id").alias("hll_u"),
         F.count_distinct(F.col("user_id")).alias("unique_customers"),
     )
     tol = F.greatest(F.lit(4.0), F.lit(4 * 0.05) * F.col("unique_customers"))

@@ -191,7 +191,8 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship sliding-window aggregation executed BY THE STREAMING
     ENGINE (complete output mode) over the JSON wire replay of
     ``events``. Exact-distinct is not streamable, so the streaming
-    variant omits unique_customers (the production twin uses HLL++).
+    variant omits unique_customers (the production twin uses a
+    DataSketches HLL sketch).
 
     SCALE BOUNDARY — parity demonstrator only: complete mode rewrites
     the full result every trigger and holds every window ever seen in

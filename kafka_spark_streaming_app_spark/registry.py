@@ -15,9 +15,11 @@ Oracle-parity rules used throughout (derived in SURVEY.md §5):
   partition/merge order;
 - derived ratios are computed from the stabilized operands
   (identical doubles → identical quotient);
-- ``approx_count_distinct`` never appears in an oracle-hashed query
-  (cross-engine HLL sketches differ) — exact ``count_distinct`` twin
-  in the checked query, approximate kept in the production operator;
+- no HLL estimate (``approx_count_distinct``, or the production
+  operator's DataSketches ``approx_distinct``) is hashed as a value
+  (cross-engine HLL sketches differ) — checked queries hash the exact
+  ``count_distinct`` twin, or the exact count plus a within-tolerance
+  boolean (``windowed_agg_approx``);
 - no ``current_timestamp``-style nondeterminism in checked output.
 """
 

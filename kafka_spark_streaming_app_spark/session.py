@@ -27,8 +27,10 @@ settings a 100 TB deployment wants from day one:
   directory. On a cluster the package usually arrives as ``--py-files``,
   so cluster masters keep the stock daemon. Not covered either: the
   driver, sessions built elsewhere (``apply_runtime_confs`` cannot set a
-  core conf), and Spark's driver-side planner runners (Python data source
-  planning and writes), which always start the stock daemon.
+  core conf), and Spark's driver-side planner runners, which always
+  start the stock daemon. Those now serve only Python data sources'
+  batch reads and writes and stream-source planning: the minikafka
+  stream sink produces through ``foreachBatch`` and starts none.
 - ``spark.sql.streaming.checkpointFileManagerClass`` =
   ``FileSystemBasedCheckpointFileManager``, for local masters only. Every
   trigger renames small files into place (offsets, commits, state-store

@@ -113,15 +113,18 @@ def write_minikafka_stream(
     protocol (sources/minikafka_ds.py): identical
     ``to_json(struct(*))`` serialization, executor-side Produce v0
     transport — the reference alert sink executable with no broker
-    installation. Register the source first
-    (``register_minikafka(spark)``)."""
+    installation. Each micro-batch is produced through ``foreachBatch``
+    (``minikafka_ds.batch_producer``), so a trigger forks no driver-side
+    Python runner; a batch the commit log records is never produced
+    again on restart, one it does not may be (at-least-once)."""
     from ..operators.jsonpath import serialize_json
+    from ..sources.minikafka_ds import batch_producer
 
     return (
         serialize_json(df)
-        .writeStream.format("minikafka")
-        .option("bootstrap", servers)
-        .option("topic", topic)
+        .writeStream.foreachBatch(
+            batch_producer({"bootstrap": servers, "topic": topic})
+        )
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .trigger(processingTime=f"{trigger_seconds} seconds")

@@ -178,12 +178,16 @@ def test_windowed_agg_exact_distinct_shape(spark, sf_smoke):
 
 
 def test_windowed_agg_production_single_shuffle(spark, sf_smoke):
-    """Production operator: HLL++ sketch keeps the agg partial+final
-    with exactly ONE shuffle — the property that matters at 100 TB
-    (state and network ∝ groups, not distinct users). Asserted on the
-    operator directly: the registry's `windowed_agg_approx` QUERY now
-    also computes the exact distinct for its tolerance oracle, which
+    """Production operator: the DataSketches distinct count keeps the
+    agg partial+final with exactly ONE shuffle — the property that
+    matters at 100 TB (state and network ∝ groups, not distinct users)
+    — and no HLL++ (``HyperLogLogPlusPlus``, which kept the aggregate
+    out of whole-stage codegen) is left in the plan. Asserted on the
+    operator directly: the registry's `windowed_agg_approx` QUERY also
+    computes the exact distinct for its tolerance oracle, which
     legitimately adds the exact-distinct Expand/second Exchange."""
+    import re
+
     from kafka_spark_streaming_app_spark.operators.windowed import (
         windowed_aggregation,
     )
@@ -197,11 +201,20 @@ def test_windowed_agg_production_single_shuffle(spark, sf_smoke):
         exact_distinct=False,
         stabilize_sums=False,
     )
-    plan = plan_str(prod)
-    assert plan.count("HashAggregate") >= 2, "missing map-side partial agg"
-    assert plan.count("- Exchange") == 1, (
-        "approx windowed agg must shuffle exactly once"
+    # top-down operator names, aggregates tagged final/partial by their
+    # functions (a partial aggregate computes partial_* buffers)
+    shape = []
+    for line in plan_str(prod, "simple").splitlines():
+        node = re.match(r"[\s+:-]*(\w+)", line)
+        if node and node.group(1).endswith("Aggregate"):
+            shape.append("partial" if "functions=[partial_" in line else "final")
+        elif node and node.group(1) == "Exchange":
+            shape.append("Exchange")
+    assert shape == ["final", "Exchange", "partial"], (
+        f"approx windowed agg must be partial -> one Exchange -> final: {shape}"
     )
+    executed = prod._jdf.queryExecution().executedPlan().toJSON()
+    assert "HyperLogLogPlusPlus" not in executed
     # and the tolerance query still carries its verification column
     tol = plan_str(registry.QUERIES["windowed_agg_approx"](spark, sf_smoke))
     assert "hll_within_tolerance" in tol

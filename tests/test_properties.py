@@ -28,11 +28,18 @@ def test_content_chunking_edit_locality(spark, words, data):
     a document changes only the chunks around the edit — the two
     documents' chunk-hash multisets differ in a bounded number of
     entries (a fixed-width splitter would shift EVERY downstream
-    chunk). Boundaries depend on a 3-gram window, so one insertion
-    can perturb at most the chunks overlapping a 3-token neighborhood
-    — allow ≤ 3 changed chunks per side."""
-    from collections import Counter
+    chunk).
 
+    The bound: a boundary opens before token i iff the 3-gram starting
+    at i hashes to 0, so each flag is a function of 3 tokens. Inserting
+    X before original token p leaves every flag whose 3-gram lies wholly
+    before p, or wholly at or after p (shifted by one), as it was. The
+    original loses the 2 flags at p-2 and p-1, whose 3-grams straddle p;
+    the edited side has 3 new flags at p-2, p-1 and p, whose 3-grams
+    contain X. Between the nearest unchanged boundaries on either side,
+    2 flags cut the original into at most 3 chunks and 3 flags cut the
+    edited span into at most 4; every chunk outside that span is
+    shared. So at most 3 original and 4 edited chunks change."""
     from kafka_spark_streaming_app_spark.operators.text import content_chunks
 
     pos = data.draw(st.integers(min_value=1, max_value=len(words) - 1))
@@ -43,17 +50,38 @@ def test_content_chunking_edit_locality(spark, words, data):
         "doc_id long, text string",
     )
     rows = content_chunks(df).collect()
-    c1 = Counter(r["chunk_hash"] for r in rows if r["doc_id"] == 1)
-    c2 = Counter(r["chunk_hash"] for r in rows if r["doc_id"] == 2)
-    changed_1 = sum((c1 - c2).values())
-    changed_2 = sum((c2 - c1).values())
-    assert changed_1 <= 3 and changed_2 <= 3, (
-        f"edit at {pos} perturbed {changed_1}/{changed_2} chunks: "
-        f"{c1 - c2} vs {c2 - c1}"
+    changed_1, changed_2 = _changed_chunks(rows)
+    assert changed_1 <= 3 and changed_2 <= 4, (
+        f"edit at {pos} perturbed {changed_1}/{changed_2} chunks"
     )
     # and the chunks partition the document: word counts must add up
     assert sum(r["n_words"] for r in rows if r["doc_id"] == 1) == len(words)
     assert sum(r["n_words"] for r in rows if r["doc_id"] == 2) == len(edited)
+
+
+def _changed_chunks(rows) -> tuple[int, int]:
+    """Chunks of doc 1 (original) missing from doc 2 (one word inserted),
+    and of doc 2 missing from doc 1, as chunk-hash multiset differences."""
+    from collections import Counter
+
+    c1 = Counter(r["chunk_hash"] for r in rows if r["doc_id"] == 1)
+    c2 = Counter(r["chunk_hash"] for r in rows if r["doc_id"] == 2)
+    return sum((c1 - c2).values()), sum((c2 - c1).values())
+
+
+def test_content_chunking_insertion_can_change_four_edited_chunks(spark):
+    """The bound on the edited side is 4, not 3: this insertion's three
+    new 3-grams all open boundaries, splitting one original chunk into
+    four."""
+    from kafka_spark_streaming_app_spark.operators.text import content_chunks
+
+    words = "scan scan scan data sort row hash scan".split()
+    edited = words[:5] + ["table"] + words[5:]
+    df = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(edited))],
+        "doc_id long, text string",
+    )
+    assert _changed_chunks(content_chunks(df).collect()) == (1, 4)
 
 
 @settings(

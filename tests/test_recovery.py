@@ -334,3 +334,51 @@ def test_checkpoint_from_file_context_manager_resumes(spark):
     # o3 (first run) and o4 (second run) meet in the restored state
     assert counts[("2024-01-01T10:01:00", "a")] == 2
     assert counts[("2024-01-01T10:01:30", "a")] == 2
+
+
+def test_hll_plus_plus_checkpoint_fails_loudly_on_restart(spark, monkeypatch):
+    """The windowed aggregate's distinct count moved from HLL++
+    (``approx_count_distinct``) to the DataSketches sketch, which changes
+    the aggregate's state schema. A checkpoint written with the old
+    expression must fail the restarted query at its first batch (Spark's
+    state-schema check), not resume on unreadable state: app.py users
+    discard ``checkpoints/aggregations`` when upgrading."""
+    from pyspark.errors import StreamingQueryException
+
+    from kafka_spark_streaming_app_spark.operators import windowed
+
+    src, out, ckpt = (tempfile.mkdtemp(prefix=f"hllck_{p}_") for p in ("src", "out", "ckpt"))
+    t0 = 1_700_000_000
+
+    def start_query():
+        raw = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
+        parsed = parse_and_clean(raw, ORDER_SCHEMA, watermark="30 seconds")
+        agg = windowed.windowed_aggregation(
+            parsed, ts_col="event_timestamp", keys=("category",), amount_col="total_amount"
+        )
+        return (agg.writeStream.format("parquet").option("path", out)
+                .option("checkpointLocation", ckpt).outputMode("append").start())
+
+    _write_events(src, "f1.json", [("o1", "a", "u1", 10.0, "10:00:10")], t0)
+    with monkeypatch.context() as m:
+        m.setattr(windowed, "approx_distinct", F.approx_count_distinct)
+        q = start_query()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    # the data batch and the no-data batch its watermark advance runs
+    last = q.lastProgress["batchId"]
+    assert os.path.exists(os.path.join(ckpt, "commits", str(last)))
+
+    _write_events(src, "f2.json", [("o2", "a", "u2", 5.0, "10:05:00")], t0 + 1)
+    q = start_query()
+    try:
+        with pytest.raises(StreamingQueryException, match="STATE_STORE_.*SCHEMA"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    # the restarted query committed nothing: f2's watermark would close
+    # both of o1's windows, yet none was emitted from the old state
+    assert not os.path.exists(os.path.join(ckpt, "commits", str(last + 1)))
+    assert spark.read.parquet(out).count() == 0
