@@ -15,16 +15,23 @@ Scale notes (100 TB posture):
   shuffle width.
 - ``approx_distinct`` (Spark's built-in DataSketches HLL,
   ``lgConfigK=12``, about 1.6% relative standard error) keeps per-group
-  state O(kB) instead of O(distinct users); at 100 TB an exact distinct
-  per sliding window would dominate state-store size. It replaces the
-  reference's ``approx_count_distinct`` (HLL++, 5%), whose 52-word
-  imperative buffer kept the aggregate out of whole-stage codegen, so
-  Spark generated its projections again in every task of every trigger;
-  the sketch plans as an ``ObjectHashAggregate`` with one object slot.
-  The state schema differs, so a streaming checkpoint written with
-  HLL++ fails Spark's state-schema check on restart. The exact twin
-  exists only for the DuckDB oracle (cross-engine HLL sketches never
-  match, SURVEY.md §2.5 A4).
+  state bounded instead of O(distinct users); at 100 TB an exact
+  distinct per sliding window would dominate state-store size. It
+  replaces the reference's ``approx_count_distinct`` (HLL++, 5%), whose
+  imperative buffer made Spark generate the aggregate's projections
+  again in every task of every trigger; the sketch plans as an
+  ``ObjectHashAggregate`` with one object slot (still not
+  whole-stage-codegen'd). What the swap removes is that fixed per-task
+  cost, so it pays off on small micro-batches with few distinct users
+  per group and few keys per task, such as the reference's. It does not
+  pay off on large ones: a group's sketch is smaller than HLL++'s
+  416-byte buffer only below about 40 distinct users, and from about
+  400 it is dense at 4,136 bytes; and ``ObjectHashAggregate`` falls back
+  to sort-based aggregation above 128 keys per task. SCALE.md ("Streaming state") has the measured state,
+  shuffle and addBatch cost at both sizes. The state schema differs, so
+  a streaming checkpoint written with HLL++ fails Spark's state-schema
+  check on restart. The exact twin exists only for the DuckDB oracle
+  (cross-engine HLL sketches never match, SURVEY.md §2.5 A4).
 - ``stabilize_sums=True`` routes double sums through DECIMAL(25,4) so
   the result is bit-identical regardless of partition/merge order (and
   across engines) — used for oracle-checked queries. Production keeps

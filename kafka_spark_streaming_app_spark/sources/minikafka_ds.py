@@ -313,6 +313,13 @@ def _produce_rows(options: dict, iterator) -> _ProduceCommit:
     return _ProduceCommit(n)
 
 
+def _check_value_column(names: list) -> None:
+    if "value" not in names:
+        raise ValueError(
+            f"minikafka sink expects a 'value' column, got {names}"
+        )
+
+
 class _BatchWriter(DataSourceWriter):
     def __init__(self, options: dict):
         self.options = dict(options)
@@ -336,6 +343,7 @@ def batch_producer(options: dict) -> Callable:
     produce = partial(_produce_rows, options)
 
     def write_batch(batch_df, batch_id: int) -> None:
+        _check_value_column(batch_df.columns)
         batch_df.foreachPartition(produce)
 
     return write_batch
@@ -358,20 +366,13 @@ class MiniKafkaDataSource(DataSource):
     def streamReader(self, schema) -> DataSourceStreamReader:
         return _StreamReader(self.options)
 
-    def _check_write_schema(self, schema):
-        names = [f.name for f in schema.fields]
-        if "value" not in names:
-            raise ValueError(
-                f"minikafka sink expects a 'value' column, got {names}"
-            )
-
     def writer(self, schema, overwrite: bool) -> DataSourceWriter:
         if overwrite:
             raise ValueError(
                 "minikafka sink is append-only (a Kafka log cannot "
                 "be overwritten)"
             )
-        self._check_write_schema(schema)
+        _check_value_column(schema.fieldNames())
         return _BatchWriter(self.options)
 
 

@@ -533,7 +533,8 @@ def test_stream_sink_fails_query_on_null_value(spark, broker, tmp_path):
     """``to_json(struct(*))`` is never NULL, so a NULL value reaches the
     stream sink only through its batch function on a raw ``value``
     column: the query fails with the sink's error, and nothing is
-    produced."""
+    produced. A stream with no ``value`` column fails with the batch
+    sink's schema error at its first batch."""
     from pyspark.errors import StreamingQueryException
 
     from kafka_spark_streaming_app_spark.sources.minikafka_ds import (
@@ -543,17 +544,22 @@ def test_stream_sink_fails_query_on_null_value(spark, broker, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     (src / "f0.json").write_text('{"key": "k", "value": null}\n')
-    q = (
-        spark.readStream.schema("key string, value string").json(str(src))
-        .writeStream.foreachBatch(
-            batch_producer({"bootstrap": broker.bootstrap, "topic": "t"})
+
+    def run(schema, ckpt, error):
+        q = (
+            spark.readStream.schema(schema).json(str(src))
+            .writeStream.foreachBatch(
+                batch_producer({"bootstrap": broker.bootstrap, "topic": "t"})
+            )
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .start()
         )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        with pytest.raises(StreamingQueryException, match="non-null value"):
-            q.processAllAvailable()
-    finally:
-        q.stop()
+        try:
+            with pytest.raises(StreamingQueryException, match=error):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("key string, value string", "ckpt", "non-null value")
+    run("key string, body string", "ckpt2", "expects a 'value' column")
     assert _topic_messages(broker, "t") == []
